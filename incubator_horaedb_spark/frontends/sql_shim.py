@@ -325,6 +325,15 @@ class Engine:
         # sensitivity, so statement setup is serialized.  Heavy work
         # (collect/write jobs) happens on the returned DataFrame outside
         # the lock.
+        # Measured negative result: a prototype giving each Engine its own
+        # spark.newSession() (caseSensitive set once, no lock, views only
+        # for referenced tables) cut the perfbench `dashboard` median
+        # read_p50_ms from 2.79 s to 1.00 s, but raised write_p50_ms
+        # 746 -> 954 ms (+28%) and heap_live_mb 99.8 -> 110.6 MB (+11%) in
+        # every one of 4 alternating pairs (seeds 1-4), both past their
+        # bounds — likely the faster closed-loop readers loading the cores
+        # the control writer shares.  Revisit once the benchmark separates
+        # reader load from its control writer.
         self._lock = threading.RLock()
         # request blocking (proxy limiter.rs + interpreters validator.rs)
         self.limiter = Limiter()
@@ -551,7 +560,11 @@ class Engine:
         m = re.match(rf"^drop\s+table\s+(if\s+exists\s+)?({_IDENT})\s*$", stmt, re.I)
         if not m:
             raise ValueError(f"cannot parse DROP TABLE: {stmt!r}")
-        self.catalog.drop_table(_unquote(m.group(2)), if_exists=bool(m.group(1)))
+        name = _unquote(m.group(2))
+        self.catalog.drop_table(name, if_exists=bool(m.group(1)))
+        # the view registered for an earlier statement would otherwise keep
+        # serving the dropped table (stale files, or an empty relation)
+        self.spark.catalog.dropTempView(self._view_name(name))
         return None
 
     def _alter(self, stmt: str) -> None:
@@ -789,28 +802,46 @@ class Engine:
         text = render_analyze(self._query(inner))
         return self.spark.createDataFrame([(line,) for line in text.splitlines()], "plan string")
 
-    _FROM_JOIN_RE = re.compile(rf"\b(?:from|join)\s+({_IDENT})", re.I)
+    _JOIN_RE = re.compile(rf"\bjoin\s+({_IDENT})", re.I)
+    _FROM_RE = re.compile(r"\bfrom\b", re.I)
+    # what ends a FROM clause at its own paren depth
+    _FROM_END_RE = re.compile(
+        r"\b(?:where|group|order|having|limit|union|except|intersect|window|qualify)\b",
+        re.I,
+    )
+    _LEAD_IDENT_RE = re.compile(rf"({_IDENT})")
     _SQL_STRING_RE = re.compile(r"'(?:[^']|'')*'")
 
+    def _target_names(self, stmt: str) -> set[str]:
+        """Names in table position: every JOIN target and the leading
+        identifier of every comma-separated FROM item (``FROM a, b x``).
+        Derived tables / subquery parens don't match the identifier; the
+        FROM clauses inside them are scanned in their own right."""
+        text = self._SQL_STRING_RE.sub("''", stmt)
+        names = [m.group(1) for m in self._JOIN_RE.finditer(text)]
+        for m in self._FROM_RE.finditer(text):
+            depth = 0
+            for end in range(m.end(), len(text) + 1):
+                ch = text[end : end + 1]
+                depth += (ch == "(") - (ch == ")")
+                if not ch or depth < 0 or (depth == 0 and self._FROM_END_RE.match(text, end)):
+                    break
+            for item in _split_top_level(text[m.end() : end]):
+                lead = self._LEAD_IDENT_RE.match(item)
+                if lead:
+                    names.append(lead.group(1))
+        return {_unquote(n).replace("__dot__", ".") for n in names}
+
     def _referenced_tables(self, stmt: str) -> set[str]:
-        """Catalog tables named as FROM/JOIN targets in the statement
-        (derived tables / subquery parens don't match the identifier)."""
-        refs = set()
-        for m in self._FROM_JOIN_RE.finditer(stmt):
-            name = _unquote(m.group(1)).replace("__dot__", ".")
-            if self.catalog.exists(name):
-                refs.add(name)
-        return refs
+        """Catalog tables named in the statement's FROM/JOIN lists."""
+        return {t for t in self._target_names(stmt) if self.catalog.exists(t)}
 
     def _statement_info(self, stmt: str, low: str) -> StatementInfo:
         """Build the limiter/validator's view of the statement
         (the text-frontend analogue of Plan inspection in limiter.rs
         should_limit / validator.rs contains_sub_tables)."""
         if low.startswith(("select", "with", "explain")):
-            tables = {
-                _unquote(m.group(1)).replace("__dot__", ".")
-                for m in self._FROM_JOIN_RE.finditer(stmt)
-            }
+            tables = self._target_names(stmt)
             ts_cols = {
                 self.catalog.get(t).schema.timestamp_column
                 for t in tables

@@ -20,7 +20,7 @@ reference offers between SST purge and manifest flip.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Target output file size for maintenance rewrites.  128 MB parquet is the
 # standard HDFS/object-store sweet spot: big enough to amortize footer +
@@ -94,3 +94,37 @@ def n_output_files(total_bytes: int, target: int = TARGET_FILE_BYTES) -> int:
     replaces ``coalesce(1)``, which at 100 TB turns a hot segment rewrite
     into one single-threaded task writing one giant file."""
     return max(1, -(-total_bytes // target))
+
+
+# Parquet FILE schemas memoized per (application, path): schema inference
+# re-reads the footer through a driver-side Hadoop open on EVERY
+# spark.read.parquet call (~60-140 ms measured vs ~29 ms with an explicit
+# schema).  The schema is metadata inferred once from the real file; the
+# data is still read from parquet on every run.
+_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str):
+    """The memoized file schema of the parquet data at ``path``."""
+    key = (spark.sparkContext.applicationId, path)
+    sch = _SCHEMA_CACHE.get(key)
+    if sch is None:
+        sch = spark.read.parquet(path).schema
+        _SCHEMA_CACHE[key] = sch
+    return sch
+
+
+def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet`` with the file schema memoized per path — for
+    stores written once per process and read back on every run (the LSH
+    band index, the persisted sketch table, the IVF index).  A writer that
+    OVERWRITES a store with a new schema must call
+    ``invalidate_store_schema(path)``: the memo never expires on its own."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
+def invalidate_store_schema(path: str) -> None:
+    """Drop every memoized schema for ``path`` — call after overwriting a
+    store so later reads re-infer from the new footer."""
+    for key in [k for k in _SCHEMA_CACHE if k[1] == path]:
+        _SCHEMA_CACHE.pop(key, None)

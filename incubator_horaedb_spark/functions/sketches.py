@@ -43,9 +43,10 @@ every row of a group to one task, which is worse).  ``kmv_sketch_df`` /
   ``operators/salt.salted_agg``);
 * cells merge through ≤64-way ``kmv_merge`` levels, so no merge buffer
   ever holds more than ``64·k`` longs;
-* ``m`` derives from the input FILE size (the ``widen_for_compute``
-  pattern): ~1 MiB of input per salt bucket, capped at 4096.  Below an
-  8 MiB gate the single-aggregation form is kept — there the WHOLE
+* ``m`` derives from the input FILE size (``scale.scan_stats``, the
+  probe behind ``widen_for_compute``): ~1 MiB of input per salt bucket,
+  capped at 4096.  Below the 8 MiB ``scale.GATE_BYTES`` the
+  single-aggregation form is kept — there the WHOLE
   distinct set is bounded by the gate constant itself (≤ ~250 k hashes,
   2 MB), and the two-level plan would only add an exchange that costs
   more than it saves (measured at sf0.1: +0.08 s for zero state relief).
@@ -68,6 +69,8 @@ from typing import Sequence, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from incubator_horaedb_spark.scale import GATE_BYTES
 
 THETASKETCH_ERROR_RATE = 0.008  # thetasketch_distinct.rs HLL error rate
 
@@ -99,43 +102,18 @@ def kmv_partial(col: Union[Column, str], k: int = KMV_K) -> Column:
 
 
 # --- bounded-state sketch build (r13) --------------------------------------
-KMV_SALT_GATE_BYTES = 8 << 20  # below this, the distinct set itself is small
 KMV_SALT_CELL_BYTES = 1 << 20  # ~1 MiB of compressed input per salt bucket
 KMV_SALT_MAX = 4096
-_INPUT_BYTES_CACHE: dict[tuple, int] = {}
-
-
-def input_bytes(df: DataFrame) -> int:
-    """Total file bytes behind a scan (Hadoop FS status, object-store-safe;
-    memoized per file list — metadata only, same probe as
-    ``registry.widen_for_compute``).  Returns 0 when the plan is not a file
-    scan — callers then keep the single-aggregation form, which is the
-    right default for already-reduced inputs."""
-    try:
-        files = tuple(sorted(df.inputFiles()))
-        if not files:
-            return 0
-        total = _INPUT_BYTES_CACHE.get(files)
-        if total is None:
-            from incubator_horaedb_spark import fsops
-
-            total = 0
-            for f in files:
-                fs, jpath = fsops.hadoop_fs(df.sparkSession, f)
-                total += int(fs.getFileStatus(jpath).getLen())
-            _INPUT_BYTES_CACHE[files] = total
-        return total
-    except Exception:
-        return 0
 
 
 def kmv_salt_buckets(nbytes: int) -> int:
     """Salt-bucket count for the bounded build: 0 (single-level) below the
-    gate, else a power of two ~1 bucket per MiB of input, capped at 4096.
+    gate (``scale.GATE_BYTES``, below which the distinct set itself is
+    small), else a power of two ~1 bucket per MiB of input, capped at 4096.
     At the cap a 10⁹-NDV group still holds only ~250 k hashes (2 MB) per
     cell.  Deterministic per corpus, so every run of a query composes the
     same plan."""
-    if nbytes < KMV_SALT_GATE_BYTES:
+    if nbytes < GATE_BYTES:
         return 0
     return min(
         KMV_SALT_MAX,

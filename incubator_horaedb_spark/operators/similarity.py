@@ -471,7 +471,7 @@ def save_ivf_index(centroids_df, buckets_df, path: str) -> None:
     buckets_df.select("vec_id", "cid", "q", "nrm").write.mode("overwrite").partitionBy(
         "cid"
     ).parquet(f"{path}/buckets")
-    from incubator_horaedb_spark.querybank.registry import invalidate_store_schema
+    from incubator_horaedb_spark.fsops import invalidate_store_schema
 
     # ADVICE r12: the read-side schema memo must follow a re-written index
     invalidate_store_schema(f"{path}/centroids")
@@ -483,7 +483,7 @@ def load_ivf_index(spark, path: str):
     Schemas memoized per path (read_parquet_memo): the index is written
     once per process and read back per run — inference would re-open both
     footers on the driver every call."""
-    from incubator_horaedb_spark.querybank.registry import read_parquet_memo
+    from incubator_horaedb_spark.fsops import read_parquet_memo
 
     return (
         read_parquet_memo(spark, f"{path}/centroids"),

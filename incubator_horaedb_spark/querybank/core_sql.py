@@ -26,7 +26,8 @@ from incubator_horaedb_spark.functions.detfloat import (
     r_out,
     r_out_sql,
 )
-from incubator_horaedb_spark.querybank.registry import load, register, widen_by_key
+from incubator_horaedb_spark.querybank.registry import load, register
+from incubator_horaedb_spark.scale import widen_by_key
 
 
 # --- q1: pricing summary (flagship agg; partial/final hash aggregate) -----

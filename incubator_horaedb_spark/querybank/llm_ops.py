@@ -8,9 +8,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from incubator_horaedb_spark import fsops
 from incubator_horaedb_spark.operators import dedup, pipeline, similarity, text
 from incubator_horaedb_spark.operators.dialect import DUCK, SPARK
-from incubator_horaedb_spark.querybank.registry import load, register, widen_for_compute
+from incubator_horaedb_spark.querybank.registry import load, register
+from incubator_horaedb_spark.scale import widen_for_compute
 
 
 def _sql_query(name: str, template_fn, **kw):
@@ -349,12 +351,8 @@ def _staged_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sql(dedup.bands_select(SPARK, "__inc_sig_idx")).write.mode(
             "overwrite"
         ).parquet(path)
-        from incubator_horaedb_spark.querybank.registry import invalidate_store_schema
-
-        invalidate_store_schema(path)  # ADVICE r12: memo must follow the writer
-    from incubator_horaedb_spark.querybank.registry import read_parquet_memo
-
-    read_parquet_memo(spark, path).createOrReplaceTempView("__inc_bands_idx")
+        fsops.invalidate_store_schema(path)  # ADVICE r12: memo must follow the writer
+    fsops.read_parquet_memo(spark, path).createOrReplaceTempView("__inc_bands_idx")
     # the new batch: signature + bands over the delta half only (staged —
     # referenced by the hot-bucket gate and the candidate join)
     _stage_lazy(spark, dedup.minhash_sig_select(SPARK, "__inc_hs_delta"), "__inc_sig_dlt")

@@ -8,6 +8,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from incubator_horaedb_spark import fsops
+
 TABLES = (
     "region",
     "nation",
@@ -100,199 +102,15 @@ def _ts_read_confs(spark: SparkSession) -> None:
             pass
 
 
-# Parquet FILE schemas memoized per (sf_dir, table): schema inference reads
-# the footer through a driver-side Hadoop open on EVERY spark.read.parquet
-# call (~140 ms measured vs ~29 ms with an explicit schema).  The schema is
-# metadata, inferred once from the real file per process — results are
-# still computed from the parquet inputs on every run.  (guide §5: the
-# driver should do almost no data work per query.)
-_SCHEMA_CACHE: dict[tuple[str, str], object] = {}
-
-
-def _file_schema(spark: SparkSession, sf_dir: str, name: str):
-    key = (sf_dir, name)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        sch = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
-        _SCHEMA_CACHE[key] = sch
-    return sch
-
-
-def read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with the file schema memoized per path — for
-    engine-written stores (the LSH band index, the persisted sketch table,
-    the IVF index) that are written once per process and read back on
-    every run: schema inference re-reads the footer through a driver-side
-    Hadoop open per call (~60-140 ms measured, same tax as §1's table
-    memo).  The schema is fixed by the writer; the data is still read
-    from parquet on every run.  A writer that OVERWRITES a store with a
-    new schema must call ``invalidate_store_schema(path)`` (ADVICE r12:
-    the memo never expires on its own)."""
-    key = (spark.sparkContext.applicationId, path)
-    sch = _SCHEMA_CACHE.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = sch
-    return spark.read.schema(sch).parquet(path)
-
-
-def invalidate_store_schema(path: str) -> None:
-    """Drop every memoized schema for ``path`` — call after overwriting an
-    engine-written store so later reads re-infer from the new footer."""
-    for key in [k for k in _SCHEMA_CACHE if isinstance(k, tuple) and k[1] == path]:
-        _SCHEMA_CACHE.pop(key, None)
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ts_read_confs(spark)
-    sch = _file_schema(spark, sf_dir, name)
-    df = spark.read.schema(sch).parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    sch = fsops.parquet_schema(spark, path)
+    df = spark.read.schema(sch).parquet(path)
     for col in _NANOS_TS_COLS.get(name, ()):
         field = next(f for f in sch.fields if f.name == col)
         if field.dataType.typeName() in ("long", "bigint"):
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    return df
-
-
-# widen_for_compute's sizing decision memoized per (sf_dir table list,
-# parallelism, target): the probe costs ~200 ms per call (inputFiles +
-# per-file FS status + df.rdd.getNumPartitions materializes the RDD
-# conversion) and its inputs — file sizes and core count — are fixed for a
-# process.  The memo stores the repartition target (or 0 = no-op), purely a
-# plan-construction decision.
-_WIDEN_CACHE: dict[tuple, int] = {}
-
-_BYTE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-
-
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """Parse a Spark byte-valued conf ("128MB", "134217728b", "4194304")."""
-    try:
-        raw = str(spark.conf.get(key, str(default))).strip().lower()
-        if raw.endswith("b"):
-            raw = raw[:-1]
-        if raw and raw[-1] in _BYTE_SUFFIX:
-            return int(float(raw[:-1]) * _BYTE_SUFFIX[raw[-1]])
-        return int(raw)
-    except Exception:
-        return default
-
-
-def _widen_target(df: DataFrame, target_bytes: int, min_bytes: int = 0) -> int:
-    """Shared sizing gate for the widen_* helpers: the repartition width
-    (0 = leave the scan alone).  Fires only when the scan's ESTIMATED
-    natural split count falls short of ~1 task per ``target_bytes`` of
-    input (and the input is at least ``min_bytes``); at real scale the
-    natural splits meet the target and this is always 0.
-
-    CONTRACT (ADVICE r12): ``df`` must be a RAW FILE SCAN (a plain
-    ``load()`` result, possibly with projections) — the natural-split
-    estimate below models FilePartition packing from the scan's file
-    sizes, so for a post-shuffle/join input it can undercount the real
-    partitioning and report a shrinking width the old
-    ``df.rdd.getNumPartitions()`` guard would have suppressed.  Every
-    caller in the bank passes a raw scan.
-    """
-    spark = df.sparkSession
-    cap = spark.sparkContext.defaultParallelism * 2
-    try:
-        files = tuple(sorted(df.inputFiles()))
-        # the split-size confs participate in the natural-split estimate,
-        # so they are part of the memo key (ADVICE r12: a first call under
-        # different confs must not pin the decision for later sessions)
-        max_part = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
-        open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes", 4 << 20)
-        key = (files, cap, target_bytes, min_bytes, max_part, open_cost)
-        want = _WIDEN_CACHE.get(key)
-        if want is None:
-            from incubator_horaedb_spark import fsops
-
-            # Hadoop FS status (not os.path.getsize): inputFiles returns
-            # URIs of whatever store the session reads — file:, hdfs:,
-            # s3a: — and the FS API resolves each scheme
-            # (object-store-safe, one HEAD per file; widen targets small
-            # inputs, so the list is short)
-            total = 0
-            for f in files:
-                fs, jpath = fsops.hadoop_fs(df.sparkSession, f)
-                total += int(fs.getFileStatus(jpath).getLen())
-            want = min(cap, max(1, -(-total // target_bytes)))
-            # natural scan-split estimate from the same file sizes
-            # (FilePartition packing: splits of maxSplitBytes =
-            # min(maxPartitionBytes, max(openCost, total/parallelism)),
-            # each file charged openCost) — replaces the old
-            # df.rdd.getNumPartitions() probe, which materialized the RDD
-            # conversion on every call just to read a count
-            par = spark.sparkContext.defaultParallelism
-            split = min(max_part, max(open_cost, (total + len(files) * open_cost) // max(par, 1)))
-            natural = max(1, -(-(total + len(files) * open_cost) // max(split, 1)))
-            if want <= natural or total < min_bytes:
-                want = 0
-            _WIDEN_CACHE[key] = want
-    except Exception:
-        return 0
-    return want
-
-
-def widen_for_compute(df: DataFrame, target_bytes: int = 64 << 10) -> DataFrame:
-    """Widen a scan for interpreted-HOF / UDF-heavy pipelines.
-
-    Spark sizes input splits for parquet SCAN cost (128 MB default), but an
-    interpreted higher-order-function stage (per-token hash folds, per-plane
-    zip_with dots) costs ~100× more per byte — at small corpus sizes the
-    whole stage lands on one split and runs on one core (measured: the sf0.1
-    token-hash stage is a single task, 1.6s of a 1.9s query).  Target ~64 KiB
-    of compressed input per task instead, capped at 2× parallelism; when the
-    natural split count already meets the target (any real-scale dataset),
-    this is a no-op — no shuffle is inserted.
-
-    The raw-file-scan contract of ``_widen_target`` applies.
-    """
-    want = _widen_target(df, target_bytes)
-    if want:
-        return df.repartition(want)
-    return df
-
-
-def widen_by_key(
-    df: DataFrame,
-    *key_cols,
-    target_bytes: int = 1 << 20,
-    min_bytes: int = 8 << 20,
-) -> DataFrame:
-    """Widen a deficient-split scan for a heavy map-side OPERATOR stage
-    (window sort, Expand+aggregate) by hash-repartitioning on the
-    operator's own keys (r13; guide §2.2/§6 — scan splits are sized for
-    parquet READ cost, but a single-row-group file gives the whole sort
-    ONE task no matter the split math: measured at the sf1 tier, the
-    window/dedup map stages were 1.5-1.7 s of single-task CPU on a
-    32-core session).
-
-    Hash repartitioning (not ``repartition(n)``): round-robin pays a
-    per-partition sortBeforeRepartition pass — on the one-split inputs
-    this helper targets, that is the very single-task O(n log n) it
-    exists to remove — and when ``key_cols`` are the downstream
-    window/aggregate keys, the inserted exchange IS the one the operator
-    needs (hashpartitioning(keys, n) satisfies its ClusteredDistribution
-    for any n), so the plan keeps ONE exchange: same shuffle count,
-    parallel sort.  Only sound when the operator's output is
-    order-independent given its own keys (unique sort keys / pure
-    aggregates) — every call site states why.
-
-    Scale gates (both must hold, same estimate as ``widen_for_compute``):
-    the input is ≥ ``min_bytes`` (8 MiB default — below that the
-    single-task stage is cheaper than any added exchange: the sf0.1
-    driver-bench tables stay untouched by construction), and the natural
-    split count falls short of ~1 task per ``target_bytes`` (1 MiB
-    default — sorts cost ~10× scan decode per byte, not the ~100× of the
-    interpreted-HOF folds).  At 100 TB the natural splits exceed the
-    2×parallelism cap, so this is always a no-op — the stock
-    shuffle-minimal plan (map-side WindowGroupLimit / partial aggregation
-    before ONE exchange) is already right there.
-    """
-    want = _widen_target(df, target_bytes, min_bytes=min_bytes)
-    if want:
-        return df.repartition(want, *key_cols)
     return df
 
 
@@ -319,8 +137,9 @@ def load_time_range(
     the timestamp column directly — Spark pushes timestamp comparisons to
     the parquet scan natively (asserted by test_time_range_scan_pushdown)."""
     _ts_read_confs(spark)
-    sch = _file_schema(spark, sf_dir, name)
-    df = spark.read.schema(sch).parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    sch = fsops.parquet_schema(spark, path)
+    df = spark.read.schema(sch).parquet(path)
     field = next(f for f in sch.fields if f.name == col)
     if field.dataType.typeName() in ("long", "bigint"):
         import datetime

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from incubator_horaedb_spark import fsops, scale
 from incubator_horaedb_spark.functions.time_bucket import (
     date_bin,
     date_bin_sql,
@@ -31,7 +32,8 @@ from incubator_horaedb_spark.functions.detfloat import (
     stddev_samp_det,
     stddev_samp_det_sql,
 )
-from incubator_horaedb_spark.querybank.registry import load, register, widen_by_key
+from incubator_horaedb_spark.querybank.registry import load, register
+from incubator_horaedb_spark.scale import widen_by_key
 
 
 @register(
@@ -218,7 +220,6 @@ def time_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 def thetasketch_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from incubator_horaedb_spark.functions.sketches import (
         KMV_RSD,
-        input_bytes,
         kmv_estimate,
         kmv_merge,
         kmv_salt_buckets,
@@ -229,7 +230,7 @@ def thetasketch_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     # bounded builds above the size gate (r13; see sketches.py) — results
     # bitwise identical at every m by the k-min identity
-    m = kmv_salt_buckets(input_bytes(ev))
+    m = kmv_salt_buckets(scale.scan_stats(ev).bytes)
     direct = kmv_sketch_ndv_df(
         ev, ["event_type"], "user_id", m=m, out="sk_direct", ndv_col="exact_ndv"
     )
@@ -2160,7 +2161,6 @@ ts_rollup_ladder.__doc__ = (
 def hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from incubator_horaedb_spark.functions.sketches import (
         KMV_RSD,
-        input_bytes,
         kmv_estimate,
         kmv_merge,
         kmv_salt_buckets,
@@ -2173,7 +2173,7 @@ def hll_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate the finest-grain aggregation state is salted to ~NDV/m per cell
     # and the exact-NDV count runs as its own aggregation; results are
     # bitwise identical at every m by the k-min identity (sketches.py)
-    m = kmv_salt_buckets(input_bytes(ev))
+    m = kmv_salt_buckets(scale.scan_stats(ev).bytes)
     hourly = kmv_sketch_df(
         ev.withColumn("bucket_hour", F.date_trunc("hour", "ts")),
         ["event_type", "bucket_hour"],
@@ -2258,7 +2258,6 @@ def sketch_rollup_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     point of the sketch)."""
     from incubator_horaedb_spark.functions.sketches import (
         KMV_RSD,
-        input_bytes,
         kmv_estimate,
         kmv_merge,
         kmv_salt_buckets,
@@ -2272,20 +2271,14 @@ def sketch_rollup_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.withColumn("bucket_hour", F.date_trunc("hour", "ts")),
         ["event_type", "bucket_hour"],
         "user_id",
-        m=kmv_salt_buckets(input_bytes(ev)),
+        m=kmv_salt_buckets(scale.scan_stats(ev).bytes),
     )
     path, built = _sketch_store_dir(sf_dir)
     if not built:
         hourly.write.mode("overwrite").parquet(path)
-        from incubator_horaedb_spark.querybank.registry import (
-            invalidate_store_schema,
-        )
-
-        invalidate_store_schema(path)  # ADVICE r12: memo follows the writer
-    from incubator_horaedb_spark.querybank.registry import read_parquet_memo
-
+        fsops.invalidate_store_schema(path)  # ADVICE r12: memo follows the writer
     stored = (
-        read_parquet_memo(spark, path)
+        fsops.read_parquet_memo(spark, path)
         .groupBy("event_type", F.to_date("bucket_hour").alias("bucket_day"))
         .agg(kmv_merge("sk").alias("sk_stored"))
     )

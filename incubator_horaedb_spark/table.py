@@ -30,6 +30,7 @@ the TimeWindow picker analogue.
 from __future__ import annotations
 
 import re
+import threading
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -46,6 +47,15 @@ from incubator_horaedb_spark.partition import (
 )
 from incubator_horaedb_spark.schema import SEGMENT_COLUMN, SEQ_COLUMN, TSID_COLUMN
 
+# one append lock per table data directory (see Table.write)
+_WRITE_LOCKS: dict[str, threading.Lock] = {}
+_WRITE_LOCKS_GUARD = threading.Lock()
+
+
+def _write_lock(data_dir: str) -> threading.Lock:
+    with _WRITE_LOCKS_GUARD:
+        return _WRITE_LOCKS.setdefault(data_dir, threading.Lock())
+
 
 class Table:
     def __init__(self, spark: SparkSession, catalog: Catalog, name: str):
@@ -59,7 +69,15 @@ class Table:
 
     # ------------------------------------------------------------- write --
     def write(self, df: DataFrame) -> int:
-        """Append one batch; returns the assigned sequence number."""
+        """Append one batch; returns the assigned sequence number.
+
+        Serialized per table: concurrent append jobs into one directory
+        share its ``_temporary/0`` staging dir, and the first commit deletes
+        it under the others (failed writes whose rows still land)."""
+        with _write_lock(self.catalog.data_dir(self.name)):
+            return self._append(df)
+
+    def _append(self, df: DataFrame) -> int:
         meta = self.meta
         schema = meta.schema
 

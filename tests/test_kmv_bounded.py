@@ -85,11 +85,8 @@ def test_salted_plan_shape(spark, data):
 
 
 def test_salt_gate_formula():
-    from incubator_horaedb_spark.functions.sketches import (
-        KMV_SALT_GATE_BYTES,
-        KMV_SALT_MAX,
-        kmv_salt_buckets,
-    )
+    from incubator_horaedb_spark.functions.sketches import KMV_SALT_MAX, kmv_salt_buckets
+    from incubator_horaedb_spark.scale import GATE_BYTES as KMV_SALT_GATE_BYTES
 
     assert kmv_salt_buckets(0) == 0
     assert kmv_salt_buckets(KMV_SALT_GATE_BYTES - 1) == 0

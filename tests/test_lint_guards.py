@@ -5,10 +5,15 @@ red in round 5 (``int(1.001 * 1000)`` truncates to 1000) and a judge
 finding in round 6.  ``functions/timeutil.epoch_ms`` is the one sanctioned
 conversion (exact timedelta integer arithmetic); this guard fails the
 suite if the float pattern reappears anywhere outside timeutil itself.
+
+The query bank (``querybank/``) is the test and benchmark corpus built on
+the engine; a layering guard keeps every other package module from
+importing it.
 """
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -38,3 +43,26 @@ def test_no_float_ms_timestamp_conversion():
         "float-ms conversion found (use functions/timeutil.epoch_ms):\n"
         + "\n".join(offenders)
     )
+
+
+def _imported_modules(tree: ast.AST):
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            yield from (a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            yield base
+            yield from (f"{base}.{a.name}" for a in node.names)
+
+
+def test_engine_does_not_import_query_bank():
+    pkg = REPO / "incubator_horaedb_spark"
+    offenders = []
+    for path in pkg.rglob("*.py"):
+        if "querybank" in path.relative_to(pkg).parts:
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+        for mod in _imported_modules(tree):
+            if "querybank" in mod.split("."):
+                offenders.append(f"{path.relative_to(REPO)}: imports {mod}")
+    assert not offenders, "engine modules import the query bank:\n" + "\n".join(offenders)

@@ -29,6 +29,26 @@ def engine(spark, tmp_path):
 
 
 # ------------------------------------------------------------- limiter --
+def test_read_block_list_covers_join_and_comma_join(engine):
+    engine.execute_sql(
+        "CREATE TABLE other (name string TAG, w double, "
+        "t timestamp NOT NULL, timestamp KEY (t)) WITH (enable_ttl='false')"
+    )
+    engine.execute_sql("INSERT INTO other (t, name, w) VALUES (1651737067000, 'a', 2)")
+    engine.limiter.block_read("other")
+    for sql in (
+        "SELECT count(*) FROM demo JOIN other ON demo.name = other.name",
+        "SELECT count(*) FROM demo, other WHERE demo.name = other.name",
+    ):
+        with pytest.raises(BlockedError, match=r"blocked, table:other, op:query"):
+            engine.execute_sql(sql)
+    engine.limiter.unblock_read("other")
+    n = engine.execute_sql(
+        "SELECT count(*) AS n FROM demo, other WHERE demo.name = other.name"
+    ).collect()[0]["n"]
+    assert n == 1
+
+
 def test_read_block_list(engine):
     engine.limiter.block_read("demo")
     with pytest.raises(BlockedError, match=r"blocked, table:demo, op:query"):

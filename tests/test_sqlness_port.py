@@ -294,6 +294,25 @@ def test_insert_mode_corpus(engine):
     assert engine.catalog.get("03_dml_insert_mode_t3").options.update_mode == "OVERWRITE"
 
 
+@pytest.mark.parametrize("with_rows", [True, False])
+def test_dropped_table_is_not_found(engine, with_rows):
+    # a table queried once keeps a registered temp view; DROP TABLE must
+    # remove it, or the view serves deleted files (FILE_NOT_EXIST) or, for
+    # a table that never had rows, an empty relation
+    engine.execute_sql(
+        "CREATE TABLE drop_me (ts timestamp NOT NULL, v double, "
+        "timestamp KEY (ts)) ENGINE=Analytic WITH(enable_ttl='false')"
+    )
+    if with_rows:
+        engine.execute_sql("INSERT INTO drop_me (ts, v) VALUES (1, 10)")
+    assert engine.execute_sql("SELECT count(*) AS n FROM drop_me").collect()[0]["n"] == int(
+        with_rows
+    )
+    engine.execute_sql("DROP TABLE drop_me")
+    with pytest.raises(Exception, match="(?i)table or view|not.*found|cannot be found"):
+        engine.execute_sql("SELECT count(*) FROM drop_me").collect()
+
+
 def test_case_sensitive_wrong_case_errors(engine):
     # case_sensitive.sql/.result: SELECT from CASE_SENSITIVE_TABLE1 when the
     # table is case_SENSITIVE_table1 must fail with table-not-found

@@ -137,3 +137,42 @@ def test_streaming_e2e_stores_are_tracked_for_cleanup(spark, sf_dir):
     assert store2 != store1
     assert not os.path.exists(store1)
     assert store2 in se._LIVE_STORES
+
+
+def test_concurrent_appends_to_one_table(spark, tmp_path):
+    # several protocol writers appending to ONE table at once: every write
+    # must be acknowledged, and exactly the acknowledged rows readable (two
+    # Spark append jobs sharing the table's _temporary/0 staging dir used
+    # to fail one write while some of its rows still landed)
+    import threading
+
+    from incubator_horaedb_spark.streaming.ingest import ingest_rows
+
+    n_threads, n_writes, n_rows = 5, 5, 100  # more writers than local[4] cores
+    engine = Engine(spark, str(tmp_path / "store"))
+    opts = TableOptions(update_mode="APPEND", enable_ttl=False)
+
+    def batch(writer: int, i: int) -> list[dict]:
+        base = BASE_MS + (writer * 1000 + i) * n_rows
+        return [{"ts": base + j, "host": f"h{j % 4}", "v": float(j)} for j in range(n_rows)]
+
+    acked = [ingest_rows(engine, "same_tbl", batch(n_threads, 0), tag_cols=["host"], options=opts)]
+    failed: list[BaseException] = []
+
+    def writer(w: int) -> None:
+        for i in range(n_writes):
+            try:
+                acked.append(
+                    ingest_rows(engine, "same_tbl", batch(w, i), tag_cols=["host"], options=opts)
+                )
+            except Exception as e:  # noqa: BLE001 — counted and asserted below
+                failed.append(e)
+
+    threads = [threading.Thread(target=writer, args=(w,)) for w in range(n_threads)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads), "writers did not finish"
+    assert not failed, f"{len(failed)} concurrent writes failed: {failed[0]!r}"
+    assert Table(spark, engine.catalog, "same_tbl").read().count() == sum(acked)

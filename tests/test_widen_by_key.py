@@ -21,11 +21,9 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from incubator_horaedb_spark.querybank.registry import (
-    _widen_target,
-    load,
-    widen_by_key,
-)
+from incubator_horaedb_spark.querybank.registry import load
+from incubator_horaedb_spark.scale import widen_by_key
+from incubator_horaedb_spark.scale import widen_target as _widen_target
 
 
 def test_gate_off_below_min_bytes(spark, sf_dir):

@@ -32,6 +32,7 @@ import os
 import re
 import threading
 from dataclasses import dataclass, field
+from typing import Callable
 
 from incubator_horaedb_spark.schema import TableSchema
 
@@ -239,9 +240,19 @@ class Catalog:
             d for d in os.listdir(self._schema_dir()) if self.exists(d)
         )
 
-    def update(self, meta: TableMeta) -> None:
+    def update(self, name: str, change: Callable[[TableMeta], None]) -> TableMeta:
+        """Read ``name``'s meta, apply ``change`` to it in place and write it
+        back, all under the catalog lock; returns the written meta.
+
+        Every read-modify-write of ``_meta.json`` goes through here, so two
+        concurrent changes (an auto-evolve and a sequence allocation, say)
+        both land instead of one writing back the other's stale read.  If
+        ``change`` raises, nothing is written."""
         with self._lock:
+            meta = self.get(name)
+            change(meta)
             self._write_meta(meta)
+            return meta
 
     def allocate_seq(self, name: str) -> int:
         """Monotonic write sequence (the WAL SequenceNumber analogue) —

@@ -35,7 +35,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from incubator_horaedb_spark.catalog import Catalog, TableOptions
 from incubator_horaedb_spark.schema import ColumnSchema, TableSchema
@@ -44,7 +43,7 @@ from incubator_horaedb_spark.serving import (
     StatementInfo,
     validate_partition_table_access,
 )
-from incubator_horaedb_spark.table import Table
+from incubator_horaedb_spark.table import Table, batch_frame
 
 _IDENT = r"`(?:[^`]+)`|[A-Za-z_][\w]*"
 
@@ -332,8 +331,11 @@ class Engine:
         # 746 -> 954 ms (+28%) and heap_live_mb 99.8 -> 110.6 MB (+11%) in
         # every one of 4 alternating pairs (seeds 1-4), both past their
         # bounds — likely the faster closed-loop readers loading the cores
-        # the control writer shares.  Revisit once the benchmark separates
-        # reader load from its control writer.
+        # the control writer shares.  Since then the Arrow write batches
+        # (table.batch_frame) cut that writer's median write_p50_ms from
+        # 730 to 301 ms (6 alternating pairs, seeds 1-6, local[4] on a
+        # 4-core VM): re-measure the prototype on top of them before
+        # keeping this lock.
         self._lock = threading.RLock()
         # request blocking (proxy limiter.rs + interpreters validator.rs)
         self.limiter = Limiter()
@@ -575,7 +577,6 @@ class Engine:
         )
         if ms:
             name = _unquote(ms.group(1))
-            meta = self.catalog.get(name)
             new_opts: dict[str, str] = {}
             for kv in _split_top_level(ms.group(2)):
                 km = re.match(r"^\s*(\w+)\s*=\s*'([^']*)'\s*$", kv)
@@ -584,8 +585,7 @@ class Engine:
                 new_opts[km.group(1).lower()] = km.group(2)
             # only the named settings change; unknown keys land in extra,
             # like the reference's unrecognized options (write_buffer_size)
-            meta.options.apply_with_options(new_opts)
-            self.catalog.update(meta)
+            self.catalog.update(name, lambda m: m.options.apply_with_options(new_opts))
             return None
         m = re.match(
             rf"^alter\s+table\s+({_IDENT})\s+add\s+column\s*\((.*)\)\s*$", stmt, re.I | re.S
@@ -595,23 +595,28 @@ class Engine:
                 f"only ALTER TABLE ... ADD COLUMN (...) / MODIFY SETTING supported: {stmt!r}"
             )
         name = _unquote(m.group(1))
-        meta = self.catalog.get(name)
-        schema = meta.schema
+        added = []
         for item in _split_top_level(m.group(2)):
             cm = _COLDEF_RE.match(item)
-            cname, ctype, rest = _unquote(cm.group(1)), cm.group(2).lower(), cm.group(3)
-            if cname in (schema.primary_key or []) or cname == schema.timestamp_column:
-                raise ValueError("cannot alter primary key")  # plan.rs:55-56
-            schema = schema.add_column(
+            rest = cm.group(3).lower()
+            added.append(
                 ColumnSchema(
-                    name=cname,
-                    kind=ctype,
-                    is_tag=bool(re.search(r"\btag\b", rest.lower())),
-                    is_dictionary=bool(re.search(r"\bdictionary\b", rest.lower())),
+                    name=_unquote(cm.group(1)),
+                    kind=cm.group(2).lower(),
+                    is_tag=bool(re.search(r"\btag\b", rest)),
+                    is_dictionary=bool(re.search(r"\bdictionary\b", rest)),
                 )
             )
-        meta.schema = schema
-        self.catalog.update(meta)
+
+        def add(meta) -> None:
+            schema = meta.schema
+            for col in added:
+                if col.name in (schema.primary_key or []) or col.name == schema.timestamp_column:
+                    raise ValueError("cannot alter primary key")  # plan.rs:55-56
+                schema = schema.add_column(col)
+            meta.schema = schema
+
+        self.catalog.update(name, add)
         return None
 
     # --------------------------------------------------------------- DML --
@@ -678,52 +683,37 @@ class Engine:
         ``name`` with the INSERT path's type coercions — shared by VALUES
         and the wire bulk loaders (PG COPY FROM STDIN, MySQL LOAD DATA
         LOCAL).  An empty batch is a no-op (COPY of an empty file must not
-        trigger the first-flush samplers on zero rows).
+        trigger the first-flush samplers on zero rows).  A value the column
+        cannot hold exactly (1.5 for a bigint, say) raises ValueError naming
+        the column.
 
         Takes the engine lock (reentrant — the VALUES path arrives with it
-        held): the wire servers are thread-per-connection, and Table.write's
-        first-flush sampler re-reads + writes back table meta, so two
-        unserialized bulk loads into a fresh table could clobber the seq
-        counter (r9 review #2)."""
+        held): the wire servers are thread-per-connection, and Table.write
+        resolves column names, which another statement's caseSensitive
+        toggle would change under it."""
         if not rows:
             return 0
         with self._lock:
             return self._insert_rows_locked(name, cols, rows)
 
+    # table column kind -> batch_frame kind; timestamps arrive as ms-integer
+    # epoch literals (TypeConversion parity), ints widen into double
+    # columns, and str is accepted for varbinary like the reference
+    # (cases/common/basic.sql varbinary round-trip); every other kind is
+    # an integer, cast to its width by Table.write
+    _INSERT_KINDS = {
+        "timestamp": "timestamp",
+        "double": "double",
+        "float": "double",
+        "varbinary": "varbinary",
+        "string": "string",
+        "boolean": "boolean",
+    }
+
     def _insert_rows_locked(self, name: str, cols: list[str], rows: list[dict]) -> int:
-        meta = self.catalog.get(name)
-        schema = meta.schema
-        fields = []
-        for c in cols:
-            col_schema = schema.column(c)
-            if col_schema.kind == "timestamp":
-                # ms-integer epoch literals (TypeConversion parity)
-                fields.append(T.StructField(c, T.LongType(), True))
-            elif col_schema.kind in ("double", "float"):
-                fields.append(T.StructField(c, T.DoubleType(), True))
-            elif col_schema.kind == "varbinary":
-                fields.append(T.StructField(c, T.BinaryType(), True))
-            elif col_schema.kind in ("string",):
-                fields.append(T.StructField(c, T.StringType(), True))
-            elif col_schema.kind == "boolean":
-                fields.append(T.StructField(c, T.BooleanType(), True))
-            else:
-                fields.append(T.StructField(c, T.LongType(), True))
-        for r in rows:
-            for c in cols:
-                kind = schema.column(c).kind
-                if kind in ("double", "float") and isinstance(r[c], int):
-                    r[c] = float(r[c])
-                elif kind == "varbinary" and isinstance(r[c], str):
-                    # the reference accepts string literals for varbinary
-                    # columns (cases/common/basic.sql varbinary round-trip)
-                    r[c] = r[c].encode("utf-8")
-        df = self.spark.createDataFrame(
-            [tuple(r[c] for c in cols) for r in rows], T.StructType(fields)
-        )
-        for c in cols:
-            if schema.column(c).kind == "timestamp":
-                df = df.withColumn(c, F.timestamp_millis(F.col(c)))
+        schema = self.catalog.get(name).schema
+        kinds = {c: self._INSERT_KINDS.get(schema.column(c).kind, "int64") for c in cols}
+        df = batch_frame(self.spark, rows, kinds)
         Table(self.spark, self.catalog, name).write(df)
         return len(rows)  # affected_rows (golden basic.result: INSERT → n)
 

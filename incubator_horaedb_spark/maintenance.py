@@ -141,9 +141,7 @@ def rollup_refresh(
         # no-op for it (a LONG would be misread as epoch-seconds by cast)
         Table(engine.spark, engine.catalog, dst).write(part)
     # advance the watermark exactly to the snapshotted bound
-    dmeta = engine.catalog.get(dst)
-    dmeta.options.extra["rollup_seq"] = hi
-    engine.catalog.update(dmeta)
+    engine.catalog.update(dst, lambda m: m.options.extra.update(rollup_seq=hi))
     return n
 
 

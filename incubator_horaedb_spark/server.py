@@ -118,7 +118,9 @@ class EngineServer:
             }
 
             def _observe(self, code: int) -> None:
-                # metrics.rs http_handler_duration{path, code} parity
+                # metrics.rs http_handler_duration{path, code} parity.
+                # Callers observe before writing the body, so a client that
+                # has read a response finds it counted on its next scrape.
                 import time as _time
 
                 t0 = getattr(self, "_t0", None)
@@ -145,8 +147,8 @@ class EngineServer:
                 self.send_header("content-type", "application/json")
                 self.send_header("content-length", str(len(body)))
                 self.end_headers()
-                self.wfile.write(body)
                 self._observe(code)
+                self.wfile.write(body)
 
             def _reply_text(self, code: int, text: str) -> None:
                 body = text.encode()
@@ -154,8 +156,8 @@ class EngineServer:
                 self.send_header("content-type", "text/plain; version=0.0.4")
                 self.send_header("content-length", str(len(body)))
                 self.end_headers()
-                self.wfile.write(body)
                 self._observe(code)
+                self.wfile.write(body)
 
             def _authorized(self) -> bool:
                 # file-backed Basic auth (auth/with_file.rs identify):
@@ -171,8 +173,8 @@ class EngineServer:
                 self.send_header("content-type", "application/json")
                 self.send_header("content-length", str(len(body)))
                 self.end_headers()
-                self.wfile.write(body)
                 self._observe(401)
+                self.wfile.write(body)
                 return False
 
             def _is_protobuf(self) -> bool:
@@ -189,8 +191,8 @@ class EngineServer:
                 self.send_header("content-encoding", "snappy")
                 self.send_header("content-length", str(len(body)))
                 self.end_headers()
-                self.wfile.write(body)
                 self._observe(200)  # protobuf remote-read counts too (r10 #4)
+                self.wfile.write(body)
 
             def do_GET(self):
                 import time as _time

@@ -15,6 +15,14 @@ Spark rendering:
 - auto-create infers the TSDB schema from the batch schema (strings →
   TAG, like the protocol writes); auto-evolve adds new nullable columns.
 
+Protocol requests (line protocol, remote write, OpenTSDB put, gRPC) take
+``ingest_rows`` instead: the request is parsed on the driver, its rows
+become one Arrow table and one JVM local relation (``table.batch_frame``,
+no Python worker), and one task appends it, one parquet file per segment
+the request touches — the memtable flush reduced to one micro-batch per
+request.  Each column's kind is picked over the whole batch: int64 and
+double widen to double, any other mix is rejected naming the column.
+
 Late/out-of-order data needs no special handling: rows land in whichever
 time segment their timestamp belongs to and the Overwrite dedup resolves
 duplicates at read, matching the reference (merge.rs:126).
@@ -28,7 +36,7 @@ from pyspark.sql import types as T
 from incubator_horaedb_spark.catalog import TableOptions
 from incubator_horaedb_spark.frontends.sql_shim import Engine
 from incubator_horaedb_spark.schema import ColumnSchema, TableSchema
-from incubator_horaedb_spark.table import Table
+from incubator_horaedb_spark.table import Table, batch_frame
 
 _SPARK_TO_KIND = {
     "string": "string",
@@ -77,48 +85,80 @@ def ensure_table(
         schema = infer_table_schema(batch_df.schema, ts_col, tag_cols)
         engine.catalog.create_table(table_name, schema, options, if_not_exists=True)
         return
-    meta = engine.catalog.get(table_name)
-    known = {c.name for c in meta.schema.columns}
-    schema = meta.schema
+    known = {c.name for c in engine.catalog.get(table_name).schema.columns}
+    added = []
     for f in batch_df.schema.fields:
         if f.name not in known:
             kind = _SPARK_TO_KIND.get(f.dataType.typeName())
             if kind is None:
                 raise ValueError(f"cannot evolve with column {f.name!r}: {f.dataType}")
-            schema = schema.add_column(ColumnSchema(name=f.name, kind=kind, is_tag=False))
-    if schema is not meta.schema:
-        meta.schema = schema
-        engine.catalog.update(meta)
+            added.append(ColumnSchema(name=f.name, kind=kind, is_tag=False))
+    _add_columns(engine, table_name, added)
 
 
-_PY_TO_SPARK = [
-    # bool before int: isinstance(True, int) is True
-    (bool, T.BooleanType()),
-    (int, T.LongType()),
-    (float, T.DoubleType()),
-    (str, T.StringType()),
-    ((bytes, bytearray), T.BinaryType()),
-]
+def _add_columns(engine: Engine, table_name: str, columns: list[ColumnSchema]) -> None:
+    """Add the columns the table still lacks (execute_add_columns_plan).
+
+    The check and the schema change run on the meta read under the
+    catalog lock, so two requests evolving one table at once both land,
+    and neither writes back a stale ``next_seq``."""
+    if not columns:
+        return
+
+    def add(meta) -> None:
+        for c in columns:
+            if all(k.name != c.name for k in meta.schema.columns):
+                meta.schema = meta.schema.add_column(c)
+
+    engine.catalog.update(table_name, add)
 
 
-def _batch_schema(rows: list[dict], cols: list[str]) -> T.StructType:
-    """Explicit schema from the first non-None value per column — a column
-    that is None in every row (heterogeneous protocol batches) defaults to
-    string instead of failing Spark's type inference."""
-    fields = []
-    for c in cols:
-        dtype: T.DataType = T.StringType()
-        for r in rows:
-            v = r.get(c)
+# field kind of each Python value type the protocol parsers produce
+_PY_KIND = {
+    bool: "boolean",
+    int: "int64",
+    float: "double",
+    str: "string",
+    bytes: "varbinary",
+    bytearray: "varbinary",
+}
+
+
+def _py_kind(col: str, v) -> str:
+    kind = _PY_KIND.get(type(v))
+    if kind is None:
+        raise ValueError(f"column {col!r}: cannot ingest {v!r}")
+    return kind
+
+
+def _widen_kind(col: str, a: str, b: str) -> str:
+    """The one rule for a field seen with two kinds in one batch: int64 and
+    double make double (stored exactly while |v| <= 2**53); any other mix
+    is an error naming the column."""
+    if a == b:
+        return a
+    if {a, b} == {"int64", "double"}:
+        return "double"
+    raise ValueError(f"column {col!r} mixes {a} and {b} values")
+
+
+def _batch_kinds(rows: list[dict], ts_col: str) -> dict[str, str]:
+    """Each column's kind over every row of the batch, columns in
+    first-seen order.  ``ts_col`` holds epoch milliseconds; a column that
+    is None in every row is a string."""
+    kinds: dict[str, str | None] = {}
+    for r in rows:
+        for k, v in r.items():
             if v is None:
+                kinds.setdefault(k, None)
                 continue
-            for py, spark_t in _PY_TO_SPARK:
-                if isinstance(v, py):
-                    dtype = spark_t
-                    break
-            break
-        fields.append(T.StructField(c, dtype, True))
-    return T.StructType(fields)
+            kind = _py_kind(k, v)
+            prev = kinds.get(k)
+            if prev != kind:
+                kinds[k] = kind if prev is None else _widen_kind(k, prev, kind)
+    return {
+        k: "timestamp" if k == ts_col else (kind or "string") for k, kind in kinds.items()
+    }
 
 
 def ingest_rows(
@@ -130,35 +170,27 @@ def ingest_rows(
     tag_cols: list[str] | None = None,
     options: TableOptions | None = None,
 ) -> int:
-    """Write parsed protocol rows (ms-epoch ``ts``, tag strings, value
-    fields) into ``table_name``, auto-creating/evolving first — the shared
-    tail of every protocol write path (line protocol, OpenTSDB put, gRPC):
-    proxy/src/write.rs:176-260.  Returns the row count.
+    """Write one request's parsed protocol rows (ms-epoch ``ts``, tag
+    strings, value fields) into ``table_name``, auto-creating/evolving
+    first — the shared tail of every protocol write path (line protocol,
+    remote write, OpenTSDB put, gRPC): proxy/src/write.rs:176-260.
+    Returns the row count.
+
+    Each column's kind is picked over all rows: int64 and double mix to
+    double, and any other mix raises ValueError naming the column, as do
+    integers past int64.  The rows become one Arrow-backed batch
+    (``table.batch_frame``), written by one task as one parquet file per
+    segment the request touches.
 
     ``tag_cols`` should come from the protocol parser's tag/field split
     (ProtocolBatch.tag_keys) — tags define the series key (tsid), so they
     must not be guessed from value types.  The string-valued fallback
-    (union over ALL rows, not just the first) exists only for callers with
-    no tag information."""
-    from pyspark.sql import functions as F
-
-    from incubator_horaedb_spark.table import Table
-
-    cols: list[str] = []
-    for r in rows:
-        for k in r:
-            if k not in cols:
-                cols.append(k)
-    data = [tuple(r.get(c) for c in cols) for r in rows]
-    mdf = engine.spark.createDataFrame(data, _batch_schema(rows, cols))
-    if ts_col in mdf.columns:
-        mdf = mdf.withColumn(ts_col, F.timestamp_millis(F.col(ts_col).cast("long")))
+    (every column with a string kind) exists only for callers with no tag
+    information."""
+    kinds = _batch_kinds(rows, ts_col)
+    mdf = batch_frame(engine.spark, rows, kinds)
     if tag_cols is None:
-        tag_cols = [
-            c
-            for c in cols
-            if c != ts_col and any(isinstance(r.get(c), str) for r in rows)
-        ]
+        tag_cols = [c for c, kind in kinds.items() if kind == "string" and c != ts_col]
     ensure_table(engine, table_name, mdf, ts_col, tag_cols, options)
     Table(engine.spark, engine.catalog, table_name).write(mdf)
     return len(rows)
@@ -199,19 +231,6 @@ _KIND_TO_SPARK = {
     "int64": T.LongType(),
     "boolean": T.BooleanType(),
 }
-# widening order when a field's type differs across lines (int mixed with
-# float samples → double; anything mixed with string → string)
-_KIND_WIDTH = {"boolean": 0, "int64": 1, "double": 2, "string": 3}
-
-
-def _py_kind(v) -> str:
-    if isinstance(v, bool):
-        return "boolean"
-    if isinstance(v, int):
-        return "int64"
-    if isinstance(v, float):
-        return "double"
-    return "string"
 
 
 def _probe_lines(it):
@@ -234,7 +253,7 @@ def _probe_lines(it):
                         if k == "ts":
                             continue
                         is_tag = k in batch.tag_keys
-                        recs.add((meas, k, is_tag, "string" if is_tag else _py_kind(v)))
+                        recs.add((meas, k, is_tag, "string" if is_tag else _py_kind(k, v)))
         yield pd.DataFrame(
             list(recs), columns=["measurement", "col", "is_tag", "kind"]
         )
@@ -306,17 +325,18 @@ def start_line_protocol_ingest(
             if not probe:
                 return
             # resolve per-(measurement, col): tag wins over field reading
-            # (a key can't be both in one line set), widen mixed kinds
+            # (a key can't be both in one line set); field kinds widen by
+            # the rule ingest_rows uses
             plan: dict[str, dict[str, tuple[bool, str]]] = {}
             for r in probe:
                 cols = plan.setdefault(r["measurement"], {})
                 prev = cols.get(r["col"])
                 if prev is None:
                     cols[r["col"]] = (r["is_tag"], r["kind"])
+                elif prev[0] or r["is_tag"]:
+                    cols[r["col"]] = (True, "string")
                 else:
-                    is_tag = prev[0] or r["is_tag"]
-                    kind = max(prev[1], r["kind"], key=_KIND_WIDTH.__getitem__)
-                    cols[r["col"]] = (is_tag, "string" if is_tag else kind)
+                    cols[r["col"]] = (False, _widen_kind(r["col"], prev[1], r["kind"]))
             for measurement, cols in plan.items():
                 tags = sorted(c for c, (t, _) in cols.items() if t)
                 fields = sorted(c for c, (t, _) in cols.items() if not t)
@@ -365,14 +385,5 @@ def _ensure_table_columns(
             if_not_exists=True,
         )
         return
-    meta = engine.catalog.get(table_name)
-    known = {c.name for c in meta.schema.columns}
-    schema = meta.schema
-    for c in columns:
-        if c.name not in known:
-            schema = schema.add_column(
-                ColumnSchema(name=c.name, kind=c.kind, is_tag=c.is_tag)
-            )
-    if schema is not meta.schema:
-        meta.schema = schema
-        engine.catalog.update(meta)
+    known = {c.name for c in engine.catalog.get(table_name).schema.columns}
+    _add_columns(engine, table_name, [c for c in columns if c.name not in known])

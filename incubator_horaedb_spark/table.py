@@ -11,7 +11,10 @@ src/analytic_engine/src/instance/write.rs):
   first batch via the reference ladder when unset, sampler.rs:42-51);
 - parquet append partitioned by ``__segment`` — at 100 TB the partition
   column is what makes time-range queries prune (predicate.rs TimeRange →
-  partition pruning).
+  partition pruning);
+- a request's rows held on the driver (protocol writes, INSERT VALUES,
+  COPY/LOAD) enter as one Arrow-backed local relation (``batch_frame``),
+  so one task writes one file per segment the request touches.
 
 Read path (replaces MergeIterator/DedupIterator/ChainIterator,
 src/analytic_engine/src/row_iter/):
@@ -33,6 +36,7 @@ import re
 import threading
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -55,6 +59,51 @@ _WRITE_LOCKS_GUARD = threading.Lock()
 def _write_lock(data_dir: str) -> threading.Lock:
     with _WRITE_LOCKS_GUARD:
         return _WRITE_LOCKS.setdefault(data_dir, threading.Lock())
+
+
+# Arrow type and accepted Python value types of each batch column kind.
+# The value types are checked before the Arrow build because pyarrow
+# converts some mismatches without a word: 1.5 into int64 becomes 1, True
+# into float64 becomes 1.0.  bool is not accepted where int is (the check
+# is on the exact type).  Timestamps are epoch milliseconds.
+_BATCH_KINDS = {
+    "timestamp": (pa.timestamp("ms", tz="UTC"), (int,)),
+    "int64": (pa.int64(), (int,)),
+    "double": (pa.float64(), (int, float)),
+    "string": (pa.string(), (str,)),
+    "boolean": (pa.bool_(), (bool,)),
+    "varbinary": (pa.binary(), (bytes, bytearray, str)),
+}
+
+
+def batch_frame(spark: SparkSession, rows: list[dict], kinds: dict[str, str]) -> DataFrame:
+    """One write request's rows, already in driver memory, as one
+    Arrow-backed DataFrame ready for ``Table.write``.
+
+    ``kinds`` maps each column, in output order, to a ``_BATCH_KINDS`` key;
+    a row without the column reads as NULL.  The columns become one
+    ``pyarrow.Table``, which ``createDataFrame`` turns into a JVM local
+    relation: no Python worker re-pickles the rows.  The frame is
+    coalesced to ``fsops.n_output_files`` of the Arrow bytes, the sizing
+    compaction uses, so a request under 128 MiB is written by one task as
+    one file per segment it touches.
+
+    A value of the wrong type, or one Arrow cannot hold exactly (an
+    integer past int64, or past 2**53 in a double column), raises
+    ValueError naming the column."""
+    arrays = []
+    for name, kind in kinds.items():
+        arrow_type, accepted = _BATCH_KINDS[kind]
+        values = [r.get(name) for r in rows]
+        for v in values:
+            if v is not None and type(v) not in accepted:
+                raise ValueError(f"column {name!r}: cannot store {v!r} as {kind}")
+        try:
+            arrays.append(pa.array(values, arrow_type))
+        except (pa.ArrowException, OverflowError) as e:
+            raise ValueError(f"column {name!r}: {e}") from None
+    table = pa.Table.from_arrays(arrays, names=list(kinds))
+    return spark.createDataFrame(table).coalesce(fsops.n_output_files(table.nbytes))
 
 
 class Table:
@@ -116,8 +165,9 @@ class Table:
         # nested under the duration branch and explicit-duration tables
         # never got a key, ADVICE r02), and ONLY on the first flush, so
         # later writes never pay the NDV aggregates.
-        # NB: re-read meta before persisting — a stale write-back here
-        # would clobber the seq counter allocated below (lost update).
+        # The samples are persisted through Catalog.update, which re-reads
+        # the meta under the catalog lock: a stale write-back here would
+        # clobber a concurrent evolve or sequence allocation (lost update).
         need_duration = meta.options.segment_duration_ms is None
         sample_pk = (
             meta.next_seq == 1
@@ -140,19 +190,18 @@ class Table:
             sampled = df.agg(*aggs).first()
             lo, hi = sampled[0], sampled[1]
             span = (hi - lo) if lo is not None else 0
-            meta = self.meta
-            changed = False
-            if need_duration and meta.options.segment_duration_ms is None:
-                meta.options.segment_duration_ms = pick_segment_duration_ms(max(span, 1))
-                changed = True
-            if sample_pk and elig and meta.options.sampled_sort_key is None:
-                ndv = list(zip(elig, sampled[2:]))
-                picked = [c for c, _ in sorted(ndv, key=lambda kv: kv[1])[:2]]
-                tail = [TSID_COLUMN] if schema.tsid_mode else []
-                meta.options.sampled_sort_key = picked + tail + [schema.timestamp_column]
-                changed = True
-            if changed:
-                self.catalog.update(meta)
+
+            def apply_samples(m) -> None:
+                # a concurrent first flush may have sampled already
+                if need_duration and m.options.segment_duration_ms is None:
+                    m.options.segment_duration_ms = pick_segment_duration_ms(max(span, 1))
+                if sample_pk and elig and m.options.sampled_sort_key is None:
+                    ndv = list(zip(elig, sampled[2:]))
+                    picked = [c for c, _ in sorted(ndv, key=lambda kv: kv[1])[:2]]
+                    tail = [TSID_COLUMN] if schema.tsid_mode else []
+                    m.options.sampled_sort_key = picked + tail + [schema.timestamp_column]
+
+            meta = self.catalog.update(self.name, apply_samples)
 
         seq = self.catalog.allocate_seq(self.name)
         df = df.withColumn(SEQ_COLUMN, F.lit(seq).cast("long"))

@@ -9,6 +9,10 @@ suite if the float pattern reappears anywhere outside timeutil itself.
 The query bank (``querybank/``) is the test and benchmark corpus built on
 the engine; a layering guard keeps every other package module from
 importing it.
+
+Request writes (protocol ingest, INSERT/COPY/LOAD) build their batch
+through ``table.batch_frame``; a guard fails if they call
+``createDataFrame`` directly.
 """
 
 from __future__ import annotations
@@ -66,3 +70,39 @@ def test_engine_does_not_import_query_bank():
             if "querybank" in mod.split("."):
                 offenders.append(f"{path.relative_to(REPO)}: imports {mod}")
     assert not offenders, "engine modules import the query bank:\n" + "\n".join(offenders)
+
+
+def _calls_create_dataframe(node: ast.AST) -> list[int]:
+    return [
+        n.lineno
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "createDataFrame"
+    ]
+
+
+def test_request_writes_use_the_batch_builder():
+    # Request writes go through table.batch_frame (one Arrow-backed local
+    # relation per batch).  createDataFrame over Python rows would bring
+    # back the Python-worker re-pickle and one file per core per segment.
+    pkg = REPO / "incubator_horaedb_spark"
+    offenders = []
+    ingest = pkg / "streaming" / "ingest.py"
+    tree = ast.parse(ingest.read_text(encoding="utf-8"))
+    offenders += [f"{ingest.relative_to(REPO)}:{ln}" for ln in _calls_create_dataframe(tree)]
+    shim = pkg / "frontends" / "sql_shim.py"
+    tree = ast.parse(shim.read_text(encoding="utf-8"))
+    found = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and node.name in ("insert_rows", "_insert_rows_locked"):
+            found.add(node.name)
+            offenders += [
+                f"{shim.relative_to(REPO)}:{ln} ({node.name})"
+                for ln in _calls_create_dataframe(node)
+            ]
+    assert found == {"insert_rows", "_insert_rows_locked"}
+    assert not offenders, (
+        "request writes call createDataFrame instead of table.batch_frame:\n"
+        + "\n".join(offenders)
+    )

@@ -176,3 +176,77 @@ def test_concurrent_appends_to_one_table(spark, tmp_path):
     assert not any(t.is_alive() for t in threads), "writers did not finish"
     assert not failed, f"{len(failed)} concurrent writes failed: {failed[0]!r}"
     assert Table(spark, engine.catalog, "same_tbl").read().count() == sum(acked)
+
+
+def test_catalog_changes_do_not_lose_each_other(tmp_path, monkeypatch):
+    # Two requests auto-evolving one table and one sequence allocation,
+    # all at once, with Catalog.get slowed to widen the window between a
+    # read of _meta.json and its write-back: every change must survive.
+    # A write-back of a meta read outside the catalog lock drops the other
+    # evolve's column (whose values Table.write's schema select would then
+    # drop after the request was acknowledged) or rewinds next_seq, so two
+    # batches share a __seq.  No Spark needed: ensure_table reads only the
+    # batch schema.
+    import threading
+    from types import SimpleNamespace
+
+    from pyspark.sql import types as T
+
+    from incubator_horaedb_spark.catalog import Catalog
+    from incubator_horaedb_spark.schema import ColumnSchema, TableSchema
+    from incubator_horaedb_spark.streaming.ingest import ensure_table
+
+    catalog = Catalog(str(tmp_path / "store"))
+    catalog.create_table(
+        "cpu",
+        TableSchema(
+            columns=[
+                ColumnSchema(name="ts", kind="timestamp"),
+                ColumnSchema(name="host", kind="string", is_tag=True),
+            ],
+            timestamp_column="ts",
+        ),
+    )
+    get = Catalog.get
+
+    def slow_get(self, name):
+        meta = get(self, name)
+        time.sleep(0.05)
+        return meta
+
+    monkeypatch.setattr(Catalog, "get", slow_get)
+    engine = SimpleNamespace(catalog=catalog)
+
+    def evolve(col: str):
+        batch = SimpleNamespace(
+            schema=T.StructType(
+                [
+                    T.StructField("ts", T.TimestampType()),
+                    T.StructField("host", T.StringType()),
+                    T.StructField(col, T.DoubleType()),
+                ]
+            )
+        )
+        return lambda: ensure_table(engine, "cpu", batch, "ts", ["host"])
+
+    seqs: list[int] = []
+    jobs = [evolve("usage"), evolve("idle"), lambda: seqs.append(catalog.allocate_seq("cpu"))]
+    start = threading.Barrier(len(jobs))
+    errors: list[BaseException] = []
+
+    def run(job) -> None:
+        start.wait()
+        try:
+            job()
+        except Exception as e:  # noqa: BLE001 — asserted below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(job,)) for job in jobs]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not errors, errors
+    meta = get(catalog, "cpu")
+    assert {"usage", "idle"} <= {c.name for c in meta.schema.columns}
+    assert seqs == [1] and meta.next_seq == 2

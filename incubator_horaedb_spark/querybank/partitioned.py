@@ -87,13 +87,13 @@ _PART_PRUNE_SQL = f"""
 @register("partitioned_scan_prune", oracle=_PART_PRUNE_SQL)
 def partitioned_scan_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tag-equality + time-range aggregate over the key-partitioned
-    layout: ``read_pruned`` turns event_type='click' into a
+    layout: ``Table.read(filters=...)`` turns event_type='click' into a
     ``__partition IN (...)`` directory prune and [lo, hi) into a
     ``__segment BETWEEN`` prune, with the row-exact timestamp predicate
     trimming the edge days.  Counts and quantized sums must equal the
     raw-parquet oracle — pruning may never drop or duplicate rows."""
     tbl = _partitioned_events(spark, sf_dir)
-    df = tbl.read_pruned({"event_type": "click"}, lo_ms=_LO_MS, hi_ms=_HI_MS)
+    df = tbl.read(filters={"event_type": "click"}, lo_ms=_LO_MS, hi_ms=_HI_MS)
     q = 1 << 20
     qv = F.floor(F.col("value") * F.lit(float(q)) + F.lit(0.5)).cast("double") / F.lit(
         float(q)

@@ -140,7 +140,7 @@ def _ingested_events(spark: SparkSession, sf_dir: str):
     # column (quality = value·0.5); ensure_table auto-adds it
     # (execute_add_columns_plan analogue, write.rs:695) and the earlier
     # segments, written before the ALTER, read it back as NULL through
-    # the explicit read schema (Table._read_schema — no mergeSchema scan)
+    # the explicit read schema (table._read_schema — no mergeSchema scan)
     evo = (
         _conv(spark.readStream.schema(raw_schema).parquet(path))
         .filter(F.col("event_type") == "view")

@@ -545,8 +545,7 @@ class EngineServer:
         stats as text.  The WAL is substituted by per-batch durable parquet
         commits + streaming checkpoints (SURVEY §1.7), so the equivalent
         observable state is per-table sequence and segment counts."""
-        from incubator_horaedb_spark import fsops
-        from incubator_horaedb_spark.schema import SEGMENT_COLUMN
+        from incubator_horaedb_spark.table import Table
 
         lines = [
             "[Data wal stats]:",
@@ -555,8 +554,7 @@ class EngineServer:
         ]
         for name in self.engine.catalog.list_tables():
             meta = self.engine.catalog.get(name)
-            data = self.engine.catalog.data_dir(name)
-            segs = fsops.list_dirs(self.engine.spark, data, prefix=f"{SEGMENT_COLUMN}=")
+            segs = Table(self.engine.spark, self.engine.catalog, name)._segment_dirs()
             lines.append(
                 f"table={name} next_seq={meta.next_seq} segments={len(segs)}"
             )
@@ -755,7 +753,7 @@ class EngineServer:
             # segment-pruned time-range scan, then the sub-query plan
             table = Table(
                 self.engine.spark, self.engine.catalog, sub.metric
-            ).read_time_range(req.start_ms, req.end_ms + 1)
+            ).read(lo_ms=req.start_ms, hi_ms=req.end_ms + 1)
             df = subquery_to_df(table, req, sub)
             group_tags = sub.group_by_tags
             # aggregatedTags: filter tag keys collapsed by the aggregation
@@ -849,11 +847,11 @@ class EngineServer:
 
         results = []
         for q in payload.get("queries", []):
-            # segment-pruned time-range scan (read_time_range derives the
+            # segment-pruned time-range scan (Table.read derives the
             # __segment bounds; remote_read_df re-applies the exact range)
             table = Table(
                 self.engine.spark, self.engine.catalog, q["metric"]
-            ).read_time_range(q["start_ms"], q["end_ms"] + 1)
+            ).read(lo_ms=q["start_ms"], hi_ms=q["end_ms"] + 1)
             df = remote_read_df(
                 table,
                 [tuple(m) for m in q.get("matchers", [])],

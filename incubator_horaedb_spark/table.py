@@ -22,12 +22,18 @@ src/analytic_engine/src/row_iter/):
 - Overwrite tables: keep the newest row per primary key —
   ROW_NUMBER() OVER (PARTITION BY pk ORDER BY __seq DESC) = 1
   (merge.rs:126 need_dedup + dedup.rs keep-newest-sequence);
-- TTL: rows older than now - ttl are filtered out (and their whole
-  segments pruned) when enable_ttl (table_options.rs:60).
+- TTL: rows older than now - ttl are filtered out at read when
+  enable_ttl (table_options.rs:60); whole segments are dropped only by
+  ``ttl_expire``.
 
-Compaction (compaction/picker.rs): ``compact`` rewrites a time partition's
-many small files into few, applying the dedup so read amplification drops —
-the TimeWindow picker analogue.
+``Table.read`` is the one scan: partition pruning, segment/time bounds,
+the sequence snapshot, TTL and the dedup window compose in it.
+
+Maintenance walks every segment leaf, ``[__partition=P/]__segment=S``
+(compaction/picker.rs runs on every partition's segments): ``compact``
+rewrites a segment's many small files into few, applying the dedup so read
+amplification drops — the TimeWindow picker analogue; ``optimize_zorder``
+uses the same rewrite loop, ``ttl_expire`` the same walk.
 """
 
 from __future__ import annotations
@@ -35,10 +41,12 @@ from __future__ import annotations
 import re
 import threading
 import time
+from collections.abc import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from incubator_horaedb_spark import fsops
 from incubator_horaedb_spark.catalog import Catalog, pick_segment_duration_ms
@@ -104,6 +112,30 @@ def batch_frame(spark: SparkSession, rows: list[dict], kinds: dict[str, str]) ->
             raise ValueError(f"column {name!r}: {e}") from None
     table = pa.Table.from_arrays(arrays, names=list(kinds))
     return spark.createDataFrame(table).coalesce(fsops.n_output_files(table.nbytes))
+
+
+_SEGMENT_DIR_RE = re.compile(f"^{SEGMENT_COLUMN}=\\d+$")
+_PARTITION_DIR_RE = re.compile(f"^{PARTITION_COLUMN}=\\d+$")
+
+
+def _read_schema(meta) -> T.StructType:
+    """Explicit read schema = current table schema (+ internals) so old
+    segments written before an ALTER ADD COLUMN read the new column as
+    NULL — schema evolution without mergeSchema scans."""
+    s = meta.schema.spark_schema(include_internal=True)
+    extra = [T.StructField(SEGMENT_COLUMN, T.LongType(), True)]
+    if meta.options.partition_keys:
+        extra.insert(0, T.StructField(PARTITION_COLUMN, T.IntegerType(), True))
+    return T.StructType(s.fields + extra)
+
+
+def _dedup(df: DataFrame, pk: list[str]) -> DataFrame:
+    """The Overwrite dedup window: keep the newest ``__seq`` per primary
+    key — ROW_NUMBER() OVER (PARTITION BY pk ORDER BY __seq DESC) = 1
+    (merge.rs:126 need_dedup + dedup.rs keep-newest-sequence).  The
+    ``__rn`` column stays for the caller to project away."""
+    w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
+    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
 
 
 class Table:
@@ -249,100 +281,64 @@ class Table:
 
     def read(
         self,
-        now_ms: int | None = None,
-        with_internal: bool = False,
-        as_of_seq: int | None = None,
-    ) -> DataFrame:
-        """The dedup-view read (SURVEY §7.1): Append → chain, Overwrite →
-        newest-per-primary-key.
-
-        ``as_of_seq`` is the sequence-snapshot read (instance/read.rs: a
-        read pins the memtable+SST view at a sequence; rows from later
-        writes are invisible).  Batches carry one monotonic ``__seq``
-        each, so filtering ``__seq <= as_of_seq`` BEFORE the dedup window
-        reconstructs the table state after write ``as_of_seq`` — the
-        Overwrite dedup picks the newest surviving version as of that
-        point, not the newest ever.  Snapshot retention follows the
-        reference's compaction semantics: ``compact()`` applies the
-        Overwrite dedup while rewriting, reclaiming superseded versions
-        (an LSM compaction GCs versions below the snapshot watermark when
-        no live read pins them), so a snapshot older than the last
-        compaction sees only the versions that survived it.  Concurrent
-        reader-vs-maintenance visibility is covered separately by the
-        maintenance race gates."""
-        meta = self.meta
-        schema = meta.schema
-        data = self.catalog.data_dir(self.name)
-        has_data = bool(
-            fsops.list_dirs(self.spark, data, prefix=f"{SEGMENT_COLUMN}=")
-            or fsops.list_dirs(self.spark, data, prefix=f"{PARTITION_COLUMN}=")
-        )
-        if not has_data:
-            df = self.spark.createDataFrame([], schema.spark_schema(include_internal=True))
-        else:
-            df = self.spark.read.schema(
-                self._read_schema()
-            ).parquet(data)
-
-        if as_of_seq is not None:
-            df = df.filter(F.col(SEQ_COLUMN) <= as_of_seq)
-
-        if meta.options.enable_ttl:
-            now_ms = int(time.time() * 1000) if now_ms is None else now_ms
-            cutoff = now_ms - meta.options.ttl_ms
-            df = df.filter(F.unix_millis(F.col(schema.timestamp_column)) >= cutoff)
-
-        if meta.options.update_mode == "OVERWRITE":
-            pk = schema.effective_primary_key
-            w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
-            df = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-
-        keep = [c.name for c in schema.columns]
-        if with_internal:
-            keep = keep + ([TSID_COLUMN] if schema.tsid_mode else []) + [SEQ_COLUMN]
-        return df.select(*keep)
-
-    def _read_schema(self):
-        """Explicit read schema = current table schema (+ internals) so old
-        segments written before an ALTER ADD COLUMN read the new column as
-        NULL — schema evolution without mergeSchema scans."""
-        from pyspark.sql import types as T
-
-        meta = self.meta
-        s = meta.schema.spark_schema(include_internal=True)
-        extra = [T.StructField(SEGMENT_COLUMN, T.LongType(), True)]
-        if meta.options.partition_keys:
-            extra.insert(0, T.StructField(PARTITION_COLUMN, T.IntegerType(), True))
-        return T.StructType(s.fields + extra)
-
-    def read_time_range(
-        self,
+        *,
         lo_ms: int | None = None,
         hi_ms: int | None = None,
+        filters: dict | None = None,
+        as_of_seq: int | None = None,
         now_ms: int | None = None,
+        with_internal: bool = False,
     ) -> DataFrame:
-        """Time-range read with SEGMENT pruning (predicate.rs:180-197
-        TimeRange → storage pruning; asserted by query-plan.sql's
-        'should not include SST' cases).
+        """The dedup-view read (SURVEY §7.1): Append → chain, Overwrite →
+        newest-per-primary-key — the one scan every reader builds.
 
-        A plain ``read().filter(t >= lo)`` cannot prune: the partition
-        column is ``__segment = ts DIV segment_duration`` and Catalyst will
-        not invert that relationship.  This read derives the segment bounds
-        from the time bounds (DIV is monotone, so t ∈ [lo, hi) ⇒ __segment
-        ∈ [lo DIV d, (hi-1) DIV d]) and filters BOTH columns BELOW the
-        dedup window — the segment predicate prunes partition directories
-        at file listing, the timestamp predicate trims the edge segments
-        row-exactly.  Below-window filtering is dedup-safe because the
-        timestamp column is part of the effective primary key
-        (schema.rs:628): every version of a key shares its timestamp, hence
-        its segment."""
+        Steps, in order:
+        - ``filters`` (column → value or list of values) on a
+          key-partitioned table become a ``__partition IN (...)`` predicate
+          below the dedup window, which Spark turns into partition
+          directory pruning (locate_partitions_for_read, key.rs:192-230);
+          dedup-safe because every row of a primary key shares its
+          partition id.  On other tables they filter the deduped rows.
+        - time bounds ``[lo_ms, hi_ms)`` also bound ``__segment``
+          (predicate.rs:180-197 TimeRange → storage pruning).  A plain
+          ``read().filter(t >= lo)`` cannot prune: Catalyst will not invert
+          ``__segment = ts DIV segment_duration``, but DIV is monotone, so
+          t ∈ [lo, hi) ⇒ __segment ∈ [lo DIV d, (hi-1) DIV d].  The segment
+          predicate prunes directories at file listing, the timestamp
+          predicate trims the edge segments row-exactly.  Both sit below
+          the dedup window, which is safe because the timestamp is part of
+          the effective primary key (schema.rs:628): every version of a
+          key shares its timestamp, hence its segment.
+        - ``as_of_seq`` is the sequence-snapshot read (instance/read.rs: a
+          read pins the memtable+SST view at a sequence; rows from later
+          writes are invisible).  Batches carry one monotonic ``__seq``
+          each, so filtering ``__seq <= as_of_seq`` BEFORE the dedup window
+          reconstructs the table state after write ``as_of_seq`` — the
+          Overwrite dedup picks the newest surviving version as of that
+          point, not the newest ever.  ``compact()`` applies the Overwrite
+          dedup while rewriting, reclaiming superseded versions (an LSM
+          compaction GCs versions below the snapshot watermark when no live
+          read pins them), so a snapshot older than the last compaction
+          sees only the versions that survived it.
+        - TTL (table_options.rs:60): rows older than ``now_ms - ttl`` are
+          filtered out; whole segments are dropped only by ``ttl_expire``.
+
+        A table with no data reads as an empty frame of the full read
+        schema, so every step applies to it unchanged."""
         meta = self.meta
-        schema = meta.schema
-        seg_ms = meta.options.segment_duration_ms
+        schema, opts = meta.schema, meta.options
         data = self.catalog.data_dir(self.name)
-        if not fsops.list_dirs(self.spark, data):
-            return self.read(now_ms=now_ms)
-        df = self.spark.read.schema(self._read_schema()).parquet(data)
+        layout = (f"{SEGMENT_COLUMN}=", f"{PARTITION_COLUMN}=")
+        if any(d.startswith(layout) for d in fsops.list_dirs(self.spark, data)):
+            df = self.spark.read.schema(_read_schema(meta)).parquet(data)
+        else:
+            df = self.spark.createDataFrame([], _read_schema(meta))
+
+        if filters and opts.partition_keys:
+            df = df.filter(
+                pruned_filter(self.spark, opts.partition_keys, opts.num_partitions, filters)
+            )
+        seg_ms = opts.segment_duration_ms
         if seg_ms:
             seg = F.col(SEGMENT_COLUMN)
             if lo_ms is not None:
@@ -354,72 +350,24 @@ class Table:
             df = df.filter(ts_ms >= lo_ms)
         if hi_ms is not None:
             df = df.filter(ts_ms < hi_ms)
-        if meta.options.enable_ttl:
-            now = int(time.time() * 1000) if now_ms is None else now_ms
-            df = df.filter(ts_ms >= now - meta.options.ttl_ms)
-        if meta.options.update_mode == "OVERWRITE":
-            pk = schema.effective_primary_key
-            w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
-            df = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-        return df.select(*[c.name for c in schema.columns])
+        if as_of_seq is not None:
+            df = df.filter(F.col(SEQ_COLUMN) <= as_of_seq)
+        if opts.enable_ttl:
+            now_ms = int(time.time() * 1000) if now_ms is None else now_ms
+            df = df.filter(ts_ms >= now_ms - opts.ttl_ms)
+        if opts.update_mode == "OVERWRITE":
+            df = _dedup(df, schema.effective_primary_key)
 
-    def read_pruned(
-        self,
-        filters: dict,
-        now_ms: int | None = None,
-        lo_ms: int | None = None,
-        hi_ms: int | None = None,
-    ) -> DataFrame:
-        """Key-partition-pruned read: equality/in-list filters over the
-        partition keys become a ``__partition IN (...)`` predicate that
-        Spark turns into partition directory pruning
-        (locate_partitions_for_read, key.rs:192-230).  Optional time
-        bounds compose with it the same way ``read_time_range`` does —
-        derived ``__segment`` bounds prune the time dimension of the
-        directory layout, the row-exact timestamp predicate trims edge
-        segments — so a tag-equality + time-range query (the canonical
-        TSDB shape, query-plan.sql:38-66) lists only the
-        (partition x segment) directories it touches."""
-        meta = self.meta
-        if not meta.options.partition_keys:
-            df = self.read(now_ms=now_ms) if lo_ms is None and hi_ms is None else (
-                self.read_time_range(lo_ms=lo_ms, hi_ms=hi_ms, now_ms=now_ms)
-            )
+        keep = [c.name for c in schema.columns]
+        if with_internal:
+            keep = keep + ([TSID_COLUMN] if schema.tsid_mode else []) + [SEQ_COLUMN]
+        df = df.select(*keep)
+        if filters and not opts.partition_keys:
             for c, v in filters.items():
-                df = df.filter(F.col(c).isin(list(v)) if isinstance(v, (list, tuple, set)) else (F.col(c) == v))
-            return df
-        cond = pruned_filter(
-            self.spark, meta.options.partition_keys, meta.options.num_partitions, filters
-        )
-        # apply the partition filter below the dedup window so pruning
-        # reaches the scan (dedup by pk is per-partition-key-safe: all rows
-        # of a pk share the partition id)
-        schema = meta.schema
-        df = self.spark.read.schema(self._read_schema()).parquet(
-            self.catalog.data_dir(self.name)
-        ).filter(cond)
-        seg_ms = meta.options.segment_duration_ms
-        if seg_ms:
-            seg = F.col(SEGMENT_COLUMN)
-            if lo_ms is not None:
-                df = df.filter(seg >= lo_ms // seg_ms)
-            if hi_ms is not None:
-                df = df.filter(seg <= (hi_ms - 1) // seg_ms)
-        ts_ms_col = F.unix_millis(F.col(schema.timestamp_column))
-        if lo_ms is not None:
-            df = df.filter(ts_ms_col >= lo_ms)
-        if hi_ms is not None:
-            df = df.filter(ts_ms_col < hi_ms)
-        if meta.options.enable_ttl:
-            now = int(__import__("time").time() * 1000) if now_ms is None else now_ms
-            df = df.filter(
-                F.unix_millis(F.col(schema.timestamp_column)) >= now - meta.options.ttl_ms
-            )
-        if meta.options.update_mode == "OVERWRITE":
-            pk = schema.effective_primary_key
-            w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
-            df = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-        return df.select(*[c.name for c in schema.columns])
+                df = df.filter(
+                    F.col(c).isin(list(v)) if isinstance(v, (list, tuple, set)) else (F.col(c) == v)
+                )
+        return df
 
     # -------------------------------------------------------- maintenance --
     # All three maintenance ops route list/delete/rename through the Hadoop
@@ -430,47 +378,54 @@ class Table:
     # through one single-threaded task (compaction/picker.rs sizes SST
     # outputs the same way).
 
-    _SEGMENT_DIR_RE = re.compile(f"^{SEGMENT_COLUMN}=\\d+$")
+    def _segment_dirs(self, root: str | None = None) -> list[tuple[str, str]]:
+        """(leaf, full path) of every segment directory under ``root``
+        (default: the data dir).  A leaf is the layout ``_append`` writes:
+        ``__segment=S``, or ``__partition=P/__segment=S`` on a partitioned
+        table.
 
-    def _segment_dirs(self) -> list[tuple[str, str]]:
-        """(name, full path) of every time-partition directory.
+        Strictly ``<digits>`` values — anything else under the data dir (a
+        crashed rewrite's leftovers, a foreign file) is not a segment and
+        must not reach ttl_expire's int() or the rewrite loop."""
+        root = root or self.catalog.data_dir(self.name)
+        leaves = []
+        for d in fsops.list_dirs(self.spark, root):
+            if _SEGMENT_DIR_RE.match(d):
+                leaves.append(d)
+            elif _PARTITION_DIR_RE.match(d):
+                leaves += [
+                    f"{d}/{s}"
+                    for s in fsops.list_dirs(self.spark, f"{root}/{d}")
+                    if _SEGMENT_DIR_RE.match(s)
+                ]
+        return [(leaf, f"{root}/{leaf}") for leaf in leaves]
 
-        Strictly ``__segment=<digits>`` — anything else under the data dir
-        (a crashed rewrite's leftovers, a foreign file) is not a segment
-        and must not reach ttl_expire's int() or compact's rewrite loop."""
-        data = self.catalog.data_dir(self.name)
-        return [
-            (seg, f"{data}/{seg}")
-            for seg in fsops.list_dirs(self.spark, data, prefix=f"{SEGMENT_COLUMN}=")
-            if self._SEGMENT_DIR_RE.match(seg)
-        ]
-
-    # Rewrite staging/rollback areas.  Dot-prefixed so Spark's file listing
-    # (which skips '.'/'_'-prefixed paths) never discovers them as data —
-    # a crashed rewrite can leave them behind without polluting reads or
-    # partition discovery.
-    def _tmp_dir(self, seg: str) -> str:
-        return f"{self.catalog.data_dir(self.name)}/.rewrite-tmp/{seg}"
-
-    def _aside_dir(self, seg: str) -> str:
-        return f"{self.catalog.data_dir(self.name)}/.rewrite-old/{seg}"
+    # Rewrite staging/rollback areas, mirroring the leaf path (the same
+    # __segment=S exists under several partitions).  Dot-prefixed so
+    # Spark's file listing (which skips '.'/'_'-prefixed paths) never
+    # discovers them as data — a crashed rewrite can leave them behind
+    # without polluting reads or partition discovery.
+    _TMP, _ASIDE = ".rewrite-tmp", ".rewrite-old"
 
     def _recover_stale_rewrites(self) -> None:
         """Crash recovery before any rewrite: drop half-written tmp output;
         for each aside segment, restore it if the live directory is missing
         (a crash hit between the two commit renames), else it is a
-        committed rewrite whose cleanup delete was lost — drop it."""
+        committed rewrite whose cleanup delete was lost — drop it.  The
+        walk goes down to segments: a live ``__partition=P`` directory says
+        nothing about whether its segment ``S`` is live."""
         data = self.catalog.data_dir(self.name)
-        fsops.delete(self.spark, f"{data}/.rewrite-tmp")
-        for seg in fsops.list_dirs(self.spark, f"{data}/.rewrite-old"):
-            live = f"{data}/{seg}"
-            aside = self._aside_dir(seg)
+        fsops.delete(self.spark, f"{data}/{self._TMP}")
+        for leaf, aside in self._segment_dirs(f"{data}/{self._ASIDE}"):
+            live = f"{data}/{leaf}"
             if fsops.exists(self.spark, live):
                 fsops.delete(self.spark, aside)
-            elif not fsops.rename(self.spark, aside, live):
+                continue
+            fsops.mkdirs(self.spark, live.rsplit("/", 1)[0])
+            if not fsops.rename(self.spark, aside, live):
                 raise IOError(f"recovery rename failed: {aside} -> {live}")
 
-    def _commit_rewrite(self, src: str, tmp: str) -> None:
+    def _commit_rewrite(self, src: str, tmp: str, aside: str) -> None:
         """Swap the rewritten directory in: rename the live segment aside,
         rename the tmp output into place, then delete the aside copy.
 
@@ -491,8 +446,6 @@ class Table:
         reports most rename failures by returning false, and a silently
         failed rename here would lose the segment while compact() counts
         it as rewritten."""
-        seg = src.rsplit("/", 1)[1]
-        aside = self._aside_dir(seg)
         fsops.mkdirs(self.spark, aside.rsplit("/", 1)[0])
         if not fsops.rename(self.spark, src, aside):
             raise IOError(f"rewrite commit: rename {src} -> {aside} failed")
@@ -507,46 +460,48 @@ class Table:
         if not fsops.delete(self.spark, aside):
             raise IOError(f"rewrite commit: cleanup delete {aside} failed")
 
-    def compact(self, target_file_bytes: int = fsops.TARGET_FILE_BYTES) -> int:
-        """Rewrite each time partition into compacted, sort-clustered files,
-        applying Overwrite dedup — the TimeWindow compaction analogue.
-        Returns the number of rewritten partitions."""
-        meta = self.meta
-        rewritten = 0
+    def _rewrite_segments(
+        self, shape: Callable[[DataFrame, int], DataFrame], target_file_bytes: int
+    ) -> int:
+        """The one per-segment rewrite loop under ``compact`` and
+        ``optimize_zorder``: each leaf is read, passed through
+        ``shape(df, nfiles)`` with ``nfiles`` sized to ``target_file_bytes``,
+        written to its tmp path and committed.  A clean pass leaves no
+        staging directories.  Passes over one table must not overlap: this
+        cleanup, like recovery's tmp drop, assumes no other pass is in
+        flight.  Returns the number of rewritten segments."""
         self._recover_stale_rewrites()
-        for seg, src in self._segment_dirs():
-            df = self.spark.read.parquet(src)
+        data = self.catalog.data_dir(self.name)
+        leaves = self._segment_dirs()
+        for leaf, src in leaves:
+            nfiles = fsops.n_output_files(fsops.dir_bytes(self.spark, src), target_file_bytes)
+            tmp = f"{data}/{self._TMP}/{leaf}"
+            shape(self.spark.read.parquet(src), nfiles).write.mode("overwrite").parquet(tmp)
+            self._commit_rewrite(src, tmp, f"{data}/{self._ASIDE}/{leaf}")
+        for staging in (self._TMP, self._ASIDE):
+            fsops.delete(self.spark, f"{data}/{staging}")
+        return len(leaves)
+
+    def compact(self, target_file_bytes: int = fsops.TARGET_FILE_BYTES) -> int:
+        """Rewrite each segment into compacted, sort-clustered files,
+        applying Overwrite dedup — the TimeWindow compaction analogue.
+        Returns the number of rewritten segments."""
+        meta = self.meta
+        pk = meta.schema.effective_primary_key
+
+        def shape(df: DataFrame, nfiles: int) -> DataFrame:
             if meta.options.update_mode == "OVERWRITE":
-                pk = [
-                    c for c in meta.schema.effective_primary_key if c in df.columns
-                ] or meta.schema.effective_primary_key
-                w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
-                df = df.withColumn("__rn", F.row_number().over(w)).filter(
-                    F.col("__rn") == 1
-                ).drop("__rn")
-            nfiles = fsops.n_output_files(
-                fsops.dir_bytes(self.spark, src), target_file_bytes
-            )
-            sort_key = [
-                c for c in (meta.options.sampled_sort_key or []) if c in df.columns
-            ]
-            if sort_key:
-                # range-partition on the sampled key, then sort within each
-                # output file: files cover disjoint key ranges, so row-group
-                # min/max stats prune across files too (not just inside one)
-                out = (
-                    df.repartitionByRange(nfiles, *sort_key)
-                    .sortWithinPartitions(*sort_key)
-                    if nfiles > 1
-                    else df.coalesce(1).sortWithinPartitions(*sort_key)
-                )
-            else:
-                out = df.repartition(nfiles) if nfiles > 1 else df.coalesce(1)
-            tmp = self._tmp_dir(seg)
-            out.write.mode("overwrite").parquet(tmp)
-            self._commit_rewrite(src, tmp)
-            rewritten += 1
-        return rewritten
+                df = _dedup(df, [c for c in pk if c in df.columns] or pk).drop("__rn")
+            sort_key = [c for c in (meta.options.sampled_sort_key or []) if c in df.columns]
+            if not sort_key:
+                return df.repartition(nfiles) if nfiles > 1 else df.coalesce(1)
+            # range-partition on the sampled key, then sort within each
+            # output file: files cover disjoint key ranges, so row-group
+            # min/max stats prune across files too (not just inside one)
+            out = df.repartitionByRange(nfiles, *sort_key) if nfiles > 1 else df.coalesce(1)
+            return out.sortWithinPartitions(*sort_key)
+
+        return self._rewrite_segments(shape, target_file_bytes)
 
     @staticmethod
     def zorder_column(cols: list[str], bits: int = 16):
@@ -568,57 +523,47 @@ class Table:
         bits: int = 16,
         target_file_bytes: int = fsops.TARGET_FILE_BYTES,
     ) -> int:
-        """Rewrite every time partition clustered by the Z-order key of
-        ``cols`` — after this, row-group min/max stats prune scans on ALL
-        the z-ordered columns, not just the lead sort column.  The rewrite
-        is per-segment (same shape as compact), so at scale it runs as
-        bounded parallel jobs, never a global sort.  Returns partitions
-        rewritten."""
+        """Rewrite every segment clustered by the Z-order key of ``cols`` —
+        after this, row-group min/max stats prune scans on ALL the
+        z-ordered columns, not just the lead sort column.  The rewrite is
+        per-segment (the loop compact uses), so at scale it runs as bounded
+        parallel jobs, never a global sort.  Returns segments rewritten."""
         meta = self.meta
         for c in cols:
             kind = meta.schema.column(c).kind
             if kind in ("double", "float", "string", "timestamp", "varbinary"):
                 raise ValueError(f"zorder column {c!r} must be integer-kind, got {kind}")
-        rewritten = 0
-        self._recover_stale_rewrites()
-        for seg, src in self._segment_dirs():
-            df = self.spark.read.parquet(src)
-            z = self.zorder_column(cols, bits)
-            nfiles = fsops.n_output_files(
-                fsops.dir_bytes(self.spark, src), target_file_bytes
-            )
+        z = self.zorder_column(cols, bits)
+
+        def shape(df: DataFrame, nfiles: int) -> DataFrame:
+            if nfiles == 1:
+                return df.coalesce(1).sortWithinPartitions(z)
             # range-partition on the z-key so each output file owns a
             # disjoint Morton range — min/max prunes on every z-ordered
             # column across files (the Delta/Iceberg OPTIMIZE ZORDER shape)
-            out = (
+            return (
                 df.withColumn("__z", z)
                 .repartitionByRange(nfiles, F.col("__z"))
                 .sortWithinPartitions("__z")
                 .drop("__z")
-                if nfiles > 1
-                else df.coalesce(1).sortWithinPartitions(z)
             )
-            tmp = self._tmp_dir(seg)
-            out.write.mode("overwrite").parquet(tmp)
-            self._commit_rewrite(src, tmp)
-            rewritten += 1
-        return rewritten
+
+        return self._rewrite_segments(shape, target_file_bytes)
 
     def ttl_expire(self, now_ms: int | None = None) -> int:
         """Drop whole segments beyond TTL (segment-level TTL purge —
-        src/analytic_engine retention).  Metadata-only: one LIST plus one
-        recursive delete per expired segment, no data read.  Returns
-        segments dropped."""
+        src/analytic_engine retention).  Metadata-only: the segment walk's
+        LISTs plus one recursive delete per expired segment, no data read.
+        Returns segments dropped."""
         meta = self.meta
         if not meta.options.enable_ttl or meta.options.segment_duration_ms is None:
             return 0
         now_ms = int(time.time() * 1000) if now_ms is None else now_ms
         cutoff_seg = (now_ms - meta.options.ttl_ms) // meta.options.segment_duration_ms
         dropped = 0
-        for seg, src in self._segment_dirs():
-            seg_val = int(seg.split("=", 1)[1])
+        for leaf, src in self._segment_dirs():
             # a segment is expired only when its whole range is expired
-            if seg_val + 1 <= cutoff_seg:
+            if int(leaf.rsplit("=", 1)[1]) + 1 <= cutoff_seg:
                 fsops.delete(self.spark, src)
                 dropped += 1
         return dropped

@@ -371,6 +371,61 @@ def test_catalog_maintenance_sweep(engine):
     assert [r["v"] for r in engine.table("m2").read(now_ms=now).collect()] == [2.0]
 
 
+def test_catalog_maintenance_sweep_partitioned(engine):
+    # a PARTITION BY KEY table stores __partition=P/__segment=S leaves; the
+    # sweep must compact and expire those leaves, not only top-level
+    # __segment=S directories
+    import os
+
+    from incubator_horaedb_spark.functions.timeutil import epoch_ms
+    from incubator_horaedb_spark.maintenance import run_maintenance
+
+    day_ms = 86_400_000
+    now = 10 * day_ms
+    engine.execute_sql(
+        "CREATE TABLE mp (k string TAG, v double, t timestamp NOT NULL, timestamp KEY (t)) "
+        "PARTITION BY KEY(k) PARTITIONS 4 "
+        "ENGINE=Analytic WITH(ttl='1d', update_mode='APPEND', segment_duration='2h')"
+    )
+    expected = []
+    for b in range(4):
+        rows = [(f"k{i}", float(b * 10 + i), now - 3_600_000 + b) for i in range(4)]
+        old = [(k, v + 100, now - 2 * day_ms + b) for k, v, _ in rows]
+        values = ", ".join(f"('{k}', {v}, {t})" for k, v, t in rows + old)
+        engine.execute_sql(f"INSERT INTO mp (k, v, t) VALUES {values}")
+        expected += rows
+
+    data = engine.catalog.data_dir("mp")
+
+    def leaf_files():
+        return {
+            f"{p}/{s}": [f for f in os.listdir(f"{data}/{p}/{s}") if f.endswith(".parquet")]
+            for p in os.listdir(data)
+            if p.startswith("__partition=")
+            for s in os.listdir(f"{data}/{p}")
+            if s.startswith("__segment=")
+        }
+
+    expired_seg = f"__segment={(now - 2 * day_ms) // 7_200_000}"
+    before = leaf_files()
+    expired = [leaf for leaf in before if leaf.endswith(expired_seg)]
+    live = [leaf for leaf in before if leaf not in expired]
+    assert expired and live
+    assert all(len(files) == 4 for files in before.values())  # one per INSERT
+
+    report = run_maintenance(engine, now_ms=now)
+    assert report.expired_segments["mp"] == len(expired)
+    assert report.compacted_partitions["mp"] == len(live)
+    after = leaf_files()
+    assert sorted(after) == sorted(live)  # expired leaves dropped
+    assert all(len(files) == 1 for files in after.values())  # one file per leaf
+    got = [
+        (r["k"], r["v"], epoch_ms(r["t"]))
+        for r in engine.table("mp").read(now_ms=now).collect()
+    ]
+    assert sorted(got) == sorted(expected)
+
+
 def test_continuous_rollup_incremental(spark, tmp_path):
     """Hypertable-rollup analogue (maintenance.rollup_refresh/rollup_read):
     partial-aggregate materialization refreshed incrementally by sequence

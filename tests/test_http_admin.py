@@ -132,6 +132,33 @@ def test_debug_config_and_wal_stats(server):
     assert "table=demo next_seq=" in text
 
 
+def test_wal_stats_counts_partitioned_segments(server):
+    # a PARTITION BY KEY table keeps its segments under __partition=P/;
+    # every (partition, segment) leaf counts
+    import os
+
+    _sql(
+        server,
+        "CREATE TABLE pdemo (name string TAG, value double NOT NULL, "
+        "t timestamp NOT NULL, TIMESTAMP KEY(t)) PARTITION BY KEY(name) PARTITIONS 4 "
+        "ENGINE=Analytic with(enable_ttl='false', segment_duration='2h')",
+    )
+    values = ", ".join(
+        f"('h{i}', {i}, {1683280523000 + s * 7_200_000})" for i in range(8) for s in range(2)
+    )
+    _sql(server, f"insert into pdemo (name, value, t) values {values}")
+    data = server.engine.catalog.data_dir("pdemo")
+    leaves = sum(
+        len([s for s in os.listdir(f"{data}/{p}") if s.startswith("__segment=")])
+        for p in os.listdir(data)
+        if p.startswith("__partition=")
+    )
+    assert leaves > 2
+    st, text = _req(server, "/debug/wal_stats")
+    assert st == 200
+    assert f"table=pdemo next_seq=2 segments={leaves}" in text
+
+
 def test_debug_flush_memtable_compacts_tables(server):
     _mk_demo(server)
     _sql(server, "insert into demo (name, value, t) values ('b', 2, 1683280524000)")

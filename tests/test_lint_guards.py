@@ -13,6 +13,9 @@ importing it.
 Request writes (protocol ingest, INSERT/COPY/LOAD) build their batch
 through ``table.batch_frame``; a guard fails if they call
 ``createDataFrame`` directly.
+
+The Overwrite dedup window lives in one place (``table._dedup``), shared
+by the table scan and compaction; a guard fails if it is copied again.
 """
 
 from __future__ import annotations
@@ -106,3 +109,17 @@ def test_request_writes_use_the_batch_builder():
         "request writes call createDataFrame instead of table.batch_frame:\n"
         + "\n".join(offenders)
     )
+
+
+def test_one_overwrite_dedup_window():
+    # Every reader and compaction keep the newest __seq per key through
+    # table._dedup; a second copy of the window is how the read paths
+    # drifted apart before.
+    window = "orderBy(F.col(SEQ_COLUMN).desc())"
+    hits = [
+        f"{path.relative_to(REPO)}:{i}"
+        for path in (REPO / "incubator_horaedb_spark").rglob("*.py")
+        for i, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1)
+        if window in line
+    ]
+    assert len(hits) == 1 and hits[0].startswith("incubator_horaedb_spark/table.py:"), hits

@@ -33,10 +33,12 @@ def engine(spark, tmp_path):
 SEG_MS = 2 * 3600 * 1000
 
 
-def _mk_table(engine, name: str, n_segments: int = 3, rows_per_seg: int = 40):
+def _mk_table(
+    engine, name: str, n_segments: int = 3, rows_per_seg: int = 40, partition: str = ""
+):
     engine.execute_sql(
         f"CREATE TABLE {name} (k string TAG, v double, t timestamp NOT NULL, "
-        "timestamp KEY (t)) ENGINE=Analytic "
+        f"timestamp KEY (t)) {partition} ENGINE=Analytic "
         "WITH(enable_ttl='false', update_mode='APPEND', segment_duration='2h')"
     )
     for s in range(n_segments):
@@ -101,28 +103,36 @@ def test_stale_tmp_and_aside_recovery(engine, spark):
     """Simulated crash states: (a) half-written tmp output, (b) an aside
     copy whose live dir is missing (crash between the two renames).  The
     next maintenance run must drop (a) and restore (b); neither state may
-    pollute read(), _segment_dirs(), or ttl_expire."""
-    tbl = _mk_table(engine, "mc4", n_segments=2)
-    data = engine.catalog.data_dir("mc4")
-    segs = [s for s, _ in tbl._segment_dirs()]
-    assert len(segs) == 2
+    pollute read(), _segment_dirs(), or ttl_expire.
 
-    # (a) leftover tmp from a crashed rewrite
-    fsops.mkdirs(spark, f"{data}/.rewrite-tmp/{segs[0]}")
-    # (b) crash between renames: live dir moved aside, tmp never promoted
-    fsops.mkdirs(spark, f"{data}/.rewrite-old")
-    assert fsops.rename(spark, f"{data}/{segs[1]}", f"{data}/.rewrite-old/{segs[1]}")
+    Run on an unpartitioned table and on a key-partitioned one, whose
+    leaves are __partition=P/__segment=S: there the aside segment's
+    partition directory is still live, so recovery must look at the
+    segment, not the partition, to see that the aside copy is the only
+    one."""
+    for name, partition in (("mc4", ""), ("mc4p", "PARTITION BY KEY(k) PARTITIONS 2")):
+        tbl = _mk_table(engine, name, n_segments=2, partition=partition)
+        data = engine.catalog.data_dir(name)
+        segs = [s for s, _ in tbl._segment_dirs()]
+        assert len(segs) == (4 if partition else 2)
 
-    # stale dirs are invisible to segment listing (dot-prefixed staging)
-    assert [s for s, _ in tbl._segment_dirs()] == [segs[0]]
-    # ttl_expire walks segment dirs without crashing on staging leftovers
-    assert tbl.ttl_expire() == 0
+        # (a) leftover tmp from a crashed rewrite
+        fsops.mkdirs(spark, f"{data}/.rewrite-tmp/{segs[0]}")
+        # (b) crash between renames: live dir moved aside, tmp never promoted
+        aside = f"{data}/.rewrite-old/{segs[-1]}"
+        fsops.mkdirs(spark, aside.rsplit("/", 1)[0])
+        assert fsops.rename(spark, f"{data}/{segs[-1]}", aside)
 
-    # compact() recovers first: aside restored, tmp dropped, all rows back
-    assert tbl.compact() == 2
-    assert tbl.read().count() == 80
-    assert fsops.list_dirs(spark, f"{data}/.rewrite-tmp") == []
-    assert fsops.list_dirs(spark, f"{data}/.rewrite-old") == []
+        # stale dirs are invisible to segment listing (dot-prefixed staging)
+        assert [s for s, _ in tbl._segment_dirs()] == segs[:-1]
+        # ttl_expire walks segment dirs without crashing on staging leftovers
+        assert tbl.ttl_expire() == 0
+
+        # compact() recovers first: aside restored, tmp dropped, all rows back
+        assert tbl.compact() == len(segs)
+        assert tbl.read().count() == 80
+        assert fsops.list_dirs(spark, f"{data}/.rewrite-tmp") == []
+        assert fsops.list_dirs(spark, f"{data}/.rewrite-old") == []
 
 
 def test_segment_dirs_filters_non_digit_names(engine, spark):

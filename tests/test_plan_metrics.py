@@ -33,7 +33,7 @@ def test_read_pruned_partition_counters(engine):
     table = engine.table("pt")
 
     full = scan_counters(table.read())
-    pruned = scan_counters(table.read_pruned({"k": "a"}))
+    pruned = scan_counters(table.read(filters={"k": "a"}))
     assert len(full) == 1 and len(pruned) == 1
     # 6 keys over 4 buckets: the full read touches every populated bucket,
     # the pruned read only key 'a''s bucket — fewer partitions AND files
@@ -66,9 +66,9 @@ def test_segment_time_prune_counters(engine):
     assert full[0]["partitions_read"] == 3
     assert one_seg[0]["partitions_read"] == 3  # filter on derived col: no prune...
 
-    # ...which is exactly why read_time_range derives __segment bounds from
+    # ...which is exactly why Table.read derives __segment bounds from
     # the time bounds: same rows, but the scan prunes to one partition
-    ranged = table.read_time_range(base, base + 3_600_000)
+    ranged = table.read(lo_ms=base, hi_ms=base + 3_600_000)
     assert [r["v"] for r in ranged.collect()] == [0.0]
     counters = scan_counters(ranged)
     assert counters[0]["partitions_read"] == 1
@@ -87,7 +87,7 @@ def test_read_time_range_overwrite_dedup_safe(engine):
     engine.execute_sql(f"INSERT INTO ow (k, v, t) VALUES ('a', 1, {base})")
     engine.execute_sql(f"INSERT INTO ow (k, v, t) VALUES ('a', 2, {base})")  # overwrite
     engine.execute_sql(f"INSERT INTO ow (k, v, t) VALUES ('a', 9, {base + 7_200_000})")
-    out = engine.table("ow").read_time_range(base, base + 3_600_000).collect()
+    out = engine.table("ow").read(lo_ms=base, hi_ms=base + 3_600_000).collect()
     assert [(r["k"], r["v"]) for r in out] == [("a", 2.0)]
 
 

@@ -62,9 +62,9 @@ def test_key_partition_write_prune(spark, tmp_path):
     assert len(part_dirs) > 1  # rows scattered over hash partitions
 
     tbl = engine.table("pt")
-    out = tbl.read_pruned({"k": "k3"})
+    out = tbl.read(filters={"k": "k3"})
     assert [r["v"] for r in out.collect()] == [3.0]
-    out2 = tbl.read_pruned({"k": ["k3", "k7"]})
+    out2 = tbl.read(filters={"k": ["k3", "k7"]})
     assert sorted(r["v"] for r in out2.collect()) == [3.0, 7.0]
 
     # pruning reaches the scan: candidate set is a strict subset

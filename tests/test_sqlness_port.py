@@ -423,7 +423,7 @@ def test_partition_table_corpus(engine):
     ).collect()
     assert [r["name"] for r in out] == [f"horaedb{i}" for i in range(5)]
     # pruning via the Table API matches the SQL result
-    pruned = engine.table("partition_table_t").read_pruned({"name": "horaedb0"})
+    pruned = engine.table("partition_table_t").read(filters={"name": "horaedb0"})
     assert [r["value"] for r in pruned.collect()] == [100.0]
     engine.execute_sql("ALTER TABLE partition_table_t ADD COLUMN (b string)")
     engine.execute_sql(

@@ -5,7 +5,11 @@ Replaces the reference's manifest + sys_catalog
 directory of JSON metadata files next to the table data:
 
     <root>/<schema>/<table>/_meta.json   — schema + options + seq counter
+    <root>/<schema>/<table>/_files.json  — the versioned data-file list
     <root>/<schema>/<table>/data/        — time-partitioned parquet
+
+The file list is the manifest (manifest/details.rs): a file is visible while
+the newest version lists it; ``Catalog.publish`` is the one commit point.
 
 Table options mirror src/analytic_engine/src/table_options.rs:387-427:
 update_mode (APPEND|OVERWRITE), segment_duration (default 2h, :54), ttl
@@ -14,23 +18,25 @@ compression.  The three-level namespace collapses to schema.table (the
 reference's fixed catalog level adds nothing on Spark).
 
 Scale note (100 TB): this JSON catalog is DRIVER-LOCAL by design — it
-holds kilobytes of metadata plus the per-table sequence counter, whose
-atomicity comes from the in-process lock + POSIX rename.  On a real
-cluster the equivalent state lives in a metadata service (Hive
+holds kilobytes of metadata plus the per-table sequence counter and file
+list, whose atomicity comes from the in-process lock + POSIX rename.  On
+a real cluster the equivalent state lives in a metadata service (Hive
 metastore / a small transactional DB), exactly as the reference keeps
 its manifest in a meta store separate from SSTs on object storage
 (src/analytic_engine/src/manifest/).  Object-store rename is NOT a safe
-substitute for the sequence counter (no atomic compare-and-swap), so
-porting this file to fsops would be cargo-cult scale-readiness; the
-DATA path (table.py) is the part that must and does run object-store
-clean."""
+substitute for the sequence counter or the file list (no atomic
+compare-and-swap), so porting this file to fsops would be cargo-cult
+scale-readiness; the DATA path (table.py) is the part that must and does
+run object-store clean."""
 
 from __future__ import annotations
 
 import json
 import os
 import re
+import shutil
 import threading
+import time
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -194,6 +200,9 @@ class Catalog:
     def _meta_path(self, name: str) -> str:
         return os.path.join(self.table_dir(name), "_meta.json")
 
+    def _files_path(self, name: str) -> str:
+        return os.path.join(self.table_dir(name), "_files.json")
+
     def exists(self, name: str) -> bool:
         return os.path.exists(self._meta_path(name))
 
@@ -206,21 +215,18 @@ class Catalog:
                 if if_not_exists:
                     return self.get(name)
                 raise ValueError(f"table {name!r} already exists")
-            import time as _time
-
             meta = TableMeta(
                 name=name,
                 schema=schema,
                 options=options or TableOptions(),
-                created_at_ms=int(_time.time() * 1000),
+                created_at_ms=int(time.time() * 1000),
             )
             os.makedirs(self.data_dir(name), exist_ok=True)
+            self._write_json(self._files_path(name), {"version": 0, "files": {}})
             self._write_meta(meta)
             return meta
 
     def drop_table(self, name: str, if_exists: bool = False) -> bool:
-        import shutil
-
         with self._lock:
             if not self.exists(name):
                 if if_exists:
@@ -264,8 +270,28 @@ class Catalog:
             self._write_meta(meta)
             return seq
 
+    def files(self, name: str) -> dict[str, int]:
+        """``name``'s newest file list: ``[__partition=P/]__segment=S/<file>`` → bytes."""
+        with open(self._files_path(name)) as f:
+            return json.load(f)["files"]
+
+    def publish(self, name: str, add: dict[str, int], drop: dict[str, int]) -> bool:
+        """Write ``name``'s next file list: the current minus ``drop``, plus ``add``.
+        False, writing nothing, if a concurrent commit replaced part of ``drop``."""
+        with self._lock, open(self._files_path(name)) as f:
+            cur = json.load(f)
+            if not cur["files"].keys() >= drop.keys():
+                return False
+            files = {p: n for p, n in cur["files"].items() if p not in drop} | add
+            self._write_json(f.name, {"version": cur["version"] + 1, "files": files})
+            return True
+
     def _write_meta(self, meta: TableMeta) -> None:
-        tmp = self._meta_path(meta.name) + ".tmp"
+        self._write_json(self._meta_path(meta.name), meta.to_dict())
+
+    @staticmethod
+    def _write_json(path: str, obj: dict) -> None:
+        tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump(meta.to_dict(), f, indent=1)
-        os.replace(tmp, self._meta_path(meta.name))
+            json.dump(obj, f, indent=1)
+        os.replace(tmp, path)

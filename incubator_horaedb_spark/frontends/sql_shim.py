@@ -43,7 +43,7 @@ from incubator_horaedb_spark.serving import (
     StatementInfo,
     validate_partition_table_access,
 )
-from incubator_horaedb_spark.table import Table, batch_frame
+from incubator_horaedb_spark.table import Table, batch_frame, sweep
 
 _IDENT = r"`(?:[^`]+)`|[A-Za-z_][\w]*"
 
@@ -318,6 +318,7 @@ class Engine:
     def __init__(self, spark: SparkSession, root: str, schema: str = "public"):
         self.spark = spark
         self.catalog = Catalog(root, schema)
+        sweep(spark, self.catalog)
         # execute_sql toggles session-global conf (caseSensitive) around
         # each statement; concurrent HTTP threads interleaving save/restore
         # could strand the conf or run a statement under the wrong
@@ -641,16 +642,8 @@ class Engine:
                 df = df.toDF(*[_unquote(c) for c in ms.group(3).split(",")])
             else:
                 df = df.toDF(*[c.name for c in meta.schema.columns][: len(df.columns)])
-            # write first, then count the written batch by its sequence
-            # number — a parquet-stats count, so the SELECT evaluates once
-            seq = Table(self.spark, self.catalog, name).write(df)
-            from incubator_horaedb_spark.schema import SEQ_COLUMN
-
-            return (
-                self.spark.read.parquet(self.catalog.data_dir(name))
-                .filter(F.col(SEQ_COLUMN) == seq)
-                .count()
-            )
+            # counted from the committed files' footers: the SELECT runs once
+            return Table(self.spark, self.catalog, name).write_counted(df)
 
         # optional TABLE keyword: `INSERT INTO TABLE t ...` (alter_table.sql)
         m = re.match(

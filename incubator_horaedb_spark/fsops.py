@@ -1,24 +1,25 @@
-"""Filesystem operations for maintenance rewrites, via the Hadoop
-FileSystem API.
+"""Filesystem operations on table data files, via the Hadoop FileSystem
+API.
 
 The reference's compaction/TTL machinery manipulates SST files through its
 ObjectStore abstraction (src/analytic_engine compaction + retention), which
 works identically over local disk and S3/OSS.  The Spark-side equivalent is
 ``org.apache.hadoop.fs.FileSystem``: every path the session can read
 (file://, hdfs://, s3a://, gs://, abfs://) resolves to the right FS
-implementation, so maintenance code written against this module runs
+implementation, so the commit code written against this module runs
 unchanged on a real cluster over object storage — unlike ``os.listdir`` /
 ``shutil.rmtree`` / ``os.replace``, which silently assume a POSIX local
 disk (VERDICT r03, What's wrong #4).
 
-Rename on S3A is copy+delete (not atomic); that matches what Hadoop's own
-FileOutputCommitter does and is the accepted commit primitive for
-directory-granular maintenance rewrites.  Readers racing a rewrite see
-either the old or the new segment listing — the same guarantee the
-reference offers between SST purge and manifest flip.
+Nothing here decides visibility — only the catalog's file list does
+(catalog.py) — so a move need not be atomic: on S3A it is copy+delete.
 """
 
 from __future__ import annotations
+
+import functools
+import re
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,54 +29,57 @@ from pyspark.sql import DataFrame, SparkSession
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
+# A py4j round trip costs ~0.2 ms plus a GIL wait under load: JVM classes (a trip
+# per hop of jvm.org.apache...) and FileSystems are looked up once per JVM.
+_FILESYSTEMS: dict[tuple, object] = {}
+_STATUS_RE = re.compile(r"path=([^;]+); isDirectory=(true|false)(?:; length=(\d+))?")
+
+
+@functools.cache
+def _jvm_class(jvm, name: str):
+    return functools.reduce(getattr, name.split("."), jvm)
+
+
 def _jvm_path(spark: SparkSession, path: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(path)  # type: ignore[union-attr]
+    return _jvm_class(spark._jvm, "org.apache.hadoop.fs.Path")(path)
 
 
 def hadoop_fs(spark: SparkSession, path: str):
     """The FileSystem owning ``path`` (local, HDFS, S3A, ... by scheme)."""
     jpath = _jvm_path(spark, path)
-    conf = spark._jsc.hadoopConfiguration()  # type: ignore[union-attr]
-    return jpath.getFileSystem(conf), jpath
+    key = (spark._jvm, *urlsplit(path)[:2])
+    if key not in _FILESYSTEMS:
+        _FILESYSTEMS[key] = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return _FILESYSTEMS[key], jpath
 
 
-def exists(spark: SparkSession, path: str) -> bool:
-    fs, jpath = hadoop_fs(spark, path)
-    return bool(fs.exists(jpath))
-
-
-def list_dirs(spark: SparkSession, path: str, prefix: str = "") -> list[str]:
-    """Names (not full paths) of child directories, optionally filtered by
-    prefix — one LIST call, metadata only."""
-    fs, jpath = hadoop_fs(spark, path)
+def list_files(spark: SparkSession, root: str) -> dict[str, int]:
+    """``root``-relative path → bytes of every parquet file under ``root``; each
+    directory's entries come in one round trip, parsed from their ``toString``."""
+    fs, jpath = hadoop_fs(spark, root)
     if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        if st.isDirectory():
-            name = st.getPath().getName()
-            if name.startswith(prefix):
-                out.append(name)
-    return sorted(out)
+        return {}
+    base = len(str(fs.makeQualified(jpath))) + 1
+    to_list = _jvm_class(spark._jvm, "org.apache.hadoop.util.functional.RemoteIterators").toList
+    out, todo = {}, [jpath]
+    while todo:
+        entries = to_list(fs.listStatusIterator(todo.pop())).toString()
+        for path, is_dir, n in _STATUS_RE.findall(entries):
+            if is_dir == "true":
+                todo.append(_jvm_path(spark, path))
+            elif path.endswith(".parquet"):
+                out[path[base:]] = int(n)
+    return out
 
 
-def dir_bytes(spark: SparkSession, path: str) -> int:
-    """Total data bytes under ``path`` (recursive content summary — a
-    metadata call, no data read)."""
+def delete(spark: SparkSession, path: str, recursive: bool = True) -> bool:
+    """Delete a file or directory (a bulk key delete on object stores)."""
     fs, jpath = hadoop_fs(spark, path)
-    if not fs.exists(jpath):
-        return 0
-    return int(fs.getContentSummary(jpath).getLength())
-
-
-def delete(spark: SparkSession, path: str) -> bool:
-    """Recursive delete.  On object stores this is a bulk key delete."""
-    fs, jpath = hadoop_fs(spark, path)
-    return bool(fs.delete(jpath, True))
+    return bool(fs.delete(jpath, recursive))
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """Directory move (atomic on HDFS/local; copy+delete on S3A — the same
+    """Move a file (atomic on HDFS/local; copy+delete on S3A — the same
     primitive Hadoop's committer algorithms use)."""
     fs, jsrc = hadoop_fs(spark, src)
     return bool(fs.rename(jsrc, _jvm_path(spark, dst)))

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import datetime
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -367,8 +368,6 @@ class EngineServer:
             # PUT /debug/slow_threshold re-tunes at runtime
             took = _time.monotonic() - t0
             if took >= self.slow_threshold_secs:
-                import logging
-
                 self.metrics.slow_queries.inc()
                 logging.getLogger("incubator_horaedb_spark.server").warning(
                     "slow query (%.3fs >= %ds): %.200s",
@@ -487,7 +486,8 @@ class EngineServer:
             try:
                 Table(self.engine.spark, self.engine.catalog, name).compact()
                 success.append(name)
-            except Exception:  # noqa: BLE001 — per-table isolation, like the reference
+            except Exception as e:  # noqa: BLE001 — per-table isolation, like the reference
+                logging.getLogger(__name__).warning("flush_memtable: %r failed: %s", name, e)
                 failed.append(name)
         return {"success": success, "failed": failed}
 
@@ -554,7 +554,7 @@ class EngineServer:
         ]
         for name in self.engine.catalog.list_tables():
             meta = self.engine.catalog.get(name)
-            segs = Table(self.engine.spark, self.engine.catalog, name)._segment_dirs()
+            segs = Table(self.engine.spark, self.engine.catalog, name)._leaves()
             lines.append(
                 f"table={name} next_seq={meta.next_seq} segments={len(segs)}"
             )

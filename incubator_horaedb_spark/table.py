@@ -11,7 +11,8 @@ src/analytic_engine/src/instance/write.rs):
   first batch via the reference ladder when unset, sampler.rs:42-51);
 - parquet append partitioned by ``__segment`` — at 100 TB the partition
   column is what makes time-range queries prune (predicate.rs TimeRange →
-  partition pruning);
+  partition pruning); each append is staged privately and committed by
+  the catalog's file list (``Table._commit``), so appends take no lock;
 - a request's rows held on the driver (protocol writes, INSERT VALUES,
   COPY/LOAD) enter as one Arrow-backed local relation (``batch_frame``),
   so one task writes one file per segment the request touches.
@@ -26,24 +27,26 @@ src/analytic_engine/src/row_iter/):
   enable_ttl (table_options.rs:60); whole segments are dropped only by
   ``ttl_expire``.
 
-``Table.read`` is the one scan: partition pruning, segment/time bounds,
-the sequence snapshot, TTL and the dedup window compose in it.
+``Table.read`` is the one scan, of the listed files: partition pruning,
+segment/time bounds, the sequence snapshot, TTL and the dedup window.
 
-Maintenance walks every segment leaf, ``[__partition=P/]__segment=S``
+Maintenance walks every listed leaf, ``[__partition=P/]__segment=S``
 (compaction/picker.rs runs on every partition's segments): ``compact``
-rewrites a segment's many small files into few, applying the dedup so read
+rewrites a leaf's many small files into few, applying the dedup so read
 amplification drops — the TimeWindow picker analogue; ``optimize_zorder``
 uses the same rewrite loop, ``ttl_expire`` the same walk.
 """
 
 from __future__ import annotations
 
-import re
-import threading
+import contextlib
 import time
+import uuid
 from collections.abc import Callable
 
 import pyarrow as pa
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -59,15 +62,13 @@ from incubator_horaedb_spark.partition import (
 )
 from incubator_horaedb_spark.schema import SEGMENT_COLUMN, SEQ_COLUMN, TSID_COLUMN
 
-# one append lock per table data directory (see Table.write)
-_WRITE_LOCKS: dict[str, threading.Lock] = {}
-_WRITE_LOCKS_GUARD = threading.Lock()
+# commits' private write areas, under the data dir (dot: Spark skips it)
+STAGING = ".staging"
+_SPARK_ERRORS = (PySparkException, Py4JJavaError)  # what a Spark call raises
 
-
-def _write_lock(data_dir: str) -> threading.Lock:
-    with _WRITE_LOCKS_GUARD:
-        return _WRITE_LOCKS.setdefault(data_dir, threading.Lock())
-
+# Table.read's base scan per (session, data dir) while file list and read schema
+# hold: planning a file list costs ~50 ms, +370 ms above 32 paths (local[4])
+_SCANS: dict[tuple, tuple[tuple, DataFrame]] = {}
 
 # Arrow type and accepted Python value types of each batch column kind.
 # The value types are checked before the Arrow build because pyarrow
@@ -114,10 +115,6 @@ def batch_frame(spark: SparkSession, rows: list[dict], kinds: dict[str, str]) ->
     return spark.createDataFrame(table).coalesce(fsops.n_output_files(table.nbytes))
 
 
-_SEGMENT_DIR_RE = re.compile(f"^{SEGMENT_COLUMN}=\\d+$")
-_PARTITION_DIR_RE = re.compile(f"^{PARTITION_COLUMN}=\\d+$")
-
-
 def _read_schema(meta) -> T.StructType:
     """Explicit read schema = current table schema (+ internals) so old
     segments written before an ALTER ADD COLUMN read the new column as
@@ -150,15 +147,14 @@ class Table:
 
     # ------------------------------------------------------------- write --
     def write(self, df: DataFrame) -> int:
-        """Append one batch; returns the assigned sequence number.
+        """Append one batch; returns the assigned sequence number."""
+        return self._append(df)[0]
 
-        Serialized per table: concurrent append jobs into one directory
-        share its ``_temporary/0`` staging dir, and the first commit deletes
-        it under the others (failed writes whose rows still land)."""
-        with _write_lock(self.catalog.data_dir(self.name)):
-            return self._append(df)
+    def write_counted(self, df: DataFrame) -> int:
+        """Append one batch; returns its row count, from its files' footers."""
+        return self._scan(self.meta, self._append(df)[1]).count()
 
-    def _append(self, df: DataFrame) -> int:
+    def _append(self, df: DataFrame) -> tuple[int, dict[str, int]]:
         meta = self.meta
         schema = meta.schema
 
@@ -265,13 +261,34 @@ class Table:
             df = df.sortWithinPartitions(
                 *part_cols, *[c for c in meta.options.sampled_sort_key if c in df.columns]
             )
-        (
-            df.write.mode("append")
-            .option("compression", meta.options.compression.lower())
-            .partitionBy(*part_cols)
-            .parquet(self.catalog.data_dir(self.name))
-        )
-        return seq
+        writer = df.write.option("compression", meta.options.compression.lower())
+        return seq, self._commit(writer.partitionBy(*part_cols).parquet, {})
+
+    # ------------------------------------------------------------ commit --
+    def _commit(self, write: Callable[[str], None] | None, drop: dict[str, int]):
+        """``write(staging)`` files laid out as leaves, move them in, publish a file
+        list adding them and dropping ``drop``, delete ``drop``; return the files
+        added — or, if a commit replaced part of ``drop`` first, delete them, None.
+        A failure or crash before the publish leaves only unlisted files (``sweep``)."""
+        data = self.catalog.data_dir(self.name)
+        staging = f"{data}/{STAGING}/{uuid.uuid4().hex}"
+        try:
+            if write:
+                write(staging)
+            added = fsops.list_files(self.spark, staging)
+            for path in added:
+                src, dst = f"{staging}/{path}", f"{data}/{path}"
+                if not fsops.rename(self.spark, src, dst):  # a new leaf: make it, retry
+                    fsops.mkdirs(self.spark, dst.rsplit("/", 1)[0])
+                    if not fsops.rename(self.spark, src, dst):
+                        raise IOError(f"commit: move {src} into {data} failed")
+            published = self.catalog.publish(self.name, added, drop)
+        finally:
+            fsops.delete(self.spark, staging)
+        for path in drop if published else added:
+            if not fsops.delete(self.spark, f"{data}/{path}"):
+                raise IOError(f"commit: delete {data}/{path} failed (reclaimed at next open)")
+        return added if published else None
 
     # -------------------------------------------------------------- read --
     def last_seq(self) -> int:
@@ -293,18 +310,19 @@ class Table:
         newest-per-primary-key — the one scan every reader builds.
 
         Steps, in order:
-        - ``filters`` (column → value or list of values) on a
-          key-partitioned table become a ``__partition IN (...)`` predicate
-          below the dedup window, which Spark turns into partition
-          directory pruning (locate_partitions_for_read, key.rs:192-230);
-          dedup-safe because every row of a primary key shares its
-          partition id.  On other tables they filter the deduped rows.
+        - ``filters`` (column → value or list of values) on the partition
+          keys of a key-partitioned table also become a ``__partition IN
+          (...)`` predicate below the dedup window, which Spark turns into
+          partition pruning (locate_partitions_for_read, key.rs:192-230);
+          dedup-safe because every row of a primary key shares them.  Other
+          filters apply to the deduped rows (below, they would resurrect a
+          superseded version).
         - time bounds ``[lo_ms, hi_ms)`` also bound ``__segment``
           (predicate.rs:180-197 TimeRange → storage pruning).  A plain
           ``read().filter(t >= lo)`` cannot prune: Catalyst will not invert
           ``__segment = ts DIV segment_duration``, but DIV is monotone, so
           t ∈ [lo, hi) ⇒ __segment ∈ [lo DIV d, (hi-1) DIV d].  The segment
-          predicate prunes directories at file listing, the timestamp
+          predicate prunes whole leaves at planning, the timestamp
           predicate trims the edge segments row-exactly.  Both sit below
           the dedup window, which is safe because the timestamp is part of
           the effective primary key (schema.rs:628): every version of a
@@ -327,17 +345,27 @@ class Table:
         schema, so every step applies to it unchanged."""
         meta = self.meta
         schema, opts = meta.schema, meta.options
-        data = self.catalog.data_dir(self.name)
-        layout = (f"{SEGMENT_COLUMN}=", f"{PARTITION_COLUMN}=")
-        if any(d.startswith(layout) for d in fsops.list_dirs(self.spark, data)):
-            df = self.spark.read.schema(_read_schema(meta)).parquet(data)
-        else:
-            df = self.spark.createDataFrame([], _read_schema(meta))
+        key = (self.spark, self.catalog.data_dir(self.name))
+        while True:
+            files = self.catalog.files(self.name)
+            token, hit = (tuple(sorted(files)), _read_schema(meta).json()), _SCANS.get(key)
+            try:
+                if hit is None or hit[0] != token:
+                    hit = _SCANS[key] = (token, self._scan(meta, files))
+            except _SPARK_ERRORS:
+                if files.keys() <= self.catalog.files(self.name).keys():
+                    raise
+                continue  # Spark checks each path at planning; a commit dropped some
+            if files.keys() <= self.catalog.files(self.name).keys():  # else being deleted
+                break
+        df = hit[1]
 
         if filters and opts.partition_keys:
-            df = df.filter(
-                pruned_filter(self.spark, opts.partition_keys, opts.num_partitions, filters)
-            )
+            append = opts.update_mode == "APPEND"  # no dedup window
+            below = {c: v for c, v in filters.items() if append or c in opts.partition_keys}
+            keys, n = opts.partition_keys, opts.num_partitions
+            df = df.filter(pruned_filter(self.spark, keys, n, below))
+            filters = {c: v for c, v in filters.items() if c not in below}
         seg_ms = opts.segment_duration_ms
         if seg_ms:
             seg = F.col(SEGMENT_COLUMN)
@@ -362,15 +390,23 @@ class Table:
         if with_internal:
             keep = keep + ([TSID_COLUMN] if schema.tsid_mode else []) + [SEQ_COLUMN]
         df = df.select(*keep)
-        if filters and not opts.partition_keys:
+        if filters:
             for c, v in filters.items():
                 df = df.filter(
                     F.col(c).isin(list(v)) if isinstance(v, (list, tuple, set)) else (F.col(c) == v)
                 )
         return df
 
+    def _scan(self, meta, files) -> DataFrame:
+        """``files`` (data-dir-relative) read with the table's read schema."""
+        data, schema = self.catalog.data_dir(self.name), _read_schema(meta)
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        reader = self.spark.read.schema(schema).option("basePath", data)
+        return reader.parquet(*[f"{data}/{p}" for p in files])
+
     # -------------------------------------------------------- maintenance --
-    # All three maintenance ops route list/delete/rename through the Hadoop
+    # All three maintenance ops route list/move/delete through the Hadoop
     # FileSystem API (fsops) so they run unchanged over object storage —
     # os.listdir/shutil surgery only exists on a POSIX local disk — and
     # size rewrites to ~128 MB output files via repartition[ByRange]
@@ -378,109 +414,35 @@ class Table:
     # through one single-threaded task (compaction/picker.rs sizes SST
     # outputs the same way).
 
-    def _segment_dirs(self, root: str | None = None) -> list[tuple[str, str]]:
-        """(leaf, full path) of every segment directory under ``root``
-        (default: the data dir).  A leaf is the layout ``_append`` writes:
-        ``__segment=S``, or ``__partition=P/__segment=S`` on a partitioned
-        table.
-
-        Strictly ``<digits>`` values — anything else under the data dir (a
-        crashed rewrite's leftovers, a foreign file) is not a segment and
-        must not reach ttl_expire's int() or the rewrite loop."""
-        root = root or self.catalog.data_dir(self.name)
-        leaves = []
-        for d in fsops.list_dirs(self.spark, root):
-            if _SEGMENT_DIR_RE.match(d):
-                leaves.append(d)
-            elif _PARTITION_DIR_RE.match(d):
-                leaves += [
-                    f"{d}/{s}"
-                    for s in fsops.list_dirs(self.spark, f"{root}/{d}")
-                    if _SEGMENT_DIR_RE.match(s)
-                ]
-        return [(leaf, f"{root}/{leaf}") for leaf in leaves]
-
-    # Rewrite staging/rollback areas, mirroring the leaf path (the same
-    # __segment=S exists under several partitions).  Dot-prefixed so
-    # Spark's file listing (which skips '.'/'_'-prefixed paths) never
-    # discovers them as data — a crashed rewrite can leave them behind
-    # without polluting reads or partition discovery.
-    _TMP, _ASIDE = ".rewrite-tmp", ".rewrite-old"
-
-    def _recover_stale_rewrites(self) -> None:
-        """Crash recovery before any rewrite: drop half-written tmp output;
-        for each aside segment, restore it if the live directory is missing
-        (a crash hit between the two commit renames), else it is a
-        committed rewrite whose cleanup delete was lost — drop it.  The
-        walk goes down to segments: a live ``__partition=P`` directory says
-        nothing about whether its segment ``S`` is live."""
-        data = self.catalog.data_dir(self.name)
-        fsops.delete(self.spark, f"{data}/{self._TMP}")
-        for leaf, aside in self._segment_dirs(f"{data}/{self._ASIDE}"):
-            live = f"{data}/{leaf}"
-            if fsops.exists(self.spark, live):
-                fsops.delete(self.spark, aside)
-                continue
-            fsops.mkdirs(self.spark, live.rsplit("/", 1)[0])
-            if not fsops.rename(self.spark, aside, live):
-                raise IOError(f"recovery rename failed: {aside} -> {live}")
-
-    def _commit_rewrite(self, src: str, tmp: str, aside: str) -> None:
-        """Swap the rewritten directory in: rename the live segment aside,
-        rename the tmp output into place, then delete the aside copy.
-
-        Real guarantee (not stronger): on HDFS/local each rename is atomic,
-        so a racing reader's listing sees the old segment, the new segment,
-        or — for the one-metadata-op window between the two renames — the
-        segment absent; never a merge of old and new files.  A scan that
-        already PLANNED over pre-rewrite files and executes after the swap
-        fails loudly (Spark FILE_NOT_EXIST) rather than returning partial
-        data — optimistic concurrency: wrong answers are impossible,
-        conflicting readers retry (tests/test_maintenance_commit.py).  On
-        S3A rename is copy+delete, so the absent window extends over the
-        copy; the aside copy is a rollback path either way — a crash at
-        any point is recoverable by _recover_stale_rewrites (the reference
-        gets its manifest-flip guarantee from a meta-store pointer, which
-        directory-granular storage cannot replicate; catalog.py documents
-        that boundary).  Every FS call's boolean is checked: Hadoop
-        reports most rename failures by returning false, and a silently
-        failed rename here would lose the segment while compact() counts
-        it as rewritten."""
-        fsops.mkdirs(self.spark, aside.rsplit("/", 1)[0])
-        if not fsops.rename(self.spark, src, aside):
-            raise IOError(f"rewrite commit: rename {src} -> {aside} failed")
-        if not fsops.rename(self.spark, tmp, src):
-            # roll back so the segment is not lost, then fail loudly
-            if not fsops.rename(self.spark, aside, src):
-                raise IOError(
-                    f"rewrite commit: rename {tmp} -> {src} failed AND rollback "
-                    f"{aside} -> {src} failed; segment preserved at {aside}"
-                )
-            raise IOError(f"rewrite commit: rename {tmp} -> {src} failed (rolled back)")
-        if not fsops.delete(self.spark, aside):
-            raise IOError(f"rewrite commit: cleanup delete {aside} failed")
+    def _leaves(self) -> dict[str, dict[str, int]]:
+        """leaf (``[__partition=P/]__segment=S``) → {file: bytes}, listed."""
+        leaves: dict[str, dict[str, int]] = {}
+        for path, size in sorted(self.catalog.files(self.name).items()):
+            leaves.setdefault(path.rsplit("/", 1)[0], {})[path] = size
+        return leaves
 
     def _rewrite_segments(
         self, shape: Callable[[DataFrame, int], DataFrame], target_file_bytes: int
     ) -> int:
-        """The one per-segment rewrite loop under ``compact`` and
-        ``optimize_zorder``: each leaf is read, passed through
-        ``shape(df, nfiles)`` with ``nfiles`` sized to ``target_file_bytes``,
-        written to its tmp path and committed.  A clean pass leaves no
-        staging directories.  Passes over one table must not overlap: this
-        cleanup, like recovery's tmp drop, assumes no other pass is in
-        flight.  Returns the number of rewritten segments."""
-        self._recover_stale_rewrites()
-        data = self.catalog.data_dir(self.name)
-        leaves = self._segment_dirs()
-        for leaf, src in leaves:
-            nfiles = fsops.n_output_files(fsops.dir_bytes(self.spark, src), target_file_bytes)
-            tmp = f"{data}/{self._TMP}/{leaf}"
-            shape(self.spark.read.parquet(src), nfiles).write.mode("overwrite").parquet(tmp)
-            self._commit_rewrite(src, tmp, f"{data}/{self._ASIDE}/{leaf}")
-        for staging in (self._TMP, self._ASIDE):
-            fsops.delete(self.spark, f"{data}/{staging}")
-        return len(leaves)
+        """The one per-leaf rewrite loop under ``compact`` and ``optimize_zorder``:
+        each leaf's files are read with the table's read schema, passed through
+        ``shape(df, nfiles)`` (``nfiles`` sized to ``target_file_bytes``) and
+        committed in place of exactly the files read.  Returns leaves rewritten."""
+        meta = self.meta
+        rewritten = 0
+        for leaf, files in self._leaves().items():
+
+            def write(staging: str) -> None:
+                try:
+                    df = self._scan(meta, files).drop(SEGMENT_COLUMN, PARTITION_COLUMN)
+                    nfiles = fsops.n_output_files(sum(files.values()), target_file_bytes)
+                    shape(df, nfiles).write.parquet(f"{staging}/{leaf}")
+                except _SPARK_ERRORS:
+                    if files.keys() <= self.catalog.files(self.name).keys():
+                        raise  # else an overlapping pass replaced them: the commit fails
+
+            rewritten += self._commit(write, files) is not None
+        return rewritten
 
     def compact(self, target_file_bytes: int = fsops.TARGET_FILE_BYTES) -> int:
         """Rewrite each segment into compacted, sort-clustered files,
@@ -491,7 +453,7 @@ class Table:
 
         def shape(df: DataFrame, nfiles: int) -> DataFrame:
             if meta.options.update_mode == "OVERWRITE":
-                df = _dedup(df, [c for c in pk if c in df.columns] or pk).drop("__rn")
+                df = _dedup(df, pk).drop("__rn")
             sort_key = [c for c in (meta.options.sampled_sort_key or []) if c in df.columns]
             if not sort_key:
                 return df.repartition(nfiles) if nfiles > 1 else df.coalesce(1)
@@ -552,18 +514,32 @@ class Table:
 
     def ttl_expire(self, now_ms: int | None = None) -> int:
         """Drop whole segments beyond TTL (segment-level TTL purge —
-        src/analytic_engine retention).  Metadata-only: the segment walk's
-        LISTs plus one recursive delete per expired segment, no data read.
-        Returns segments dropped."""
+        src/analytic_engine retention).  Metadata-only: one commit that
+        drops the files per expired leaf, no data read.  Returns leaves
+        dropped."""
         meta = self.meta
         if not meta.options.enable_ttl or meta.options.segment_duration_ms is None:
             return 0
         now_ms = int(time.time() * 1000) if now_ms is None else now_ms
         cutoff_seg = (now_ms - meta.options.ttl_ms) // meta.options.segment_duration_ms
         dropped = 0
-        for leaf, src in self._segment_dirs():
+        for leaf, files in self._leaves().items():
             # a segment is expired only when its whole range is expired
-            if int(leaf.rsplit("=", 1)[1]) + 1 <= cutoff_seg:
-                fsops.delete(self.spark, src)
+            expired = int(leaf.rsplit("=", 1)[1]) + 1 <= cutoff_seg
+            if expired and self._commit(None, files) is not None:
+                leaf_dir = f"{self.catalog.data_dir(self.name)}/{leaf}"
+                if not fsops.list_files(self.spark, leaf_dir):  # unlisted files wait for sweep
+                    fsops.delete(self.spark, leaf_dir, recursive=False)
                 dropped += 1
         return dropped
+
+
+def sweep(spark: SparkSession, catalog: Catalog) -> None:
+    """At store open, delete the parquet files no file list names (a crashed
+    commit's).  A table from before file lists has none: left untouched."""
+    for name in catalog.list_tables():
+        data = catalog.data_dir(name)
+        with contextlib.suppress(FileNotFoundError):
+            for path in fsops.list_files(spark, data).keys() - catalog.files(name).keys():
+                fsops.delete(spark, f"{data}/{path}")
+            fsops.delete(spark, f"{data}/{STAGING}")

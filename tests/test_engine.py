@@ -140,6 +140,30 @@ def test_alter_add_column_old_rows_null(engine):
         engine.execute_sql("ALTER TABLE a1 ADD COLUMN (t timestamp)")
 
 
+def test_compaction_keeps_added_column_values(engine):
+    """compact() reads each leaf with the table's schema, not one file's:
+    a leaf holding files from before and after ALTER ADD COLUMN keeps the
+    added column's values.  Eight segments, so eight independent leaves
+    each get the chance to pick the pre-ALTER file's schema."""
+    engine.execute_sql(
+        "CREATE TABLE a2 (v double, t timestamp NOT NULL, timestamp KEY (t)) "
+        "ENGINE=Analytic WITH(enable_ttl='false', update_mode='APPEND', segment_duration='2h')"
+    )
+    seg_ms = 2 * 3_600_000
+    engine.execute_sql(
+        "INSERT INTO a2 (v, t) VALUES " + ", ".join(f"({s}, {s * seg_ms})" for s in range(8))
+    )
+    engine.execute_sql("ALTER TABLE a2 ADD COLUMN (c string)")
+    engine.execute_sql(
+        "INSERT INTO a2 (v, t, c) VALUES "
+        + ", ".join(f"({s + 0.5}, {s * seg_ms + 1}, 'c{s}')" for s in range(8))
+    )
+    expected = [(float(s), None) for s in range(8)] + [(s + 0.5, f"c{s}") for s in range(8)]
+    assert engine.table("a2").compact() == 8
+    out = engine.execute_sql("SELECT v, c FROM a2")
+    assert sorted(_rows(out, "v", "c")) == sorted(expected)
+
+
 def test_ttl_read_filter_and_expire(engine, spark):
     engine.execute_sql(
         "CREATE TABLE ttl1 (v double, t timestamp NOT NULL, timestamp KEY (t)) "
@@ -190,14 +214,9 @@ def test_compaction_sizes_output_files(engine, spark):
     assert tbl.compact(target_file_bytes=4 * 1024) >= 1
     after = sorted(r["v"] for r in tbl.read().collect())
     assert after == before
-    data = engine.catalog.data_dir("csz")
-    seg = fsops.list_dirs(spark, data, prefix="__segment=")[0]
-    fs, jpath = fsops.hadoop_fs(spark, f"{data}/{seg}")
-    parquet_files = [
-        st.getPath().getName()
-        for st in fs.listStatus(jpath)
-        if st.getPath().getName().endswith(".parquet")
-    ]
+    # all rows sit in __segment=0; what the file list names is on disk
+    parquet_files = fsops.list_files(spark, engine.catalog.data_dir("csz"))
+    assert parquet_files.keys() == engine.catalog.files("csz").keys()
     assert len(parquet_files) > 1, parquet_files
 
 

@@ -6,6 +6,7 @@ the reference's cluster-only /debug/shards error."""
 from __future__ import annotations
 
 import json
+import logging
 import urllib.error
 import urllib.request
 
@@ -13,6 +14,7 @@ import pytest
 
 from incubator_horaedb_spark.frontends.sql_shim import Engine
 from incubator_horaedb_spark.server import EngineServer
+from incubator_horaedb_spark.table import Table
 
 
 @pytest.fixture()
@@ -167,6 +169,32 @@ def test_debug_flush_memtable_compacts_tables(server):
     assert resp == {"success": ["demo"], "failed": []}
     # table still reads correctly after the maintenance pass
     assert len(_sql(server, "select * from demo")["rows"]) == 2
+
+
+def test_debug_flush_memtable_reports_failed_compact(server, monkeypatch, caplog):
+    """A table whose compact() raises is answered in "failed" and logged
+    once with its name and the error; the other tables still compact."""
+    _mk_demo(server)
+    _sql(
+        server,
+        "CREATE TABLE other (name string TAG, value double NOT NULL, "
+        "t timestamp NOT NULL, TIMESTAMP KEY(t)) ENGINE=Analytic with(enable_ttl='false')",
+    )
+    real = Table.compact
+
+    def compact(self, *a, **k):
+        if self.name == "demo":
+            raise IOError("disk full")
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(Table, "compact", compact)
+    with caplog.at_level(logging.WARNING, logger="incubator_horaedb_spark.server"):
+        st, resp = _req(server, "/debug/flush_memtable", data={}, method="POST")
+    assert st == 200
+    assert resp == {"success": ["other"], "failed": ["demo"]}
+    logged = [r.getMessage() for r in caplog.records if "flush_memtable" in r.getMessage()]
+    assert len(logged) == 1
+    assert "'demo'" in logged[0] and "disk full" in logged[0]
 
 
 def test_debug_log_level_and_slow_threshold(server):

@@ -16,6 +16,10 @@ through ``table.batch_frame``; a guard fails if they call
 
 The Overwrite dedup window lives in one place (``table._dedup``), shared
 by the table scan and compaction; a guard fails if it is copied again.
+
+A table's data is reached only through its catalog file list: a guard
+fails if a package module other than ``table.py``/``catalog.py`` builds
+the data directory path.
 """
 
 from __future__ import annotations
@@ -123,3 +127,18 @@ def test_one_overwrite_dedup_window():
         if window in line
     ]
     assert len(hits) == 1 and hits[0].startswith("incubator_horaedb_spark/table.py:"), hits
+
+
+def test_table_data_only_through_the_file_list():
+    # A table's data is what its catalog file list names; reading or
+    # listing its data directory from anywhere else would see unpublished
+    # or replaced files.  Only table.py (which reads the file list) and
+    # catalog.py (which defines the path) may build the data path.
+    hits = [
+        f"{path.relative_to(REPO)}:{i}"
+        for path in (REPO / "incubator_horaedb_spark").rglob("*.py")
+        if path.name not in ("table.py", "catalog.py")
+        for i, line in enumerate(path.read_text(encoding="utf-8").splitlines(), 1)
+        if "catalog.data_dir(" in line
+    ]
+    assert not hits, "table data reached outside the file list:\n" + "\n".join(hits)

@@ -117,3 +117,22 @@ def test_empty_table_reads_empty(tables, mode, layout):
         df = tbl.read(**kwargs)
         assert df.columns == ["k", "v", "t"], case
         assert df.collect() == [], case
+
+
+@pytest.mark.parametrize("layout", list(LAYOUTS))
+def test_non_key_filter_sees_only_newest_version(spark, tmp_path, layout):
+    """On an OVERWRITE table a filter on a non-key column applies to the
+    deduped rows: with versions "old" then "new" of one key, filtering on
+    "old" returns nothing, with or without partition pruning."""
+    engine = Engine(spark, str(tmp_path / "store"))
+    engine.execute_sql(
+        f"CREATE TABLE nk (k string TAG, s string, t timestamp NOT NULL, timestamp KEY (t)) "
+        f"{LAYOUTS[layout]} ENGINE=Analytic WITH(enable_ttl='false', update_mode='OVERWRITE')"
+    )
+    for s in ("old", "new"):
+        engine.execute_sql(f"INSERT INTO nk (k, s, t) VALUES ('k1', '{s}', {BASE})")
+    tbl = engine.table("nk")
+    assert tbl.read(filters={"s": "old"}).collect() == []
+    assert tbl.read(filters={"k": "k1", "s": "old"}).collect() == []
+    assert [r["s"] for r in tbl.read(filters={"s": "new"}).collect()] == ["new"]
+    assert [r["s"] for r in tbl.read(filters={"k": ["k1"], "s": "new"}).collect()] == ["new"]

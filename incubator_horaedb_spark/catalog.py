@@ -270,10 +270,18 @@ class Catalog:
             self._write_meta(meta)
             return seq
 
-    def files(self, name: str) -> dict[str, int]:
-        """``name``'s newest file list: ``[__partition=P/]__segment=S/<file>`` → bytes."""
+    def files(self, name: str) -> tuple[int, dict[str, int]]:
+        """``name``'s newest file list: its version number and
+        ``[__partition=P/]__segment=S/<file>`` → bytes."""
         with open(self._files_path(name)) as f:
-            return json.load(f)["files"]
+            cur = json.load(f)
+            return cur["version"], cur["files"]
+
+    def seed_files(self, name: str, files: dict[str, int]) -> None:
+        """Give ``name``, written before file lists existed, its first one."""
+        with self._lock:
+            if not os.path.exists(self._files_path(name)):
+                self._write_json(self._files_path(name), {"version": 0, "files": files})
 
     def publish(self, name: str, add: dict[str, int], drop: dict[str, int]) -> bool:
         """Write ``name``'s next file list: the current minus ``drop``, plus ``add``.

@@ -43,7 +43,7 @@ from incubator_horaedb_spark.serving import (
     StatementInfo,
     validate_partition_table_access,
 )
-from incubator_horaedb_spark.table import Table, batch_frame, sweep
+from incubator_horaedb_spark.table import Table, batch_frame, forget, sweep
 
 _IDENT = r"`(?:[^`]+)`|[A-Za-z_][\w]*"
 
@@ -565,6 +565,7 @@ class Engine:
             raise ValueError(f"cannot parse DROP TABLE: {stmt!r}")
         name = _unquote(m.group(2))
         self.catalog.drop_table(name, if_exists=bool(m.group(1)))
+        forget(self.catalog, name)
         # the view registered for an earlier statement would otherwise keep
         # serving the dropped table (stale files, or an empty relation)
         self.spark.catalog.dropTempView(self._view_name(name))

@@ -39,7 +39,6 @@ uses the same rewrite loop, ``ttl_expire`` the same walk.
 
 from __future__ import annotations
 
-import contextlib
 import time
 import uuid
 from collections.abc import Callable
@@ -66,8 +65,9 @@ from incubator_horaedb_spark.schema import SEGMENT_COLUMN, SEQ_COLUMN, TSID_COLU
 STAGING = ".staging"
 _SPARK_ERRORS = (PySparkException, Py4JJavaError)  # what a Spark call raises
 
-# Table.read's base scan per (session, data dir) while file list and read schema
-# hold: planning a file list costs ~50 ms, +370 ms above 32 paths (local[4])
+# Table.read's base scan per (session, data dir) while table, file-list version
+# and read schema hold: planning a file list costs ~50 ms, +370 ms above 32 paths
+# (local[4]).  DROP TABLE lets go of a table's entries (``forget``).
 _SCANS: dict[tuple, tuple[tuple, DataFrame]] = {}
 
 # Arrow type and accepted Python value types of each batch column kind.
@@ -269,19 +269,19 @@ class Table:
         """``write(staging)`` files laid out as leaves, move them in, publish a file
         list adding them and dropping ``drop``, delete ``drop``; return the files
         added — or, if a commit replaced part of ``drop`` first, delete them, None.
-        A failure or crash before the publish leaves only unlisted files (``sweep``)."""
+        A rewrite (``write`` and ``drop``) that finds no file written raises: its
+        version would drop the rows it read.  A failure or crash before the
+        publish leaves only unlisted files (``sweep``)."""
         data = self.catalog.data_dir(self.name)
         staging = f"{data}/{STAGING}/{uuid.uuid4().hex}"
         try:
             if write:
                 write(staging)
             added = fsops.list_files(self.spark, staging)
+            if write and drop and not added:
+                raise IOError(f"commit: rewrite of {len(drop)} files found none in {staging}")
             for path in added:
-                src, dst = f"{staging}/{path}", f"{data}/{path}"
-                if not fsops.rename(self.spark, src, dst):  # a new leaf: make it, retry
-                    fsops.mkdirs(self.spark, dst.rsplit("/", 1)[0])
-                    if not fsops.rename(self.spark, src, dst):
-                        raise IOError(f"commit: move {src} into {data} failed")
+                _move(self.spark, f"{staging}/{path}", f"{data}/{path}")
             published = self.catalog.publish(self.name, added, drop)
         finally:
             fsops.delete(self.spark, staging)
@@ -347,16 +347,17 @@ class Table:
         schema, opts = meta.schema, meta.options
         key = (self.spark, self.catalog.data_dir(self.name))
         while True:
-            files = self.catalog.files(self.name)
-            token, hit = (tuple(sorted(files)), _read_schema(meta).json()), _SCANS.get(key)
+            version, files = self.catalog.files(self.name)
+            token = (meta.created_at_ms, version, _read_schema(meta).json())
+            hit = _SCANS.get(key)
             try:
                 if hit is None or hit[0] != token:
                     hit = _SCANS[key] = (token, self._scan(meta, files))
             except _SPARK_ERRORS:
-                if files.keys() <= self.catalog.files(self.name).keys():
+                if files.keys() <= self.catalog.files(self.name)[1].keys():
                     raise
                 continue  # Spark checks each path at planning; a commit dropped some
-            if files.keys() <= self.catalog.files(self.name).keys():  # else being deleted
+            if files.keys() <= self.catalog.files(self.name)[1].keys():  # else being deleted
                 break
         df = hit[1]
 
@@ -417,7 +418,7 @@ class Table:
     def _leaves(self) -> dict[str, dict[str, int]]:
         """leaf (``[__partition=P/]__segment=S``) → {file: bytes}, listed."""
         leaves: dict[str, dict[str, int]] = {}
-        for path, size in sorted(self.catalog.files(self.name).items()):
+        for path, size in sorted(self.catalog.files(self.name)[1].items()):
             leaves.setdefault(path.rsplit("/", 1)[0], {})[path] = size
         return leaves
 
@@ -433,15 +434,15 @@ class Table:
         for leaf, files in self._leaves().items():
 
             def write(staging: str) -> None:
-                try:
-                    df = self._scan(meta, files).drop(SEGMENT_COLUMN, PARTITION_COLUMN)
-                    nfiles = fsops.n_output_files(sum(files.values()), target_file_bytes)
-                    shape(df, nfiles).write.parquet(f"{staging}/{leaf}")
-                except _SPARK_ERRORS:
-                    if files.keys() <= self.catalog.files(self.name).keys():
-                        raise  # else an overlapping pass replaced them: the commit fails
+                df = self._scan(meta, files).drop(SEGMENT_COLUMN, PARTITION_COLUMN)
+                nfiles = fsops.n_output_files(sum(files.values()), target_file_bytes)
+                shape(df, nfiles).write.parquet(f"{staging}/{leaf}")
 
-            rewritten += self._commit(write, files) is not None
+            try:
+                rewritten += self._commit(write, files) is not None
+            except _SPARK_ERRORS:
+                if files.keys() <= self.catalog.files(self.name)[1].keys():
+                    raise  # else an overlapping pass replaced them first
         return rewritten
 
     def compact(self, target_file_bytes: int = fsops.TARGET_FILE_BYTES) -> int:
@@ -534,12 +535,48 @@ class Table:
         return dropped
 
 
+def _move(spark: SparkSession, src: str, dst: str) -> None:
+    """Move a file into its leaf, making the leaf when the move finds none."""
+    if not fsops.rename(spark, src, dst):
+        fsops.mkdirs(spark, dst.rsplit("/", 1)[0])
+        if not fsops.rename(spark, src, dst):
+            raise IOError(f"commit: move {src} to {dst} failed")
+
+
+def _first_file_list(spark: SparkSession, data: str, on_disk: dict[str, int]) -> dict[str, int]:
+    """The files of a table written before file lists, as its directory listing
+    read them (no ``.`` name, no ``_`` name without ``=``), after moving back
+    each leaf a crashed rename-aside rewrite left only in ``.rewrite-old/``."""
+    read = lambda p: not any(c[0] == "." or c[0] == "_" and "=" not in c for c in p.split("/"))
+    leaves = {p.rsplit("/", 1)[0] for p in on_disk if read(p)}
+    for p in [p for p in on_disk if p.startswith(".rewrite-old/")]:
+        if (path := p.split("/", 1)[1]).rsplit("/", 1)[0] not in leaves:
+            _move(spark, f"{data}/{p}", f"{data}/{path}")
+            on_disk[path] = on_disk[p]
+    return {p: n for p, n in on_disk.items() if read(p)}
+
+
+def forget(catalog: Catalog, name: str) -> None:
+    """Let go of ``name``'s memoized base scans in every session (DROP TABLE)."""
+    for key in [k for k in list(_SCANS) if k[1] == catalog.data_dir(name)]:
+        _SCANS.pop(key, None)
+
+
 def sweep(spark: SparkSession, catalog: Catalog) -> None:
     """At store open, delete the parquet files no file list names (a crashed
-    commit's).  A table from before file lists has none: left untouched."""
+    commit's) and the staging area.  A table written before file lists first
+    gets one (``_first_file_list``).
+
+    One open Engine per store: a sweep run while another Engine commits to the
+    store deletes that commit's moved files before it publishes them."""
     for name in catalog.list_tables():
         data = catalog.data_dir(name)
-        with contextlib.suppress(FileNotFoundError):
-            for path in fsops.list_files(spark, data).keys() - catalog.files(name).keys():
-                fsops.delete(spark, f"{data}/{path}")
-            fsops.delete(spark, f"{data}/{STAGING}")
+        on_disk = fsops.list_files(spark, data)
+        try:
+            listed = catalog.files(name)[1]
+        except FileNotFoundError:
+            listed = _first_file_list(spark, data, on_disk)
+            catalog.seed_files(name, listed)
+        for path in on_disk.keys() - listed.keys():
+            fsops.delete(spark, f"{data}/{path}")
+        fsops.delete(spark, f"{data}/{STAGING}")

@@ -63,7 +63,7 @@ def _mk_table(
 def _orphans(engine, name: str) -> set[str]:
     """Parquet files under the table's data dir that no version lists."""
     on_disk = fsops.list_files(engine.spark, engine.catalog.data_dir(name))
-    return on_disk.keys() - engine.catalog.files(name).keys()
+    return on_disk.keys() - engine.catalog.files(name)[1].keys()
 
 
 def _reopen(engine) -> Engine:
@@ -139,7 +139,7 @@ def test_failed_cleanup_delete_raises(engine, monkeypatch):
         tbl.compact()
     monkeypatch.undo()
     assert tbl.read().count() == 50
-    assert len(engine.catalog.files("mc3")) == 1
+    assert len(engine.catalog.files("mc3")[1]) == 1
     assert len(_orphans(engine, "mc3")) == 2
     fresh = _reopen(engine)
     assert not _orphans(fresh, "mc3")
@@ -212,7 +212,7 @@ def test_segment_dirs_filters_non_digit_names(engine, spark):
     file."""
     tbl = _mk_table(engine, "mc5", n_segments=1)
     data = engine.catalog.data_dir("mc5")
-    (live,) = engine.catalog.files("mc5")
+    (live,) = engine.catalog.files("mc5")[1]
     os.makedirs(f"{data}/__segment=0.compact")
     shutil.copy(f"{data}/{live}", f"{data}/__segment=0.compact/x.parquet")
     assert list(tbl._leaves()) == ["__segment=0"]
@@ -246,17 +246,61 @@ def test_append_acknowledged_inside_rewrite_commit_survives(engine, monkeypatch)
     assert engine.execute_sql("SELECT count(*) AS n FROM mc7").collect()[0]["n"] == 41
 
 
-def test_table_without_file_list_is_kept_at_open(engine):
-    """A table written before file lists existed has none: opening the
-    store deletes none of its files, and reading it fails loudly."""
-    _mk_table(engine, "mc9", n_segments=2)
+def test_table_without_file_list_is_adopted_at_open(engine):
+    """A table written before file lists existed gets its first one when
+    the store is opened: the files the directory listing read, plus a
+    leaf an interrupted rename-aside rewrite left only in its
+    ``.rewrite-old/`` copy.  A stale aside copy of a live leaf, a
+    half-written ``.rewrite-tmp/`` output and a crashed Spark write's
+    ``_temporary/`` file are not adopted, and the sweep deletes them."""
+    _mk_table(engine, "mc9", n_segments=3)
     data = engine.catalog.data_dir("mc9")
-    before = fsops.list_files(engine.spark, data)
     os.remove(os.path.join(engine.catalog.table_dir("mc9"), "_files.json"))
+    (seg0,) = [p for p in os.listdir(f"{data}/__segment=0") if p.endswith(".parquet")]
+    os.makedirs(f"{data}/.rewrite-old")
+    os.rename(f"{data}/__segment=1", f"{data}/.rewrite-old/__segment=1")
+    for stale in (".rewrite-old/__segment=0", ".rewrite-tmp/__segment=2", "_temporary/0"):
+        os.makedirs(f"{data}/{stale}")
+        shutil.copy(f"{data}/__segment=0/{seg0}", f"{data}/{stale}/x.parquet")
     fresh = _reopen(engine)
-    assert fsops.list_files(engine.spark, data) == before
-    with pytest.raises(FileNotFoundError):
-        fresh.table("mc9").read()
+    version, files = fresh.catalog.files("mc9")
+    assert version == 0 and sorted(p.split("/")[0] for p in files) == [
+        "__segment=0", "__segment=1", "__segment=2"
+    ]
+    assert not _orphans(fresh, "mc9")
+    tbl = fresh.table("mc9")
+    assert tbl.read().count() == 120
+    _insert(fresh, "mc9", 1, 10, tag="y")
+    assert tbl.compact() == 3
+    assert tbl.read().count() == 130
+
+
+def test_table_name_with_semicolon_keeps_rows(engine):
+    """A protocol measurement may name a table ``cpu;x``: its appends and
+    compact() see every file under that directory."""
+    from incubator_horaedb_spark.streaming.ingest import ingest_rows
+
+    for i in range(2):
+        rows = [{"ts": 1000 + 10 * i + j, "host": f"h{j}", "v": float(j)} for j in range(5)]
+        ingest_rows(engine, "cpu;x", rows, tag_cols=["host"])
+    tbl = engine.table("cpu;x")
+    assert len(engine.catalog.files("cpu;x")[1]) == 2
+    assert tbl.compact() == 1
+    assert len(engine.catalog.files("cpu;x")[1]) == 1
+    assert tbl.read(now_ms=2000).count() == 10  # auto-created: TTL on
+    assert not _orphans(engine, "cpu;x")
+
+
+def test_rewrite_that_writes_nothing_raises(engine, monkeypatch):
+    """A rewrite whose write leaves no file fails loudly instead of
+    committing a version that drops the leaf."""
+    tbl = _mk_table(engine, "mc10", n_segments=1)
+    monkeypatch.setattr(DataFrameWriter, "parquet", lambda self, path, *a, **k: None)
+    with pytest.raises(IOError, match="found none"):
+        tbl.compact()
+    monkeypatch.undo()
+    assert tbl.read().count() == 40
+    assert not _orphans(engine, "mc10")
 
 
 def test_concurrent_reader_sees_whole_segments_only(engine, spark):

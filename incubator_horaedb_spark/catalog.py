@@ -192,6 +192,11 @@ class Catalog:
         return os.path.join(self.root, self.schema)
 
     def table_dir(self, name: str) -> str:
+        """Every path of ``name`` derives from here, so this is where a name
+        that is not one path component (``../x``, ``a/b``) is refused,
+        before any write to it can be acknowledged."""
+        if name in ("", ".", "..") or any(c in name for c in "/\\\0"):
+            raise ValueError(f"invalid table name {name!r}: not one path component")
         return os.path.join(self._schema_dir(), name)
 
     def data_dir(self, name: str) -> str:

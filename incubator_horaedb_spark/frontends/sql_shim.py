@@ -712,13 +712,29 @@ class Engine:
         return len(rows)  # affected_rows (golden basic.result: INSERT → n)
 
     # ------------------------------------------------------------ queries --
-    # Spark temp-view names cannot contain '.', but the reference accepts
-    # dotted table names (OpenTSDB metrics like `sys.load` become tables,
-    # queried with backticks).  Views for such tables are registered under
-    # a mangled name and backtick-quoted references are rewritten.
-    @staticmethod
-    def _view_name(table: str) -> str:
-        return table.replace(".", "__dot__")
+    # Spark temp-view names must be plain identifiers, but a protocol write
+    # can name a table anything one path component holds (OpenTSDB metrics
+    # like `sys.load`, line-protocol measurements like `disk-io`, queried
+    # with backticks).  Views for such tables are registered under a
+    # reversible encoding of the name and backtick-quoted references are
+    # rewritten; a plain name that looks encoded is encoded too, so
+    # ``_table_name`` inverts every view name.
+    _VIEW_PREFIX = "__hex_"
+
+    @classmethod
+    def _view_name(cls, table: str) -> str:
+        if re.fullmatch(r"[A-Za-z_]\w*", table, re.A) and not table.startswith(cls._VIEW_PREFIX):
+            return table
+        return cls._VIEW_PREFIX + table.encode().hex()
+
+    @classmethod
+    def _table_name(cls, view: str) -> str:
+        if view.startswith(cls._VIEW_PREFIX):
+            try:
+                return bytes.fromhex(view[len(cls._VIEW_PREFIX) :]).decode()
+            except ValueError:
+                pass
+        return view
 
     DEFAULT_CATALOG = "horaedb"  # catalog/src/consts.rs:24 DEFAULT_CATALOG
 
@@ -763,8 +779,8 @@ class Engine:
         # optimized/physical), the closest all-stages rendering.
         stmt = re.sub(r"^explain\s+verbose\b", "EXPLAIN EXTENDED", stmt, flags=re.I)
         for t in self.catalog.list_tables():
-            if "." in t:
-                stmt = stmt.replace(f"`{t}`", f"`{self._view_name(t)}`")
+            if (view := self._view_name(t)) != t:
+                stmt = stmt.replace(f"`{t}`", f"`{view}`")
         # system catalog table reference → registered view
         stmt = re.sub(
             r"\bsystem\s*\.\s*public\s*\.\s*tables\b",
@@ -814,7 +830,7 @@ class Engine:
                 lead = self._LEAD_IDENT_RE.match(item)
                 if lead:
                     names.append(lead.group(1))
-        return {_unquote(n).replace("__dot__", ".") for n in names}
+        return {self._table_name(_unquote(n)) for n in names}
 
     def _referenced_tables(self, stmt: str) -> set[str]:
         """Catalog tables named in the statement's FROM/JOIN lists."""

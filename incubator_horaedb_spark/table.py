@@ -24,8 +24,8 @@ src/analytic_engine/src/row_iter/):
   ROW_NUMBER() OVER (PARTITION BY pk ORDER BY __seq DESC) = 1
   (merge.rs:126 need_dedup + dedup.rs keep-newest-sequence);
 - TTL: rows older than now - ttl are filtered out at read when
-  enable_ttl (table_options.rs:60); whole segments are dropped only by
-  ``ttl_expire``.
+  enable_ttl (table_options.rs:60), and wholly expired segments are pruned
+  unread; ``ttl_expire`` drops them from the file list.
 
 ``Table.read`` is the one scan, of the listed files: partition pruning,
 segment/time bounds, the sequence snapshot, TTL and the dedup window.
@@ -39,6 +39,7 @@ uses the same rewrite loop, ``ttl_expire`` the same walk.
 
 from __future__ import annotations
 
+import re
 import time
 import uuid
 from collections.abc import Callable
@@ -317,6 +318,10 @@ class Table:
           dedup-safe because every row of a primary key shares them.  Other
           filters apply to the deduped rows (below, they would resurrect a
           superseded version).
+        - TTL (table_options.rs:60): ``now_ms - ttl`` is one more lower
+          time bound (the max with ``lo_ms``), so rows older than it are
+          filtered out and wholly expired segments pruned unread, as the
+          next step describes; ``ttl_expire`` drops them from the file list.
         - time bounds ``[lo_ms, hi_ms)`` also bound ``__segment``
           (predicate.rs:180-197 TimeRange → storage pruning).  A plain
           ``read().filter(t >= lo)`` cannot prune: Catalyst will not invert
@@ -338,8 +343,6 @@ class Table:
           compaction GCs versions below the snapshot watermark when no live
           read pins them), so a snapshot older than the last compaction
           sees only the versions that survived it.
-        - TTL (table_options.rs:60): rows older than ``now_ms - ttl`` are
-          filtered out; whole segments are dropped only by ``ttl_expire``.
 
         A table with no data reads as an empty frame of the full read
         schema, so every step applies to it unchanged."""
@@ -367,6 +370,10 @@ class Table:
             keys, n = opts.partition_keys, opts.num_partitions
             df = df.filter(pruned_filter(self.spark, keys, n, below))
             filters = {c: v for c, v in filters.items() if c not in below}
+        if opts.enable_ttl:  # the TTL cut is one more lower bound
+            now_ms = int(time.time() * 1000) if now_ms is None else now_ms
+            cut = now_ms - opts.ttl_ms
+            lo_ms = cut if lo_ms is None else max(lo_ms, cut)
         seg_ms = opts.segment_duration_ms
         if seg_ms:
             seg = F.col(SEGMENT_COLUMN)
@@ -381,9 +388,6 @@ class Table:
             df = df.filter(ts_ms < hi_ms)
         if as_of_seq is not None:
             df = df.filter(F.col(SEQ_COLUMN) <= as_of_seq)
-        if opts.enable_ttl:
-            now_ms = int(time.time() * 1000) if now_ms is None else now_ms
-            df = df.filter(ts_ms >= now_ms - opts.ttl_ms)
         if opts.update_mode == "OVERWRITE":
             df = _dedup(df, schema.effective_primary_key)
 
@@ -404,7 +408,9 @@ class Table:
         if not files:
             return self.spark.createDataFrame([], schema)
         reader = self.spark.read.schema(schema).option("basePath", data)
-        return reader.parquet(*[f"{data}/{p}" for p in files])
+        # Spark globs every path it is given: escape Hadoop's glob
+        # characters so a table named `cpu[1]` reads its own files
+        return reader.parquet(*[re.sub(r"([{}\[\]*?\\])", r"\\\1", f"{data}/{p}") for p in files])
 
     # -------------------------------------------------------- maintenance --
     # All three maintenance ops route list/move/delete through the Hadoop

@@ -143,10 +143,7 @@ def test_dedup_reader_racing_ttl_expire(engine, spark):
 
     now_ms = int(_time.time() * 1000)
     seg_now = now_ms // SEG_MS
-    # two long-expired segments + fresh rows written AT now (the read
-    # path also row-filters by TTL with wall-clock now, so only the
-    # fresh rows are ever visible — ttl_expire's job is reclaiming the
-    # expired DIRECTORIES underneath the racing reader)
+    # two long-expired segments + fresh rows written AT now
     for s, seg in enumerate((seg_now - 6, seg_now - 5)):
         values = ", ".join(
             f"('s{s}k{i}', {s * 100 + i}, {seg * SEG_MS + 1000 + i})"
@@ -159,14 +156,20 @@ def test_dedup_reader_racing_ttl_expire(engine, spark):
     engine.execute_sql(f"INSERT INTO {name} (k, v, t) VALUES {values}")
     tbl = engine.table(name)
     live_keys = {f"s2k{i}" for i in range(KEYS_PER_SEG)}
+    seg_keys = [{f"s{s}k{i}" for i in range(KEYS_PER_SEG)} for s in range(2)]
+    # The reader's clock is pinned at the oldest row, so its TTL bound still
+    # opens (and shows) the segments ttl_expire drops underneath it; a
+    # wall-clock read would prune them and never race the delete.
+    read_now = (seg_now - 6) * SEG_MS + 1000
     stop = threading.Event()
+    first_read = threading.Event()
     errors: list[str] = []
-    reads: list[int] = []
+    reads: list[set[str]] = []
 
     def reader() -> None:
         while not stop.is_set():
             try:
-                rows = tbl.read().select("k", "v").collect()
+                rows = tbl.read(now_ms=read_now).select("k", "v").collect()
             except Exception as e:  # noqa: BLE001 — collected for assertion
                 msg = str(e)
                 if "FILE_NOT_EXIST" in msg or "FileNotFound" in msg:
@@ -176,25 +179,31 @@ def test_dedup_reader_racing_ttl_expire(engine, spark):
             keys = {r.k for r in rows}
             if len(keys) != len(rows):
                 errors.append("duplicate keys in dedup view during TTL purge")
-            if keys != live_keys:
+            torn = [sk for sk in seg_keys if keys & sk and not sk <= keys]
+            if torn or not live_keys <= keys or keys - live_keys - set().union(*seg_keys):
                 errors.append(f"torn TTL visibility: {sorted(keys)[:6]}...")
             for r in rows:
                 s = _seg_of(r.k)
                 i = int(r.k[r.k.index("k") + 1 :])
                 if r.v != float(s * 100 + i):
                     errors.append(f"corrupt value {r.k}={r.v}")
-            reads.append(len(keys))
+            reads.append(keys)
+            first_read.set()
 
     t = threading.Thread(target=reader)
     t.start()
     try:
+        # the race starts only once the reader has completed one read, and
+        # the reader keeps reading until ttl_expire returns
+        assert first_read.wait(timeout=300), errors[:5] or "reader never completed a read"
         dropped = tbl.ttl_expire()
     finally:
         stop.set()
         t.join()
     assert dropped == 2
     assert not errors, errors[:5]
-    assert reads
+    assert reads[0] == live_keys | seg_keys[0] | seg_keys[1]
+    assert {r.k for r in tbl.read(now_ms=read_now).select("k").collect()} == live_keys
     assert {r.k for r in tbl.read().select("k").collect()} == live_keys
 
 

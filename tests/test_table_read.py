@@ -9,6 +9,7 @@ without ``PARTITION BY KEY``, populated and empty.
 
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
@@ -136,3 +137,29 @@ def test_non_key_filter_sees_only_newest_version(spark, tmp_path, layout):
     assert tbl.read(filters={"k": "k1", "s": "old"}).collect() == []
     assert [r["s"] for r in tbl.read(filters={"s": "new"}).collect()] == ["new"]
     assert [r["s"] for r in tbl.read(filters={"k": ["k1"], "s": "new"}).collect()] == ["new"]
+
+
+@pytest.mark.parametrize("layout", list(LAYOUTS))
+def test_ttl_read_prunes_expired_segments(spark, tmp_path, layout):
+    """A TTL read bounds ``__segment`` by ``now - ttl``, so it never opens a
+    wholly expired segment: with that segment's file deleted out of band
+    (still listed, so the read reuses the scan planned before the delete)
+    the read still returns every live row."""
+    engine = Engine(spark, str(tmp_path / "store"))
+    engine.execute_sql(
+        f"CREATE TABLE tp (k string TAG, v double, t timestamp NOT NULL, timestamp KEY (t)) "
+        f"{LAYOUTS[layout]} ENGINE=Analytic WITH(enable_ttl='true', ttl='1d', "
+        "update_mode='OVERWRITE', segment_duration='2h')"
+    )
+    expired_seg = BASE // SEG_MS - 24
+    for t in (expired_seg * SEG_MS + 1000, BASE + 1000):
+        values = ", ".join(f"('k{i}', {i}, {t + i})" for i in range(4))
+        engine.execute_sql(f"INSERT INTO tp (k, v, t) VALUES {values}")
+    tbl = engine.table("tp")
+    assert tbl.read().count() == 4
+    data = engine.catalog.data_dir("tp")
+    gone = [p for p in engine.catalog.files("tp")[1] if f"__segment={expired_seg}/" in p]
+    assert gone
+    for p in gone:
+        os.remove(os.path.join(data, p))
+    assert sorted(r["v"] for r in tbl.read().collect()) == [0.0, 1.0, 2.0, 3.0]

@@ -10,12 +10,13 @@ embeddings — so per-row operator workload stays constant and sf1/sf0.1
 wall-clock ratios measure SCALING, not a shifted workload
 (VERDICT r04 next-round #6).
 
-Only the four tables the heavy bench families touch are generated
-(documents, events, embeddings, lineitem).  Output is NOT committed
-(~hundreds of MB); tools/bench_scale.py consumes it and commits the
-measured ratios to BENCH_SCALE.md.
+The tables the heavy bench families touch are generated (documents,
+events, embeddings, lineitem, orders); the small dimension tables are
+copied from sf0.1.  Output is NOT committed (~hundreds of MB); bench.py
+times it as a further tier (``SPARK_GRAFT_SF_DIR=<sf0.1 dir>,<out_dir> python
+bench.py [query ...]``), and BENCH_SCALE.md is read off that record.
 
-Usage: python tools/gen_scale_data.py [out_dir] [factor]
+Usage: python tools/gen_scale_data.py [out_dir] [factor] [table ...]
 """
 
 from __future__ import annotations

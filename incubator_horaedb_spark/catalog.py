@@ -46,6 +46,16 @@ DEFAULT_SEGMENT_DURATION_MS = 2 * 3600 * 1000  # table_options.rs:54
 DEFAULT_TTL_MS = 7 * 24 * 3600 * 1000  # table_options.rs:60
 DEFAULT_NUM_ROWS_PER_ROW_GROUP = 8192  # table_options.rs:62
 
+# the reference's SST codecs (table_options.rs:184-190) → the codec name
+# Spark's parquet writer and pyarrow's ``write_table`` take for it; LZ4 is
+# the LZ4_RAW parquet codec in both (Spark's "lz4" is Hadoop's framing)
+COMPRESSION_CODECS = {
+    "LZ4": ("lz4_raw", "lz4"),
+    "SNAPPY": ("snappy", "snappy"),
+    "ZSTD": ("zstd", "zstd"),
+    "NONE": ("none", "none"),
+}
+
 # segment-duration sampling ladder (sampler.rs:42-51)
 AVAILABLE_SEGMENT_DURATIONS_MS = [
     2 * 3600 * 1000,
@@ -124,8 +134,13 @@ class TableOptions:
             elif k == "ttl":
                 o.ttl_ms = parse_duration_ms(v)
             elif k == "num_rows_per_row_group":
+                if not v.isdigit() or int(v) <= 0:
+                    raise ValueError(f"bad num_rows_per_row_group {v!r}: want a positive integer")
                 o.num_rows_per_row_group = int(v)
             elif k == "compression":
+                if v.upper() not in COMPRESSION_CODECS:
+                    codecs = ", ".join(COMPRESSION_CODECS)
+                    raise ValueError(f"bad compression {v!r}: want one of {codecs}")
                 o.compression = v.upper()
             else:
                 o.extra[k] = v

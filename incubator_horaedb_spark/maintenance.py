@@ -12,6 +12,7 @@ per-table work is bounded by partitions touched since the last sweep.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from incubator_horaedb_spark.table import Table
@@ -39,18 +40,29 @@ def run_maintenance(
     compact: bool = True,
     expire: bool = True,
 ) -> MaintenanceReport:
-    """One sweep over ``tables`` (default: the whole catalog)."""
-    report = MaintenanceReport()
-    for name in tables if tables is not None else engine.catalog.list_tables():
+    """One sweep over ``tables`` (default: the whole catalog).  Tables are
+    swept side by side, up to one per core, as the reference's compaction
+    scheduler runs several tables' tasks at once (scheduler.rs
+    max_ongoing_tasks): each table commits through its own file list, and a
+    small table's rewrite is a one-task Spark job that leaves the other
+    cores idle."""
+    names = tables if tables is not None else engine.catalog.list_tables()
+
+    def sweep(name: str) -> tuple[int, int]:
         t = Table(engine.spark, engine.catalog, name)
-        if expire:
-            n = t.ttl_expire(now_ms=now_ms)
-            if n:
-                report.expired_segments[name] = n
-        if compact:
-            n = t.compact()
-            if n:
-                report.compacted_partitions[name] = n
+        return (
+            t.ttl_expire(now_ms=now_ms) if expire else 0,
+            t.compact() if compact else 0,
+        )
+
+    report = MaintenanceReport()
+    cores = engine.spark.sparkContext.defaultParallelism
+    with ThreadPoolExecutor(max_workers=max(1, min(len(names), cores))) as pool:
+        for name, (expired, compacted) in zip(names, pool.map(sweep, names)):
+            if expired:
+                report.expired_segments[name] = expired
+            if compacted:
+                report.compacted_partitions[name] = compacted
     return report
 
 

@@ -11,17 +11,19 @@ Spark rendering:
 - the checkpointed streaming query replaces the WAL (exactly-once
   micro-batch replay from the source);
 - ``foreachBatch`` appends through Table.write, so every micro-batch gets
-  one monotonic ``__seq`` — dedup order for Overwrite tables is total;
+  one monotonic ``__seq`` — dedup order for Overwrite tables is total — and
+  is written by a Spark job (a micro-batch is not a driver-held batch);
 - auto-create infers the TSDB schema from the batch schema (strings →
   TAG, like the protocol writes); auto-evolve adds new nullable columns.
 
 Protocol requests (line protocol, remote write, OpenTSDB put, gRPC) take
 ``ingest_rows`` instead: the request is parsed on the driver, its rows
 become one Arrow table and one JVM local relation (``table.batch_frame``,
-no Python worker), and one task appends it, one parquet file per segment
-the request touches — the memtable flush reduced to one micro-batch per
-request.  Each column's kind is picked over the whole batch: int64 and
-double widen to double, any other mix is rejected naming the column.
+no Python worker), and ``Table.write`` writes it on the driver with no
+Spark job, one parquet file per leaf the request touches — the memtable
+flush straight to an SST.  Each column's kind is picked over the whole
+batch: int64 and double widen to double, any other mix is rejected naming
+the column.
 
 Late/out-of-order data needs no special handling: rows land in whichever
 time segment their timestamp belongs to and the Overwrite dedup resolves
@@ -179,8 +181,8 @@ def ingest_rows(
     Each column's kind is picked over all rows: int64 and double mix to
     double, and any other mix raises ValueError naming the column, as do
     integers past int64.  The rows become one Arrow-backed batch
-    (``table.batch_frame``), written by one task as one parquet file per
-    segment the request touches.
+    (``table.batch_frame``), written on the driver with no Spark job as one
+    parquet file per leaf the request touches.
 
     ``tag_cols`` should come from the protocol parser's tag/field split
     (ProtocolBatch.tag_keys) — tags define the series key (tsid), so they

@@ -6,16 +6,24 @@ src/analytic_engine/src/instance/write.rs):
   SequenceNumber analogue — dedup order is total per table);
 - tsid-mode tables get the hidden ``tsid`` column = xxhash64 of tag values
   (TsidBuilder, src/interpreters/src/insert.rs:179-216);
-- rows land in time partitions ``__segment`` = ts DIV segment_duration
+- rows land in time partitions ``__segment`` = floor(ts / segment_duration)
   (segment organization, table_options.rs:54; duration sampled from the
   first batch via the reference ladder when unset, sampler.rs:42-51);
-- parquet append partitioned by ``__segment`` — at 100 TB the partition
-  column is what makes time-range queries prune (predicate.rs TimeRange →
-  partition pruning); each append is staged privately and committed by
-  the catalog's file list (``Table._commit``), so appends take no lock;
-- a request's rows held on the driver (protocol writes, INSERT VALUES,
-  COPY/LOAD) enter as one Arrow-backed local relation (``batch_frame``),
-  so one task writes one file per segment the request touches.
+- parquet files laid out as ``[__partition=P/]__segment=S`` leaves — at
+  100 TB the partition columns are what make time-range queries prune
+  (predicate.rs TimeRange → partition pruning); each append is staged
+  privately and committed by the catalog's file list (``Table._commit``),
+  so appends take no lock;
+- one set of Spark expressions computes the stored rows (casts, defaults,
+  tsid, ``__seq``, ``__segment``, ``__partition``), and one plan-shape rule
+  picks the writer.  A request's rows held on the driver (protocol writes,
+  INSERT VALUES, COPY/LOAD) enter as one Arrow-backed local relation
+  (``batch_frame``); Catalyst folds those expressions into a new local
+  relation, which is collected with no Spark job and written by pyarrow,
+  one file per leaf the request touches — the memtable flush straight to
+  an SST (sst/parquet/writer.rs).  Every other frame (INSERT … SELECT,
+  CTAS, streaming micro-batches) is written by a Spark job, as compaction
+  is.
 
 Read path (replaces MergeIterator/DedupIterator/ChainIterator,
 src/analytic_engine/src/row_iter/):
@@ -45,14 +53,20 @@ import uuid
 from collections.abc import Callable
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from incubator_horaedb_spark import fsops
-from incubator_horaedb_spark.catalog import Catalog, pick_segment_duration_ms
+from incubator_horaedb_spark.catalog import (
+    COMPRESSION_CODECS,
+    Catalog,
+    pick_segment_duration_ms,
+)
 from incubator_horaedb_spark.functions.hashing import tsid_expr
 from incubator_horaedb_spark.partition import (
     PARTITION_COLUMN,
@@ -64,6 +78,8 @@ from incubator_horaedb_spark.schema import SEGMENT_COLUMN, SEQ_COLUMN, TSID_COLU
 
 # commits' private write areas, under the data dir (dot: Spark skips it)
 STAGING = ".staging"
+# the leaf value Spark's partitioned writer gives a NULL partition column
+_NULL_LEAF = "__HIVE_DEFAULT_PARTITION__"
 _SPARK_ERRORS = (PySparkException, Py4JJavaError)  # what a Spark call raises
 
 # Table.read's base scan per (session, data dir) while table, file-list version
@@ -93,10 +109,10 @@ def batch_frame(spark: SparkSession, rows: list[dict], kinds: dict[str, str]) ->
     ``kinds`` maps each column, in output order, to a ``_BATCH_KINDS`` key;
     a row without the column reads as NULL.  The columns become one
     ``pyarrow.Table``, which ``createDataFrame`` turns into a JVM local
-    relation: no Python worker re-pickles the rows.  The frame is
-    coalesced to ``fsops.n_output_files`` of the Arrow bytes, the sizing
-    compaction uses, so a request under 128 MiB is written by one task as
-    one file per segment it touches.
+    relation: no Python worker re-pickles the rows.  Nothing is stacked on
+    it, so ``Table.write``'s projections fold into a new local relation and
+    the batch is written on the driver, one file per leaf it touches, with
+    no Spark job.
 
     A value of the wrong type, or one Arrow cannot hold exactly (an
     integer past int64, or past 2**53 in a double column), raises
@@ -113,7 +129,24 @@ def batch_frame(spark: SparkSession, rows: list[dict], kinds: dict[str, str]) ->
         except (pa.ArrowException, OverflowError) as e:
             raise ValueError(f"column {name!r}: {e}") from None
     table = pa.Table.from_arrays(arrays, names=list(kinds))
-    return spark.createDataFrame(table).coalesce(fsops.n_output_files(table.nbytes))
+    return spark.createDataFrame(table)
+
+
+def _collected(f: T.StructField):
+    """File column ``f`` as the driver writer collects it: timestamps as
+    epoch microseconds and dates as epoch days, never as Python datetimes."""
+    if isinstance(f.dataType, T.TimestampType):
+        return F.unix_micros(f.name).alias(f.name)
+    if isinstance(f.dataType, T.DateType):
+        return F.unix_date(f.name).alias(f.name)
+    return F.col(f.name)
+
+
+def _folds(df: DataFrame) -> bool:
+    """The writer routing rule: Catalyst folded ``df`` into one local
+    relation, so its rows are on the driver and ``collect()`` starts no
+    Spark job."""
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
 
 
 def _read_schema(meta) -> T.StructType:
@@ -235,10 +268,11 @@ class Table:
         seq = self.catalog.allocate_seq(self.name)
         df = df.withColumn(SEQ_COLUMN, F.lit(seq).cast("long"))
 
+        # floored, as Table.read bounds segments: a pre-1970 row lands in a
+        # negative segment, not in segment 0
         seg_ms = meta.options.segment_duration_ms
         df = df.withColumn(
-            SEGMENT_COLUMN,
-            (F.unix_millis(F.col(schema.timestamp_column)) / seg_ms).cast("long"),
+            SEGMENT_COLUMN, F.floor(F.unix_millis(F.col(schema.timestamp_column)) / seg_ms)
         )
         part_cols = [SEGMENT_COLUMN]
         if meta.options.partition_keys:
@@ -255,15 +289,67 @@ class Table:
                 PARTITION_COLUMN, random_partition_expr(meta.options.num_partitions)
             )
             part_cols = [PARTITION_COLUMN, SEGMENT_COLUMN]
-        if meta.options.sampled_sort_key:
-            # cluster rows for the sampled key inside each task's output
-            # files: no shuffle, but every row group's min/max stats on the
-            # low-NDV lead columns become selective (SST prune analogue)
-            df = df.sortWithinPartitions(
-                *part_cols, *[c for c in meta.options.sampled_sort_key if c in df.columns]
+        # cluster rows for the sampled key inside each output file: no
+        # shuffle, but every row group's min/max stats on the low-NDV lead
+        # columns become selective (SST prune analogue)
+        sort_key = [c for c in meta.options.sampled_sort_key or [] if c in df.columns]
+
+        # a frame that folds (``_folds``) is collected and written by
+        # pyarrow; any other frame by a Spark job
+        fields = [f for f in _read_schema(meta).fields if f.name not in part_cols]
+        local = df.select(*map(_collected, fields), *part_cols)
+        if _folds(local):
+            rows = local.collect()
+
+            def write(staging: str) -> None:
+                self._write_leaves(staging, rows, fields, part_cols, sort_key, meta.options)
+
+        else:
+            if sort_key:
+                df = df.sortWithinPartitions(*part_cols, *sort_key)
+            codec = COMPRESSION_CODECS[meta.options.compression][0]
+            write = df.write.option("compression", codec).partitionBy(*part_cols).parquet
+        return seq, self._commit(write, {})
+
+    def _write_leaves(self, staging, rows, fields, part_cols, sort_key, opts) -> None:
+        """The driver writer: ``rows`` (``fields`` as ``_collected`` gives
+        them, then ``part_cols``) grouped by leaf, each group sorted by
+        ``sort_key`` ascending with NULLs first, as ``sortWithinPartitions``
+        does, and written as one parquet file under ``staging/<leaf>``.
+
+        The files carry what the Spark writer's do: every column nullable,
+        the table's codec and no Arrow schema blob.  A column is dictionary
+        encoded only where at most half its values are distinct, as
+        parquet-mr falls back to PLAIN for a near-unique one; and a row
+        group holds ``num_rows_per_row_group`` rows."""
+        nullable = [T.StructField(f.name, f.dataType) for f in fields]
+        schema = to_arrow_schema(T.StructType(nullable))
+        leaves: dict[tuple, list] = {}
+        for row in rows:
+            leaves.setdefault(tuple(row[len(fields) :]), []).append(row)
+        for key, group in leaves.items():
+            columns = list(zip(*group))
+            table = pa.Table.from_arrays(
+                [pa.array(v, t) for v, t in zip(columns, schema.types)], schema=schema
             )
-        writer = df.write.option("compression", meta.options.compression.lower())
-        return seq, self._commit(writer.partitionBy(*part_cols).parquet, {})
+            if sort_key:
+                keys = [(c, "ascending") for c in sort_key]
+                table = table.sort_by(keys, null_placement="at_start")
+            repeats = [
+                c for c, v in zip(schema.names, table.columns) if 2 * len(v.unique()) <= len(v)
+            ]
+            leaf = "/".join(
+                f"{c}={_NULL_LEAF if v is None else v}" for c, v in zip(part_cols, key)
+            )
+            fsops.mkdirs(self.spark, f"{staging}/{leaf}")
+            pq.write_table(
+                table,
+                f"{staging}/{leaf}/part-{uuid.uuid4().hex}.parquet",
+                compression=COMPRESSION_CODECS[opts.compression][1],
+                row_group_size=opts.num_rows_per_row_group,
+                use_dictionary=repeats,
+                store_schema=False,
+            )
 
     # ------------------------------------------------------------ commit --
     def _commit(self, write: Callable[[str], None] | None, drop: dict[str, int]):
@@ -442,7 +528,8 @@ class Table:
             def write(staging: str) -> None:
                 df = self._scan(meta, files).drop(SEGMENT_COLUMN, PARTITION_COLUMN)
                 nfiles = fsops.n_output_files(sum(files.values()), target_file_bytes)
-                shape(df, nfiles).write.parquet(f"{staging}/{leaf}")
+                codec = COMPRESSION_CODECS[meta.options.compression][0]
+                shape(df, nfiles).write.option("compression", codec).parquet(f"{staging}/{leaf}")
 
             try:
                 rewritten += self._commit(write, files) is not None
@@ -459,15 +546,19 @@ class Table:
         pk = meta.schema.effective_primary_key
 
         def shape(df: DataFrame, nfiles: int) -> DataFrame:
+            if nfiles == 1:
+                # one output file is one task: coalescing before the dedup
+                # window lets it run in that task, with no shuffle
+                df = df.coalesce(1)
             if meta.options.update_mode == "OVERWRITE":
                 df = _dedup(df, pk).drop("__rn")
             sort_key = [c for c in (meta.options.sampled_sort_key or []) if c in df.columns]
             if not sort_key:
-                return df.repartition(nfiles) if nfiles > 1 else df.coalesce(1)
+                return df.repartition(nfiles) if nfiles > 1 else df
             # range-partition on the sampled key, then sort within each
             # output file: files cover disjoint key ranges, so row-group
             # min/max stats prune across files too (not just inside one)
-            out = df.repartitionByRange(nfiles, *sort_key) if nfiles > 1 else df.coalesce(1)
+            out = df.repartitionByRange(nfiles, *sort_key) if nfiles > 1 else df
             return out.sortWithinPartitions(*sort_key)
 
         return self._rewrite_segments(shape, target_file_bytes)

@@ -20,6 +20,10 @@ by the table scan and compaction; a guard fails if it is copied again.
 A table's data is reached only through its catalog file list: a guard
 fails if a package module other than ``table.py``/``catalog.py`` builds
 the data directory path.
+
+The driver writer uses ``pyarrow.parquet`` only: importing
+``pyarrow.dataset`` costs about 41 MB of resident memory (``pyarrow.parquet``
+about 3 MB), so a guard fails if any package module imports it.
 """
 
 from __future__ import annotations
@@ -142,3 +146,17 @@ def test_table_data_only_through_the_file_list():
         if "catalog.data_dir(" in line
     ]
     assert not hits, "table data reached outside the file list:\n" + "\n".join(hits)
+
+
+def test_no_pyarrow_dataset_import():
+    # measured on the served engine: +41 MB peak RSS for pyarrow.dataset,
+    # against +2.7 MB for pyarrow.parquet, which the driver writer needs
+    offenders = []
+    for path in (REPO / "incubator_horaedb_spark").rglob("*.py"):
+        tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+        offenders += [
+            f"{path.relative_to(REPO)}: imports {mod}"
+            for mod in _imported_modules(tree)
+            if mod == "pyarrow.dataset" or mod.startswith("pyarrow.dataset.")
+        ]
+    assert not offenders, "package modules import pyarrow.dataset:\n" + "\n".join(offenders)

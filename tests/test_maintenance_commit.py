@@ -9,10 +9,12 @@ drops exactly the files it read, which are deleted after the publish.
 Only a published version makes a file visible.  Guarantees tested here:
 - every boolean FS result is checked: a false move or delete raises
   IOError and loses nothing;
-- a crash at any step of an append or a rewrite commit loses no
-  acknowledged row and shows no partial batch; the files it leaves are
-  in no version, so reads, the leaf walk and ttl_expire never see them,
-  and the sweep when the store is next opened deletes them;
+- a crash at any step of an append (by either writer: a request batch
+  written on the driver, or a frame written by a Spark job) or of a
+  rewrite commit loses no acknowledged row and shows no partial batch;
+  the files it leaves are in no version, so reads, the leaf walk and
+  ttl_expire never see them, and the sweep when the store is next opened
+  deletes them;
 - an append acknowledged while a rewrite of its leaf is in flight
   survives the rewrite's commit;
 - a reader racing compact() always sees the whole table.
@@ -25,6 +27,7 @@ import shutil
 import threading
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from incubator_horaedb_spark import fsops
@@ -146,21 +149,30 @@ def test_failed_cleanup_delete_raises(engine, monkeypatch):
     assert fresh.table("mc3").read().count() == 50
 
 
-@pytest.mark.parametrize("op", ["append", "rewrite"])
+@pytest.mark.parametrize("op", ["append", "spark_append", "rewrite"])
 @pytest.mark.parametrize("step", ["staged", "moved", "published"])
 def test_crash_at_each_commit_step(engine, monkeypatch, op, step):
     tbl = _mk_table(engine, "mc8", n_segments=2, partition="PARTITION BY KEY(k) PARTITIONS 2")
     _insert(engine, "mc8", 0, 10, tag="x")
     acked = 90
+    # 20 rows for segment 1 from a range, which does not fold: the Spark writer
+    ids = engine.spark.range(20)
+    frame = ids.select(
+        F.concat(F.lit("y"), (F.col("id") % 5).cast("string")).alias("k"),
+        (F.col("id") + 1000).cast("double").alias("v"),
+        F.timestamp_millis(F.col("id") + SEG_MS + 1000).alias("t"),
+    )
     with pytest.raises(Crash):
         _crash_at(monkeypatch, step)
-        if op == "append":
+        if op == "append":  # a request batch: the driver writer
             _insert(engine, "mc8", 1, 20, tag="y")
+        elif op == "spark_append":
+            tbl.write(frame)
         else:
             tbl.compact()
     monkeypatch.undo()
     # an append is visible whole once published, else not at all
-    published_append = (op, step) == ("append", "published")
+    published_append = op != "rewrite" and step == "published"
     expected = acked + (20 if published_append else 0)
     assert tbl.read().count() == expected
     data = engine.catalog.data_dir("mc8")

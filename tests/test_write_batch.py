@@ -1,6 +1,7 @@
 """The request write path: each protocol request and each INSERT/COPY/LOAD
 batch is one Arrow-backed local relation (``table.batch_frame``), written
-by one task as one parquet file per segment it touches.
+on the driver with no Spark job as one parquet file per segment it
+touches.
 
 Also the batch's typing rules: a column's kind is picked over all its
 rows (int64 and double widen to double, any other mix is rejected), and
@@ -14,6 +15,7 @@ import time
 
 import pytest
 
+from incubator_horaedb_spark import table as table_mod
 from incubator_horaedb_spark.frontends.sql_shim import Engine
 from incubator_horaedb_spark.server import EngineServer
 from incubator_horaedb_spark.table import Table
@@ -90,20 +92,35 @@ def test_request_spanning_two_segments_adds_two_files(server):
 
 
 def test_batch_frames_are_local_relations(server, monkeypatch):
-    # a return to createDataFrame over Python rows shows up as an RDD scan
+    # a return to createDataFrame over Python rows shows up as an RDD scan;
+    # anything stacked on the batch that Catalyst cannot fold into the
+    # projected frame sends the request to a Spark job
     frames = _capture_writes(monkeypatch)
-    server.handle_line_protocol(_cpu_lines(200, T0_NS))
+    projected = []
+    folds = table_mod._folds
+    monkeypatch.setattr(table_mod, "_folds", lambda df: projected.append(df) or folds(df))
     engine = server.engine
+    _create_cpu(engine)  # declared segment duration: no first-flush sampling job
     engine.execute_sql(
         "CREATE TABLE t (h string TAG, v double, ts timestamp NOT NULL, TIMESTAMP KEY(ts)) "
-        "ENGINE=Analytic WITH(enable_ttl='false')"
+        "ENGINE=Analytic WITH(enable_ttl='false', segment_duration='2h')"
     )
-    engine.execute_sql("INSERT INTO t (h, v, ts) VALUES ('a', 1, 1000), ('b', 2.5, 2000)")
-    assert len(frames) == 2
+    sc = engine.spark.sparkContext
+    sc.setJobGroup("request-writes", "request writes")
+    try:
+        server.handle_line_protocol(_cpu_lines(200, T0_NS))
+        engine.execute_sql("INSERT INTO t (h, v, ts) VALUES ('a', 1, 1000), ('b', 2.5, 2000)")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup("request-writes")) == []
+    assert len(frames) == 2 and len(projected) == 2
     for df in frames:
         plan = df._jdf.queryExecution().analyzed().toString()
         assert "LocalRelation" in plan and "RDD" not in plan, plan
-        assert df.rdd.getNumPartitions() == 1
+    for df in projected:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+    assert engine.execute_sql("SELECT count(*) AS n FROM t").collect()[0]["n"] == 2
 
 
 def test_line_protocol_int_and_float_widen_to_double(server):

@@ -183,6 +183,20 @@ class TableMeta:
             "created_at_ms": self.created_at_ms,
         }
 
+    def codecs(self) -> tuple[str, str]:
+        """The table's codec as Spark's and pyarrow's names.  A meta stored
+        before CREATE and ALTER checked codecs may name another (``gzip``,
+        say): its writes and compactions are refused here, naming the table,
+        until ALTER … MODIFY SETTING picks one of ``COMPRESSION_CODECS``."""
+        try:
+            return COMPRESSION_CODECS[self.options.compression]
+        except KeyError:
+            codecs = ", ".join(COMPRESSION_CODECS)
+            raise ValueError(
+                f"table {self.name!r} stores compression {self.options.compression!r}: "
+                f"set one of {codecs} with ALTER TABLE … MODIFY SETTING"
+            ) from None
+
     @classmethod
     def from_dict(cls, d: dict) -> "TableMeta":
         return cls(

@@ -29,7 +29,6 @@ Case sensitivity: backtick-quoted mixed-case identifiers are honored —
 
 from __future__ import annotations
 
-import json
 import re
 import threading
 from typing import Any
@@ -335,14 +334,12 @@ class Engine:
         # bounds — likely the faster closed-loop readers loading the cores
         # the control writer shares.  Since then request writes run with no
         # Spark job (table.py's driver writer) and a statement rebuilds only
-        # the views of tables that changed (register_views): the `dashboard`
+        # the views of tables that changed (Table.read's memo): the `dashboard`
         # median write_p50_ms went from 460 to 282 ms and read_p50_ms from
         # 2156 to 1050 ms (10 alternating pairs, seeds 1-10, local[4] on a
         # 4-core VM).  Re-measure the prototype on top of them before
         # keeping this lock.
         self._lock = threading.RLock()
-        # table → (view token, dedup view DataFrame): see register_views
-        self._views: dict[str, tuple] = {}
         # request blocking (proxy limiter.rs + interpreters validator.rs)
         self.limiter = Limiter()
         self.enable_partition_table_access = False
@@ -571,7 +568,6 @@ class Engine:
         name = _unquote(m.group(2))
         self.catalog.drop_table(name, if_exists=bool(m.group(1)))
         forget(self.catalog, name)
-        self._views.pop(name, None)
         # the view registered for an earlier statement would otherwise keep
         # serving the dropped table (stale files, or an empty relation)
         self.spark.catalog.dropTempView(self._view_name(name))
@@ -745,21 +741,12 @@ class Engine:
     DEFAULT_CATALOG = "horaedb"  # catalog/src/consts.rs:24 DEFAULT_CATALOG
 
     def register_views(self) -> None:
-        """Register every catalog table's dedup view (``Table.read``).  A
-        view is rebuilt only when its table's file list or meta (schema,
-        options) changed since it was built, so a statement does not pay
-        ~35 ms per unchanged table; a TTL table's view is rebuilt every
-        time, as its cut moves with the clock."""
+        """Register every catalog table's dedup view (``Table.read``, which
+        memoizes an unchanged table's view)."""
         for t in self.catalog.list_tables():
-            meta = self.catalog.get(t)
-            token = None
-            if not meta.options.enable_ttl:  # taken before the read: never newer than it
-                state = json.dumps({**meta.to_dict(), "next_seq": 0}, sort_keys=True)
-                token = (self.catalog.files(t)[0], state)
-            hit = self._views.get(t)
-            if token is None or hit is None or hit[0] != token:
-                hit = self._views[t] = (token, Table(self.spark, self.catalog, t).read())
-            hit[1].createOrReplaceTempView(self._view_name(t))
+            Table(self.spark, self.catalog, t).read().createOrReplaceTempView(
+                self._view_name(t)
+            )
 
     def _register_system_tables(self) -> None:
         """system.public.tables (system_catalog/src/tables.rs:51-91: timestamp,

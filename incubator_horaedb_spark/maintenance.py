@@ -12,7 +12,8 @@ per-table work is bounded by partitions touched since the last sweep.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+import functools
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from incubator_horaedb_spark.table import Table
@@ -41,11 +42,12 @@ def run_maintenance(
     expire: bool = True,
 ) -> MaintenanceReport:
     """One sweep over ``tables`` (default: the whole catalog).  Tables are
-    swept side by side, up to one per core, as the reference's compaction
-    scheduler runs several tables' tasks at once (scheduler.rs
-    max_ongoing_tasks): each table commits through its own file list, and a
-    small table's rewrite is a one-task Spark job that leaves the other
-    cores idle."""
+    swept side by side in ``_pool``, as the reference's compaction scheduler
+    runs several tables' tasks at once (scheduler.rs max_ongoing_tasks):
+    each table commits through its own file list, and a small table's
+    rewrite is a one-task Spark job that leaves the other cores idle.  It
+    returns, or raises the first failure in table order, once every
+    table's sweep has ended."""
     names = tables if tables is not None else engine.catalog.list_tables()
 
     def sweep(name: str) -> tuple[int, int]:
@@ -55,15 +57,25 @@ def run_maintenance(
             t.compact() if compact else 0,
         )
 
+    pool = _pool(engine.spark.sparkContext.defaultParallelism)
+    sweeps = [pool.submit(sweep, name) for name in names]
+    wait(sweeps)
     report = MaintenanceReport()
-    cores = engine.spark.sparkContext.defaultParallelism
-    with ThreadPoolExecutor(max_workers=max(1, min(len(names), cores))) as pool:
-        for name, (expired, compacted) in zip(names, pool.map(sweep, names)):
-            if expired:
-                report.expired_segments[name] = expired
-            if compacted:
-                report.compacted_partitions[name] = compacted
+    for name, done in zip(names, sweeps):
+        expired, compacted = done.result()
+        if expired:
+            report.expired_segments[name] = expired
+        if compacted:
+            report.compacted_partitions[name] = compacted
     return report
+
+
+@functools.cache
+def _pool(workers: int) -> ThreadPoolExecutor:
+    """The one pool, one worker per core, that every sweep in the process
+    shares: callers that run sweeps of disjoint tables side by side add no
+    concurrency past it."""
+    return ThreadPoolExecutor(workers, thread_name_prefix="maintenance")
 
 
 # --- continuous rollup (hypertable-downsample analogue) -------------------

@@ -21,7 +21,8 @@ Protocol requests (line protocol, remote write, OpenTSDB put, gRPC) take
 become one Arrow table and one JVM local relation (``table.batch_frame``,
 no Python worker), and ``Table.write`` writes it on the driver with no
 Spark job, one parquet file per leaf the request touches — the memtable
-flush straight to an SST.  Each column's kind is picked over the whole
+flush straight to an SST.  A batch past ``table.DRIVER_WRITE_MAX_VALUES``
+values is written by a Spark job instead, which is faster at that size.  Each column's kind is picked over the whole
 batch: int64 and double widen to double, any other mix is rejected naming
 the column.
 
@@ -181,8 +182,9 @@ def ingest_rows(
     Each column's kind is picked over all rows: int64 and double mix to
     double, and any other mix raises ValueError naming the column, as do
     integers past int64.  The rows become one Arrow-backed batch
-    (``table.batch_frame``), written on the driver with no Spark job as one
-    parquet file per leaf the request touches.
+    (``table.batch_frame``), written on the driver with no Spark job (up to
+    ``table.DRIVER_WRITE_MAX_VALUES`` values) as one parquet file per leaf
+    the request touches.
 
     ``tag_cols`` should come from the protocol parser's tag/field split
     (ProtocolBatch.tag_keys) — tags define the series key (tsid), so they

@@ -22,8 +22,9 @@ src/analytic_engine/src/instance/write.rs):
   relation, which is collected with no Spark job and written by pyarrow,
   one file per leaf the request touches — the memtable flush straight to
   an SST (sst/parquet/writer.rs).  Every other frame (INSERT … SELECT,
-  CTAS, streaming micro-batches) is written by a Spark job, as compaction
-  is.
+  CTAS, streaming micro-batches, and a request batch past
+  ``DRIVER_WRITE_MAX_VALUES`` values) is written by a Spark job, as
+  compaction is.
 
 Read path (replaces MergeIterator/DedupIterator/ChainIterator,
 src/analytic_engine/src/row_iter/):
@@ -47,6 +48,7 @@ uses the same rewrite loop, ``ttl_expire`` the same walk.
 
 from __future__ import annotations
 
+import functools
 import re
 import time
 import uuid
@@ -62,11 +64,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from incubator_horaedb_spark import fsops
-from incubator_horaedb_spark.catalog import (
-    COMPRESSION_CODECS,
-    Catalog,
-    pick_segment_duration_ms,
-)
+from incubator_horaedb_spark.catalog import Catalog, pick_segment_duration_ms
 from incubator_horaedb_spark.functions.hashing import tsid_expr
 from incubator_horaedb_spark.partition import (
     PARTITION_COLUMN,
@@ -82,10 +80,21 @@ STAGING = ".staging"
 _NULL_LEAF = "__HIVE_DEFAULT_PARTITION__"
 _SPARK_ERRORS = (PySparkException, Py4JJavaError)  # what a Spark call raises
 
-# Table.read's base scan per (session, data dir) while table, file-list version
-# and read schema hold: planning a file list costs ~50 ms, +370 ms above 32 paths
-# (local[4]).  DROP TABLE lets go of a table's entries (``forget``).
-_SCANS: dict[tuple, tuple[tuple, DataFrame]] = {}
+# Table.read's base scan per (session, data dir) while table, file-list version,
+# read schema, update mode and primary key hold: planning a file list costs
+# ~50 ms, +370 ms above 32 paths (local[4]).  Beside it, once built, the
+# argument-free dedup view of a table without TTL (each SQL statement's view,
+# ~35 ms to rebuild).  DROP TABLE lets go of a table's entries (``forget``).
+_SCANS: dict[tuple, tuple[tuple, DataFrame, DataFrame | None]] = {}
+
+# The largest request batch, in values (rows x columns), that the driver
+# writer takes; past it the Spark writer is faster.  The driver writer pays
+# ~3.5 us per value in Python (collect, then pyarrow), the Spark writer
+# ~0.4 s per job and ~1.3 us per value: for a 6-column batch, 20,000 rows
+# took 0.45 s on the driver and 0.50 s by Spark, 40,000 rows 0.86 s and
+# 0.71 s (local[4], median of 3); a 1,000,000-row COPY took 28 s and +0.8
+# GB of peak RSS on the driver, 9 s by Spark (one run each).
+DRIVER_WRITE_MAX_VALUES = 128 * 1024
 
 # Arrow type and accepted Python value types of each batch column kind.
 # The value types are checked before the Arrow build because pyarrow
@@ -109,10 +118,13 @@ def batch_frame(spark: SparkSession, rows: list[dict], kinds: dict[str, str]) ->
     ``kinds`` maps each column, in output order, to a ``_BATCH_KINDS`` key;
     a row without the column reads as NULL.  The columns become one
     ``pyarrow.Table``, which ``createDataFrame`` turns into a JVM local
-    relation: no Python worker re-pickles the rows.  Nothing is stacked on
-    it, so ``Table.write``'s projections fold into a new local relation and
-    the batch is written on the driver, one file per leaf it touches, with
-    no Spark job.
+    relation: no Python worker re-pickles the rows.  Up to
+    ``DRIVER_WRITE_MAX_VALUES`` values nothing is stacked on it, so
+    ``Table.write``'s projections fold into a new local relation and the
+    batch is written on the driver, one file per leaf it touches, with no
+    Spark job.  A larger batch (a big COPY or LOAD DATA) is coalesced to
+    ``fsops.n_output_files`` of its Arrow bytes, which keeps it from
+    folding: Spark writes it, one task per ~128 MiB.
 
     A value of the wrong type, or one Arrow cannot hold exactly (an
     integer past int64, or past 2**53 in a double column), raises
@@ -129,7 +141,10 @@ def batch_frame(spark: SparkSession, rows: list[dict], kinds: dict[str, str]) ->
         except (pa.ArrowException, OverflowError) as e:
             raise ValueError(f"column {name!r}: {e}") from None
     table = pa.Table.from_arrays(arrays, names=list(kinds))
-    return spark.createDataFrame(table)
+    df = spark.createDataFrame(table)
+    if table.num_rows * table.num_columns > DRIVER_WRITE_MAX_VALUES:
+        df = df.coalesce(fsops.n_output_files(table.nbytes))
+    return df
 
 
 def _collected(f: T.StructField):
@@ -145,8 +160,20 @@ def _collected(f: T.StructField):
 def _folds(df: DataFrame) -> bool:
     """The writer routing rule: Catalyst folded ``df`` into one local
     relation, so its rows are on the driver and ``collect()`` starts no
-    Spark job."""
-    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+    Spark job.  A plan holding a repartition (``batch_frame``'s coalesce
+    of a large batch) never folds, and is not optimized here: for a large
+    local relation that costs ~2 s per million rows, paid again by the
+    Spark write."""
+    qe = df._jdf.queryExecution()
+    if qe.analyzed().containsPattern(_repartition(df.sparkSession._jvm)):
+        return False
+    return qe.optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+
+
+@functools.cache
+def _repartition(jvm):
+    # resolving the TreePattern object walks its package, one py4j round trip per hop
+    return jvm.org.apache.spark.sql.catalyst.trees.TreePattern.REPARTITION_OPERATION()
 
 
 def _read_schema(meta) -> T.StructType:
@@ -191,6 +218,7 @@ class Table:
     def _append(self, df: DataFrame) -> tuple[int, dict[str, int]]:
         meta = self.meta
         schema = meta.schema
+        spark_codec, arrow_codec = meta.codecs()  # refuses an unknown one before any work
 
         # align to declared schema: missing columns → default value / NULL
         for col in schema.columns:
@@ -302,26 +330,28 @@ class Table:
             rows = local.collect()
 
             def write(staging: str) -> None:
-                self._write_leaves(staging, rows, fields, part_cols, sort_key, meta.options)
+                self._write_leaves(
+                    staging, rows, fields, part_cols, sort_key, arrow_codec,
+                    meta.options.num_rows_per_row_group,
+                )
 
         else:
             if sort_key:
                 df = df.sortWithinPartitions(*part_cols, *sort_key)
-            codec = COMPRESSION_CODECS[meta.options.compression][0]
-            write = df.write.option("compression", codec).partitionBy(*part_cols).parquet
+            write = df.write.option("compression", spark_codec).partitionBy(*part_cols).parquet
         return seq, self._commit(write, {})
 
-    def _write_leaves(self, staging, rows, fields, part_cols, sort_key, opts) -> None:
+    def _write_leaves(self, staging, rows, fields, part_cols, sort_key, codec, rows_per_group):
         """The driver writer: ``rows`` (``fields`` as ``_collected`` gives
         them, then ``part_cols``) grouped by leaf, each group sorted by
         ``sort_key`` ascending with NULLs first, as ``sortWithinPartitions``
         does, and written as one parquet file under ``staging/<leaf>``.
 
         The files carry what the Spark writer's do: every column nullable,
-        the table's codec and no Arrow schema blob.  A column is dictionary
-        encoded only where at most half its values are distinct, as
-        parquet-mr falls back to PLAIN for a near-unique one; and a row
-        group holds ``num_rows_per_row_group`` rows."""
+        the table's ``codec`` (pyarrow's name) and no Arrow schema blob.  A
+        column is dictionary encoded only where at most half its values are
+        distinct, as parquet-mr falls back to PLAIN for a near-unique one;
+        and a row group holds ``rows_per_group`` rows."""
         nullable = [T.StructField(f.name, f.dataType) for f in fields]
         schema = to_arrow_schema(T.StructType(nullable))
         leaves: dict[tuple, list] = {}
@@ -345,8 +375,8 @@ class Table:
             pq.write_table(
                 table,
                 f"{staging}/{leaf}/part-{uuid.uuid4().hex}.parquet",
-                compression=COMPRESSION_CODECS[opts.compression][1],
-                row_group_size=opts.num_rows_per_row_group,
+                compression=codec,
+                row_group_size=rows_per_group,
                 use_dictionary=repeats,
                 store_schema=False,
             )
@@ -431,23 +461,30 @@ class Table:
           sees only the versions that survived it.
 
         A table with no data reads as an empty frame of the full read
-        schema, so every step applies to it unchanged."""
+        schema, so every step applies to it unchanged.  The argument-free
+        read of a table without TTL is memoized with its base scan."""
         meta = self.meta
         schema, opts = meta.schema, meta.options
         key = (self.spark, self.catalog.data_dir(self.name))
+        dedup = (opts.update_mode, *schema.effective_primary_key)
         while True:
             version, files = self.catalog.files(self.name)
-            token = (meta.created_at_ms, version, _read_schema(meta).json())
+            token = (meta.created_at_ms, version, _read_schema(meta).json(), dedup)
             hit = _SCANS.get(key)
             try:
                 if hit is None or hit[0] != token:
-                    hit = _SCANS[key] = (token, self._scan(meta, files))
+                    hit = _SCANS[key] = (token, self._scan(meta, files), None)
             except _SPARK_ERRORS:
                 if files.keys() <= self.catalog.files(self.name)[1].keys():
                     raise
                 continue  # Spark checks each path at planning; a commit dropped some
             if files.keys() <= self.catalog.files(self.name)[1].keys():  # else being deleted
                 break
+        bounded = lo_ms is not None or hi_ms is not None or as_of_seq is not None
+        # the argument-free read of a table without TTL: a SQL statement's view
+        view = not (bounded or filters or with_internal or opts.enable_ttl)
+        if view and hit[2] is not None:
+            return hit[2]
         df = hit[1]
 
         if filters and opts.partition_keys:
@@ -486,6 +523,8 @@ class Table:
                 df = df.filter(
                     F.col(c).isin(list(v)) if isinstance(v, (list, tuple, set)) else (F.col(c) == v)
                 )
+        if view:  # over a newer entry, this one's token mismatches: rebuilt, never served
+            _SCANS[key] = (hit[0], hit[1], df)
         return df
 
     def _scan(self, meta, files) -> DataFrame:
@@ -522,13 +561,13 @@ class Table:
         ``shape(df, nfiles)`` (``nfiles`` sized to ``target_file_bytes``) and
         committed in place of exactly the files read.  Returns leaves rewritten."""
         meta = self.meta
+        codec = meta.codecs()[0]
         rewritten = 0
         for leaf, files in self._leaves().items():
 
             def write(staging: str) -> None:
                 df = self._scan(meta, files).drop(SEGMENT_COLUMN, PARTITION_COLUMN)
                 nfiles = fsops.n_output_files(sum(files.values()), target_file_bytes)
-                codec = COMPRESSION_CODECS[meta.options.compression][0]
                 shape(df, nfiles).write.option("compression", codec).parquet(f"{staging}/{leaf}")
 
             try:

@@ -11,9 +11,12 @@ Both store the same rows.
   OVERWRITE dedup keeps the newer ``__seq`` whichever writer wrote it;
 - every accepted codec round-trips through both writers and compaction;
   an unknown codec or a row-group size <= 0 is refused before anything is
-  created or changed;
+  created or changed, and a stored meta naming an unknown codec is refused
+  by name at write and compaction until ALTER sets a known one;
 - a pre-1970 row lands in its floored segment, so a time-bounded read
-  finds it.
+  finds it;
+- a request batch past ``DRIVER_WRITE_MAX_VALUES`` goes to the Spark
+  writer.
 """
 
 from __future__ import annotations
@@ -192,6 +195,28 @@ def test_driver_writer_honours_row_group_size(engine, spark):
     assert row_groups(engine.catalog.files("rg")[1].keys() - first.keys()) == [2, 2, 4]
 
 
+def test_batch_past_the_driver_limit_is_written_by_one_spark_task(engine, routes, monkeypatch):
+    """A request batch of more than ``DRIVER_WRITE_MAX_VALUES`` values (a
+    big COPY or LOAD DATA) is coalesced, so it does not fold: a Spark job
+    writes it, one task per ~128 MiB.  A batch at the limit is written on
+    the driver."""
+    monkeypatch.setattr(table_mod, "DRIVER_WRITE_MAX_VALUES", 8 * 3)
+    engine.execute_sql(
+        "CREATE TABLE big (h string TAG, v double, ts timestamp NOT NULL, TIMESTAMP KEY(ts)) "
+        "ENGINE=Analytic WITH(enable_ttl='false', segment_duration='2h')"
+    )
+    files = []  # one segment: each write adds one file
+    for n in (8, 9):
+        rows = [{"h": f"h{i}", "v": i / 2, "ts": n * 1000 + i} for i in range(n)]
+        engine.insert_rows("big", ["h", "v", "ts"], rows)
+        files.append(len(engine.catalog.files("big")[1]))
+    assert routes == [True, False] and files == [1, 2]
+    got = engine.execute_sql("SELECT h, v, ts FROM big").collect()
+    assert sorted((r["h"], r["v"], r["ts"].timestamp()) for r in got) == sorted(
+        (f"h{i}", i / 2, (n * 1000 + i) / 1000) for n in (8, 9) for i in range(n)
+    )
+
+
 @pytest.mark.parametrize(
     "setting",
     [
@@ -227,6 +252,33 @@ def test_bad_codec_is_http_400(engine):
     finally:
         srv.stop()
     assert not engine.catalog.exists("bad")
+
+
+def test_stored_unknown_codec_is_refused_by_name_until_altered(engine, spark, tmp_path):
+    """A meta stored before CREATE and ALTER checked codecs may name one
+    outside the map (any Spark codec was taken).  The table still reads;
+    its writes and compactions raise ValueError naming the table and the
+    codec; ALTER … MODIFY SETTING makes it writable again."""
+    _write(spark, _create(engine, "legacy"), _batch(0), "driver")
+    path = f"{engine.catalog.table_dir('legacy')}/_meta.json"
+    with open(path) as f:
+        stored = json.load(f)
+    stored["options"]["compression"] = "GZIP"
+    with open(path, "w") as f:
+        json.dump(stored, f)
+    tbl = Engine(spark, str(tmp_path / "store")).table("legacy")  # the store reopened
+    refused = "table 'legacy' stores compression 'GZIP'"
+    for writer in ("driver", "spark"):
+        with pytest.raises(ValueError, match=refused):
+            _write(spark, tbl, _batch(1), writer)
+    with pytest.raises(ValueError, match=refused):
+        tbl.compact()
+    assert tbl.read().count() == ROWS and tbl.meta.next_seq == 2
+    engine.execute_sql("ALTER TABLE legacy MODIFY SETTING compression='snappy'")
+    _write(spark, tbl, _batch(1), "driver")
+    assert tbl.compact() == 3
+    assert tbl.read().count() == 2 * ROWS
+    assert _codecs(engine, "legacy") == {"SNAPPY"}
 
 
 @pytest.mark.parametrize("writer", ["driver", "spark"])

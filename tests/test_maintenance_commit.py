@@ -17,7 +17,8 @@ Only a published version makes a file visible.  Guarantees tested here:
   deletes them;
 - an append acknowledged while a rewrite of its leaf is in flight
   survives the rewrite's commit;
-- a reader racing compact() always sees the whole table.
+- a reader racing compact() always sees the whole table;
+- a maintenance sweep whose table fails still sweeps the others.
 """
 
 from __future__ import annotations
@@ -33,6 +34,8 @@ from pyspark.sql.readwriter import DataFrameWriter
 from incubator_horaedb_spark import fsops
 from incubator_horaedb_spark.catalog import Catalog
 from incubator_horaedb_spark.frontends.sql_shim import Engine
+from incubator_horaedb_spark.maintenance import run_maintenance
+from incubator_horaedb_spark.table import Table
 
 
 @pytest.fixture()
@@ -320,8 +323,11 @@ def test_concurrent_reader_sees_whole_segments_only(engine, spark):
     in every successful count: a version names either a leaf's old files
     or its new ones, never neither and never both.  A scan that PLANNED
     over replaced files and executed after their delete fails loudly
-    with Spark's FILE_NOT_EXIST (optimistic-concurrency conflict — the
-    reader retries); any other error, or any other count, is a defect."""
+    (optimistic-concurrency conflict — the reader retries): with Spark's
+    FILE_NOT_EXIST, or, when the file went between its footer read and its
+    data read, FAILED_READ_FILE caused by java.nio's NoSuchFileException
+    (Hadoop's vectored read opens the file again).  Any other error, or any
+    other count, is a defect."""
     n_segments, rows = 3, 60
     tbl = _mk_table(engine, "mc6", n_segments=n_segments, rows_per_seg=rows)
     total = n_segments * rows
@@ -336,7 +342,7 @@ def test_concurrent_reader_sees_whole_segments_only(engine, spark):
                 observed.append(tbl.read().count())
             except Exception as e:  # noqa: BLE001 — collected for assertion
                 msg = str(e)
-                if "FILE_NOT_EXIST" in msg or "FileNotFound" in msg:
+                if any(m in msg for m in ("FILE_NOT_EXIST", "FileNotFound", "NoSuchFileException")):
                     conflicts.append(e)  # loud conflict, not a wrong answer
                 else:
                     errors.append(e)
@@ -354,3 +360,27 @@ def test_concurrent_reader_sees_whole_segments_only(engine, spark):
     bad = [c for c in observed if c != total]
     assert not bad, f"partial reads: {sorted(set(bad))}, table has {total}"
     assert tbl.read().count() == total
+
+
+def test_sweep_ends_every_table_before_raising_the_first_failure(engine, monkeypatch):
+    """run_maintenance sweeps tables side by side: a table whose sweep
+    fails does not stop the others, and the first failure in table order
+    is raised once every table's sweep has ended."""
+    names = ["sw_a", "sw_b", "sw_c", "sw_d", "sw_e"]
+    for name in names:
+        _mk_table(engine, name, n_segments=1, rows_per_seg=10)
+        _insert(engine, name, 0, 10)  # a second file in the one leaf
+    failing = {"sw_b", "sw_d"}
+    compact = Table.compact
+
+    def compact_or_fail(self, *args, **kwargs):
+        if self.name in failing:
+            raise IOError(f"{self.name}: disk full")
+        return compact(self, *args, **kwargs)
+
+    monkeypatch.setattr(Table, "compact", compact_or_fail)
+    with pytest.raises(IOError, match="sw_b: disk full"):
+        run_maintenance(engine, tables=names, expire=False)
+    for name in names:
+        files = [len(f) for f in engine.table(name)._leaves().values()]
+        assert files == [2 if name in failing else 1], name

@@ -14,6 +14,7 @@ spark.sql.shuffle.partitions ~ 2-3x total cores).
 
 from __future__ import annotations
 
+import gc
 import os
 
 from pyspark.sql import SparkSession
@@ -127,4 +128,12 @@ def get_spark(
         builder = builder.config("spark.local.dir", local_dir)
     if ui:
         builder = builder.config("spark.ui.port", "4048")  # auto-increments
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # What is alive once the session is up (modules, classes, functions)
+    # lives as long as the process: move it out of the collector's
+    # generations, so the full collection each Table.write runs walks only
+    # objects made since.  Walking the ~80,000 objects alive after start-up
+    # and twenty request writes took ~27 ms per collection (4-core machine).
+    gc.collect()
+    gc.freeze()
+    return spark

@@ -49,6 +49,7 @@ uses the same rewrite loop, ``ttl_expire`` the same walk.
 from __future__ import annotations
 
 import functools
+import gc
 import re
 import time
 import uuid
@@ -208,12 +209,25 @@ class Table:
 
     # ------------------------------------------------------------- write --
     def write(self, df: DataFrame) -> int:
-        """Append one batch; returns the assigned sequence number."""
-        return self._append(df)[0]
+        """Append one batch; returns the assigned sequence number.
+
+        Every py4j proxy the append makes sits in a reference cycle (it
+        caches its method stubs, which point back at it), so the JVM keeps
+        the append's plans, the batch's rows among them, until Python's next
+        full collection.  Under request traffic that collection came every
+        ~8 s, so the live JVM heap held 0-27 MB of such plans, depending on
+        when it was read.  A full collection after each append frees them
+        as the write ends."""
+        seq = self._append(df)[0]
+        gc.collect()
+        return seq
 
     def write_counted(self, df: DataFrame) -> int:
-        """Append one batch; returns its row count, from its files' footers."""
-        return self._scan(self.meta, self._append(df)[1]).count()
+        """Append one batch; returns its row count, from its files' footers.
+        Collects after the append, as ``write`` does."""
+        n = self._scan(self.meta, self._append(df)[1]).count()
+        gc.collect()
+        return n
 
     def _append(self, df: DataFrame) -> tuple[int, dict[str, int]]:
         meta = self.meta

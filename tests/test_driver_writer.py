@@ -16,12 +16,16 @@ Both store the same rows.
 - a pre-1970 row lands in its floored segment, so a time-bounded read
   finds it;
 - a request batch past ``DRIVER_WRITE_MAX_VALUES`` goes to the Spark
-  writer.
+  writer;
+- an append by either writer leaves no cyclic garbage: its py4j proxies,
+  and with them the JVM's hold on its plans, are gone when ``write``
+  returns.
 """
 
 from __future__ import annotations
 
 import datetime
+import gc
 import json
 import urllib.error
 import urllib.request
@@ -292,3 +296,15 @@ def test_pre_1970_row_is_found_by_a_bounded_read(engine, spark, routes, writer):
     assert routes == [writer == "driver"]
     assert [p.split("/")[0] for p in engine.catalog.files("old")[1]] == ["__segment=-1"]
     assert engine.table("old").read(lo_ms=-1000, hi_ms=0).count() == 1
+
+
+@pytest.mark.parametrize("writer", ["driver", "spark"])
+def test_an_append_leaves_no_cyclic_garbage(engine, spark, routes, writer):
+    tbl = _create(engine, "g")
+    df = spark.createDataFrame(_batch(0))
+    df = df if writer == "driver" else df.repartition(1)  # as _write
+    gc.collect()
+    tbl.write(df)
+    garbage = gc.collect()
+    assert routes == [writer == "driver"]
+    assert garbage == 0

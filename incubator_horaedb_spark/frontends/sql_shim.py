@@ -22,9 +22,10 @@ TypeConversion parity (logical_optimizer/type_conversion.rs:295-355):
 integer literals inserted into / compared against the timestamp key are
 interpreted as millisecond epochs.
 
-Case sensitivity: backtick-quoted mixed-case identifiers are honored —
-``spark.sql.caseSensitive`` is enabled for the duration of each statement
-(basic.sql:43-54 corpus behaviour).
+Case sensitivity: identifiers are case-sensitive on every engine path
+(basic.sql:43-54 corpus behaviour).  The engine runs in its own Spark
+session (``Engine.spark``), which sets ``spark.sql.caseSensitive`` once; the
+caller's session is never changed.
 """
 
 from __future__ import annotations
@@ -48,6 +49,19 @@ from incubator_horaedb_spark.table import Table, batch_frame, forget, sweep
 _IDENT = r"`(?:[^`]+)`|[A-Za-z_][\w]*"
 
 
+def _comment_end(stmt: str, i: int) -> int:
+    """End of the (nested, Spark 3+) ``/* */`` comment opening at ``i``."""
+    depth, j = 1, i + 2
+    while j < len(stmt) and depth:
+        if stmt.startswith("/*", j):
+            depth, j = depth + 1, j + 2
+        elif stmt.startswith("*/", j):
+            depth, j = depth - 1, j + 2
+        else:
+            j += 1
+    return j
+
+
 def _strip_leading_comments(stmt: str) -> str:
     """Drop LEADING `--` / (nested, Spark 3+) `/* */` comments and
     whitespace so the statement-head dispatch classifies `/* hint */
@@ -67,17 +81,7 @@ def _strip_leading_comments(stmt: str) -> str:
             i = j + 1
             continue
         if ch == "/" and stmt[i : i + 2] == "/*":
-            depth, j = 1, i + 2
-            while j < n and depth:
-                if stmt[j : j + 2] == "/*":
-                    depth += 1
-                    j += 2
-                elif stmt[j : j + 2] == "*/":
-                    depth -= 1
-                    j += 2
-                else:
-                    j += 1
-            i = j
+            i = _comment_end(stmt, i)
             continue
         break
     return stmt[i:]
@@ -316,30 +320,22 @@ class Engine:
     (SparkSession, storage root)."""
 
     def __init__(self, spark: SparkSession, root: str, schema: str = "public"):
-        self.spark = spark
+        # the engine's own session (own SQL conf and temp views; shared
+        # SparkContext): identifiers are case-sensitive on every path, and
+        # both writers store INT64 TIMESTAMP(MICROS) (Spark's default is
+        # INT96, which parquet filter pushdown does not use)
+        self.spark = spark.newSession()
+        self.spark.conf.set("spark.sql.caseSensitive", "true")
+        self.spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         self.catalog = Catalog(root, schema)
-        sweep(spark, self.catalog)
-        # execute_sql toggles session-global conf (caseSensitive) around
-        # each statement; concurrent HTTP threads interleaving save/restore
-        # could strand the conf or run a statement under the wrong
-        # sensitivity, so statement setup is serialized.  Heavy work
-        # (collect/write jobs) happens on the returned DataFrame outside
-        # the lock.
-        # Measured negative result: a prototype giving each Engine its own
-        # spark.newSession() (caseSensitive set once, no lock, views only
-        # for referenced tables) cut the perfbench `dashboard` median
-        # read_p50_ms from 2.79 s to 1.00 s, but raised write_p50_ms
-        # 746 -> 954 ms (+28%) and heap_live_mb 99.8 -> 110.6 MB (+11%) in
-        # every one of 4 alternating pairs (seeds 1-4), both past their
-        # bounds — likely the faster closed-loop readers loading the cores
-        # the control writer shares.  Since then request writes run with no
-        # Spark job (table.py's driver writer) and a statement rebuilds only
-        # the views of tables that changed (Table.read's memo): the `dashboard`
-        # median write_p50_ms went from 460 to 282 ms and read_p50_ms from
-        # 2156 to 1050 ms (10 alternating pairs, seeds 1-10, local[4] on a
-        # 4-core VM).  Re-measure the prototype on top of them before
-        # keeping this lock.
-        self._lock = threading.RLock()
+        sweep(self.spark, self.catalog)
+        # Keeps one statement's temp-view names (registered, analyzed,
+        # dropped in ``_query``) apart from another's.  Negative result
+        # (ROADMAP item 2, step B), measured before request writes ran with
+        # no Spark job: with no lock, `dashboard` read_p50_ms fell 2.79 ->
+        # 1.00 s but write_p50_ms rose 28% and heap_live_mb 11% in 4/4
+        # pairs (local[4]).
+        self._lock = threading.Lock()
         # request blocking (proxy limiter.rs + interpreters validator.rs)
         self.limiter = Limiter()
         self.enable_partition_table_access = False
@@ -354,10 +350,6 @@ class Engine:
         """Parse + interpret one statement.  Returns a DataFrame for
         queries/DESCRIBE/SHOW, an affected-row count for INSERT, None for
         other DDL/DML."""
-        with self._lock:
-            return self._execute_sql_locked(sql)
-
-    def _execute_sql_locked(self, sql: str) -> DataFrame | int | None:
         stmt = _strip_leading_comments(sql.strip().rstrip(";").strip())
         low = stmt.lower()
         info = self._statement_info(stmt, low)
@@ -366,34 +358,29 @@ class Engine:
             info, enable_partition_table_access=self.enable_partition_table_access
         )
         self.limiter.try_limit(info)
-        old_cs = self.spark.conf.get("spark.sql.caseSensitive")
-        self.spark.conf.set("spark.sql.caseSensitive", "true")
-        try:
-            if low.startswith("create table"):
-                return self._create_table(stmt)
-            if low.startswith("drop table"):
-                return self._drop_table(stmt)
-            if low.startswith("insert"):
-                return self._insert(stmt)
-            if low.startswith(("describe", "desc ")):
-                return self._describe(stmt)
-            if low.startswith("show tables"):
-                return self._show_tables(stmt)
-            if low.startswith("show databases"):
-                return self._show_databases()
-            if low.startswith("show create table"):
-                return self._show_create(stmt)
-            if low.startswith("exists table"):
-                return self._exists(stmt)
-            if low.startswith("alter table"):
-                return self._alter(stmt)
-            if low.startswith("explain analyze"):
-                return self._explain_analyze(stmt)
-            if low.startswith(("select", "with", "explain")):
-                return self._query(stmt)
-            raise ValueError(f"unsupported statement: {stmt[:80]!r}")
-        finally:
-            self.spark.conf.set("spark.sql.caseSensitive", old_cs)
+        if low.startswith("create table"):
+            return self._create_table(stmt)
+        if low.startswith("drop table"):
+            return self._drop_table(stmt)
+        if low.startswith("insert"):
+            return self._insert(stmt)
+        if low.startswith(("describe", "desc ")):
+            return self._describe(stmt)
+        if low.startswith("show tables"):
+            return self._show_tables(stmt)
+        if low.startswith("show databases"):
+            return self._show_databases()
+        if low.startswith("show create table"):
+            return self._show_create(stmt)
+        if low.startswith("exists table"):
+            return self._exists(stmt)
+        if low.startswith("alter table"):
+            return self._alter(stmt)
+        if low.startswith("explain analyze"):
+            return self._explain_analyze(stmt)
+        if low.startswith(("select", "with", "explain")):
+            return self._query(stmt)
+        raise ValueError(f"unsupported statement: {stmt[:80]!r}")
 
     # --------------------------------------------------------------- DDL --
     def _create_table(self, stmt: str) -> None:
@@ -433,7 +420,6 @@ class Engine:
             schema = infer_table_schema(df.schema, ts_cols[0], tag_cols=[])
             self.catalog.create_table(name, schema, opts)
             Table(self.spark, self.catalog, name).write(df)
-            self.register_views()
             return
 
         head = re.match(
@@ -568,9 +554,6 @@ class Engine:
         name = _unquote(m.group(2))
         self.catalog.drop_table(name, if_exists=bool(m.group(1)))
         forget(self.catalog, name)
-        # the view registered for an earlier statement would otherwise keep
-        # serving the dropped table (stale files, or an empty relation)
-        self.spark.catalog.dropTempView(self._view_name(name))
         return None
 
     def _alter(self, stmt: str) -> None:
@@ -674,24 +657,6 @@ class Engine:
             rows.append(dict(zip(cols, vals)))
         return self.insert_rows(name, cols, rows)
 
-    def insert_rows(self, name: str, cols: list[str], rows: list[dict]) -> int:
-        """Write python-typed ``rows`` (dicts keyed by ``cols``) into table
-        ``name`` with the INSERT path's type coercions — shared by VALUES
-        and the wire bulk loaders (PG COPY FROM STDIN, MySQL LOAD DATA
-        LOCAL).  An empty batch is a no-op (COPY of an empty file must not
-        trigger the first-flush samplers on zero rows).  A value the column
-        cannot hold exactly (1.5 for a bigint, say) raises ValueError naming
-        the column.
-
-        Takes the engine lock (reentrant — the VALUES path arrives with it
-        held): the wire servers are thread-per-connection, and Table.write
-        resolves column names, which another statement's caseSensitive
-        toggle would change under it."""
-        if not rows:
-            return 0
-        with self._lock:
-            return self._insert_rows_locked(name, cols, rows)
-
     # table column kind -> batch_frame kind; timestamps arrive as ms-integer
     # epoch literals (TypeConversion parity), ints widen into double
     # columns, and str is accepted for varbinary like the reference
@@ -706,7 +671,16 @@ class Engine:
         "boolean": "boolean",
     }
 
-    def _insert_rows_locked(self, name: str, cols: list[str], rows: list[dict]) -> int:
+    def insert_rows(self, name: str, cols: list[str], rows: list[dict]) -> int:
+        """Write python-typed ``rows`` (dicts keyed by ``cols``) into table
+        ``name`` with the INSERT path's type coercions — shared by VALUES
+        and the wire bulk loaders (PG COPY FROM STDIN, MySQL LOAD DATA
+        LOCAL).  An empty batch is a no-op (COPY of an empty file must not
+        trigger the first-flush samplers on zero rows).  A value the column
+        cannot hold exactly (1.5 for a bigint, say) raises ValueError naming
+        the column."""
+        if not rows:
+            return 0
         schema = self.catalog.get(name).schema
         kinds = {c: self._INSERT_KINDS.get(schema.column(c).kind, "int64") for c in cols}
         df = batch_frame(self.spark, rows, kinds)
@@ -740,10 +714,10 @@ class Engine:
 
     DEFAULT_CATALOG = "horaedb"  # catalog/src/consts.rs:24 DEFAULT_CATALOG
 
-    def register_views(self) -> None:
-        """Register every catalog table's dedup view (``Table.read``, which
-        memoizes an unchanged table's view)."""
-        for t in self.catalog.list_tables():
+    def register_views(self, tables: set[str]) -> None:
+        """Register ``tables``' dedup views (``Table.read``, which memoizes
+        an unchanged table's view)."""
+        for t in tables:
             Table(self.spark, self.catalog, t).read().createOrReplaceTempView(
                 self._view_name(t)
             )
@@ -774,20 +748,19 @@ class Engine:
         sdf.createOrReplaceTempView("__system_tables")
 
     def _query(self, stmt: str) -> DataFrame:
+        """Analyze ``stmt`` over temp views of the tables it reads, which
+        live only while it is analyzed: the returned frame holds their
+        resolved plans."""
         from incubator_horaedb_spark.functions.sql_bindings import (
             register_sql_functions,
             rewrite_sql_functions,
         )
 
-        self.register_views()
         register_sql_functions(self.spark)
         # EXPLAIN VERBOSE (DataFusion: show every optimizer pass — corpus
         # dml/issue-1087.sql) → Spark's EXPLAIN EXTENDED (parsed/analyzed/
         # optimized/physical), the closest all-stages rendering.
         stmt = re.sub(r"^explain\s+verbose\b", "EXPLAIN EXTENDED", stmt, flags=re.I)
-        for t in self.catalog.list_tables():
-            if (view := self._view_name(t)) != t:
-                stmt = stmt.replace(f"`{t}`", f"`{view}`")
         # system catalog table reference → registered view
         stmt = re.sub(
             r"\bsystem\s*\.\s*public\s*\.\s*tables\b",
@@ -795,11 +768,23 @@ class Engine:
             stmt,
             flags=re.I,
         )
-        if "__system_tables" in stmt:
-            self._register_system_tables()
-        return self.spark.sql(
-            self._coerce_ts_literals(rewrite_qualify(rewrite_sql_functions(stmt)))
-        )
+        system = "__system_tables" in stmt
+        tables = self._referenced_tables(stmt)
+        for t in tables:
+            if (view := self._view_name(t)) != t:
+                stmt = stmt.replace(f"`{t}`", f"`{view}`")
+        stmt = self._coerce_ts_literals(rewrite_qualify(rewrite_sql_functions(stmt)), tables)
+        with self._lock:
+            try:
+                self.register_views(tables)
+                if system:
+                    self._register_system_tables()
+                return self.spark.sql(stmt)
+            finally:
+                for t in tables:
+                    self.spark.catalog.dropTempView(self._view_name(t))
+                if system:
+                    self.spark.catalog.dropTempView("__system_tables")
 
     def _explain_analyze(self, stmt: str) -> DataFrame:
         """EXPLAIN ANALYZE: run the query and return the executed plan with
@@ -811,22 +796,39 @@ class Engine:
         text = render_analyze(self._query(inner))
         return self.spark.createDataFrame([(line,) for line in text.splitlines()], "plan string")
 
-    _JOIN_RE = re.compile(rf"\bjoin\s+({_IDENT})", re.I)
+    _JOIN_RE = re.compile(rf"\bjoin[(\s]+({_IDENT})", re.I)
     _FROM_RE = re.compile(r"\bfrom\b", re.I)
     # what ends a FROM clause at its own paren depth
     _FROM_END_RE = re.compile(
         r"\b(?:where|group|order|having|limit|union|except|intersect|window|qualify)\b",
         re.I,
     )
-    _LEAD_IDENT_RE = re.compile(rf"({_IDENT})")
+    _LEAD_IDENT_RE = re.compile(rf"[(\s]*({_IDENT})")
     _SQL_STRING_RE = re.compile(r"'(?:[^']|'')*'")
+    # a string literal, a backtick-quoted identifier, a `--` comment, or the
+    # start of a `/* */` comment
+    _QUOTED_RE = re.compile(r"'(?:[^']|'')*'|`[^`]*`|--[^\n]*|/\*")
+
+    @classmethod
+    def _scan_text(cls, stmt: str) -> str:
+        """``stmt`` as the table scanner reads it: each string literal
+        emptied, each comment a space, and each backtick-quoted identifier
+        replaced by its view name (a plain identifier ``_table_name``
+        inverts), so that no quoted character reads as syntax."""
+        out, pos = [], 0
+        while m := cls._QUOTED_RE.search(stmt, pos):
+            tok = m.group()
+            out.append(stmt[pos : m.start()])
+            out.append({"'": "''", "`": cls._view_name(tok[1:-1])}.get(tok[0], " "))
+            pos = _comment_end(stmt, m.start()) if tok == "/*" else m.end()
+        return "".join(out) + stmt[pos:]
 
     def _target_names(self, stmt: str) -> set[str]:
         """Names in table position: every JOIN target and the leading
-        identifier of every comma-separated FROM item (``FROM a, b x``).
-        Derived tables / subquery parens don't match the identifier; the
-        FROM clauses inside them are scanned in their own right."""
-        text = self._SQL_STRING_RE.sub("''", stmt)
+        identifier of every comma-separated FROM item (``FROM a, b x``),
+        parenthesized (``FROM (a)``) or not, in ``_scan_text``.  A
+        subquery's FROM clause is scanned in its own right."""
+        text = self._scan_text(stmt)
         names = [m.group(1) for m in self._JOIN_RE.finditer(text)]
         for m in self._FROM_RE.finditer(text):
             depth = 0
@@ -839,7 +841,7 @@ class Engine:
                 lead = self._LEAD_IDENT_RE.match(item)
                 if lead:
                     names.append(lead.group(1))
-        return {self._table_name(_unquote(n)) for n in names}
+        return {self._table_name(n) for n in names}
 
     def _referenced_tables(self, stmt: str) -> set[str]:
         """Catalog tables named in the statement's FROM/JOIN lists."""
@@ -879,7 +881,7 @@ class Engine:
                 return StatementInfo(kind=kw, tables={_unquote(m.group(1))})
         return StatementInfo(kind="other")
 
-    def _coerce_ts_literals(self, stmt: str) -> str:
+    def _coerce_ts_literals(self, stmt: str, tables: set[str]) -> str:
         """TypeConversion analyzer parity (type_conversion.rs:48-370):
         integer literals compared against a timestamp-key column are
         **millisecond** epochs — Spark's implicit cast would read them as
@@ -889,14 +891,11 @@ class Engine:
 
         The reference runs this in the analyzer with *resolved* column
         types; a text rewrite must approximate that scope, so it only
-        considers the timestamp keys of tables actually referenced in this
-        statement's FROM/JOIN list (a same-named bigint column in an
+        considers the timestamp keys of ``tables``, the catalog tables in
+        this statement's FROM/JOIN list (a same-named bigint column in an
         unrelated catalog table must not trigger it) and never rewrites
         inside string literals."""
-        ts_cols = {
-            self.catalog.get(t).schema.timestamp_column
-            for t in self._referenced_tables(stmt)
-        }
+        ts_cols = {self.catalog.get(t).schema.timestamp_column for t in tables}
         if not ts_cols:
             return stmt
         parts, last = [], 0

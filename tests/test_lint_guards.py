@@ -24,6 +24,11 @@ the data directory path.
 The driver writer uses ``pyarrow.parquet`` only: importing
 ``pyarrow.dataset`` costs about 41 MB of resident memory (``pyarrow.parquet``
 about 3 MB), so a guard fails if any package module imports it.
+
+The engine sets its session's SQL conf once, in ``Engine.__init__``; a
+guard fails if any other package module (the query bank aside, which sets
+read confs per query) calls ``.conf.set(``, so that no path toggles a conf
+per statement again.
 """
 
 from __future__ import annotations
@@ -106,13 +111,13 @@ def test_request_writes_use_the_batch_builder():
     tree = ast.parse(shim.read_text(encoding="utf-8"))
     found = set()
     for node in ast.walk(tree):
-        if isinstance(node, ast.FunctionDef) and node.name in ("insert_rows", "_insert_rows_locked"):
+        if isinstance(node, ast.FunctionDef) and node.name == "insert_rows":
             found.add(node.name)
             offenders += [
                 f"{shim.relative_to(REPO)}:{ln} ({node.name})"
                 for ln in _calls_create_dataframe(node)
             ]
-    assert found == {"insert_rows", "_insert_rows_locked"}
+    assert found == {"insert_rows"}
     assert not offenders, (
         "request writes call createDataFrame instead of table.batch_frame:\n"
         + "\n".join(offenders)
@@ -160,3 +165,36 @@ def test_no_pyarrow_dataset_import():
             if mod == "pyarrow.dataset" or mod.startswith("pyarrow.dataset.")
         ]
     assert not offenders, "package modules import pyarrow.dataset:\n" + "\n".join(offenders)
+
+
+def _conf_set_lines(node: ast.AST) -> set[int]:
+    return {
+        n.lineno
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "set"
+        and isinstance(n.func.value, ast.Attribute)
+        and n.func.value.attr == "conf"
+    }
+
+
+def test_session_conf_set_only_in_engine_init():
+    # A conf flipped per statement on a shared session changes how every
+    # concurrent path resolves names; the engine's session is configured
+    # once.  The query bank sets read confs on the caller's session per query.
+    pkg = REPO / "incubator_horaedb_spark"
+    shim = pkg / "frontends" / "sql_shim.py"
+    tree = ast.parse(shim.read_text(encoding="utf-8"))
+    engine = next(n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "Engine")
+    init = next(n for n in engine.body if isinstance(n, ast.FunctionDef) and n.name == "__init__")
+    allowed = {(shim, ln) for ln in _conf_set_lines(init)}
+    assert allowed, "Engine.__init__ sets no session conf"
+    offenders = [
+        f"{path.relative_to(REPO)}:{ln}"
+        for path in pkg.rglob("*.py")
+        if "querybank" not in path.relative_to(pkg).parts
+        for ln in sorted(_conf_set_lines(ast.parse(path.read_text(encoding="utf-8"))))
+        if (path, ln) not in allowed
+    ]
+    assert not offenders, "session conf set outside Engine.__init__:\n" + "\n".join(offenders)

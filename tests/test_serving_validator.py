@@ -49,6 +49,25 @@ def test_read_block_list_covers_join_and_comma_join(engine):
     assert n == 1
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT count(*) AS n FROM /* c */ demo",
+        "SELECT count(*) AS n FROM -- c\n demo",
+        "SELECT count(*) AS n FROM (demo)",
+    ],
+    ids=["block-comment", "line-comment", "parenthesized"],
+)
+def test_read_block_list_sees_table_after_comment_or_paren(engine, sql):
+    # the scanner names the table through a comment or a parenthesized FROM
+    # item: blocked when it is blocked, and its view registered when it is not
+    engine.limiter.block_read("demo")
+    with pytest.raises(BlockedError, match=r"blocked, table:demo, op:query"):
+        engine.execute_sql(sql)
+    engine.limiter.unblock_read("demo")
+    assert engine.execute_sql(sql).collect()[0]["n"] == 1
+
+
 def test_read_block_list(engine):
     engine.limiter.block_read("demo")
     with pytest.raises(BlockedError, match=r"blocked, table:demo, op:query"):

@@ -40,11 +40,13 @@ def _sql(engine, stmt: str) -> list[tuple]:
 
 def test_view_unsafe_table_names_leave_sql_working(engine):
     _write(engine, "cpu")
-    for name in ("disk-io", "cpu;x", "mem usage", "sys.load"):
+    # quoted characters that would read as syntax outside the backticks
+    names = ("disk-io", "cpu;x", "mem usage", "sys.load", "a--b'(c, d")
+    for name in names:
         _write(engine, name, n=3)
     assert _sql(engine, "SELECT 1") == [(1,)]
     assert _sql(engine, "SELECT count(*) FROM cpu") == [(5,)]
-    for name in ("disk-io", "cpu;x", "mem usage", "sys.load"):
+    for name in names:
         assert _sql(engine, f"SELECT count(*) FROM `{name}`") == [(3,)]
 
 

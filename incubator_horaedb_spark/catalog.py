@@ -10,6 +10,19 @@ directory of JSON metadata files next to the table data:
 
 The file list is the manifest (manifest/details.rs): a file is visible while
 the newest version lists it; ``Catalog.publish`` is the one commit point.
+``_files.json`` holds ``{"version": V, "files": {path: entry}}``, each path
+``[__partition=P/]__segment=S/<file>`` under ``data/``, each entry the
+file's FileMeta (sst/file.rs):
+
+    {"bytes": 1234,            # file size
+     "rows": 1000,             # row count, from the parquet footer
+     "ts": [lo_ms, hi_ms],     # timestamp range, from the footer; absent
+                               # when a row group has no min/max (INT96)
+     "unique": true,           # no two rows share the primary key
+     "version": 7}             # the file-list version that added it
+
+A file list written before entries (``path → bytes``) reads as entries of
+``bytes`` alone: no range, not key-unique.
 
 Table options mirror src/analytic_engine/src/table_options.rs:387-427:
 update_mode (APPEND|OVERWRITE), segment_duration (default 2h, :54), ttl
@@ -304,28 +317,33 @@ class Catalog:
             self._write_meta(meta)
             return seq
 
-    def files(self, name: str) -> tuple[int, dict[str, int]]:
-        """``name``'s newest file list: its version number and
-        ``[__partition=P/]__segment=S/<file>`` → bytes."""
+    def files(self, name: str) -> tuple[int, dict[str, dict]]:
+        """``name``'s newest file list: its version number and path → entry."""
         with open(self._files_path(name)) as f:
             cur = json.load(f)
-            return cur["version"], cur["files"]
+        files = cur["files"].items()
+        return cur["version"], {p: e if isinstance(e, dict) else {"bytes": e} for p, e in files}
 
     def seed_files(self, name: str, files: dict[str, int]) -> None:
-        """Give ``name``, written before file lists existed, its first one."""
+        """Give ``name``, written before file lists existed, its first one
+        (``files`` is path → bytes)."""
         with self._lock:
             if not os.path.exists(self._files_path(name)):
-                self._write_json(self._files_path(name), {"version": 0, "files": files})
+                listed = {p: {"bytes": n} for p, n in files.items()}
+                self._write_json(self._files_path(name), {"version": 0, "files": listed})
 
-    def publish(self, name: str, add: dict[str, int], drop: dict[str, int]) -> bool:
-        """Write ``name``'s next file list: the current minus ``drop``, plus ``add``.
-        False, writing nothing, if a concurrent commit replaced part of ``drop``."""
+    def publish(self, name: str, add: dict[str, dict], drop: dict) -> bool:
+        """Write ``name``'s next file list: the current minus ``drop``, plus ``add``,
+        whose entries get the new version.  False, writing nothing, if a concurrent
+        commit replaced part of ``drop``."""
         with self._lock, open(self._files_path(name)) as f:
             cur = json.load(f)
             if not cur["files"].keys() >= drop.keys():
                 return False
-            files = {p: n for p, n in cur["files"].items() if p not in drop} | add
-            self._write_json(f.name, {"version": cur["version"] + 1, "files": files})
+            version = cur["version"] + 1
+            files = {p: e for p, e in cur["files"].items() if p not in drop}
+            files |= {p: {**e, "version": version} for p, e in add.items()}
+            self._write_json(f.name, {"version": version, "files": files})
             return True
 
     def _write_meta(self, meta: TableMeta) -> None:

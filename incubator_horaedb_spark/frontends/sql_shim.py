@@ -861,13 +861,15 @@ class Engine:
             return StatementInfo(
                 kind="query",
                 tables=tables,
-                has_predicate=bool(re.search(r"\bwhere\b", low)),
+                has_predicate=bool(re.search(r"\bwhere\b", self._scan_text(stmt), re.I)),
                 query_range_ms=_extract_query_range_ms(stmt, ts_cols),
             )
         if low.startswith("insert"):
             m = re.match(rf"^insert\s+into\s+(?:table\s+)?({_IDENT})", stmt, re.I)
             return StatementInfo(
-                kind="insert", tables={_unquote(m.group(1))} if m else set()
+                kind="insert",
+                tables={_unquote(m.group(1))} if m else set(),
+                reads=self._target_names(stmt),
             )
         for kw, pat in (
             ("create", rf"^create\s+table\s+(?:if\s+not\s+exists\s+)?({_IDENT})"),
@@ -878,7 +880,9 @@ class Engine:
         ):
             m = re.match(pat, stmt, re.I)
             if m:
-                return StatementInfo(kind=kw, tables={_unquote(m.group(1))})
+                # a CTAS reads its SELECT's tables
+                reads = self._target_names(stmt) if kw == "create" else set()
+                return StatementInfo(kind=kw, tables={_unquote(m.group(1))}, reads=reads)
         return StatementInfo(kind="other")
 
     def _coerce_ts_literals(self, stmt: str, tables: set[str]) -> str:

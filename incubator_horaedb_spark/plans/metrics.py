@@ -47,8 +47,12 @@ def _walk(node, visit, depth: int = 0) -> None:
 
 def executed_plan(df: DataFrame, *, run: bool = True):
     """The (AQE-final) executed physical plan, after running the query so
-    SQLMetrics carry real values."""
+    SQLMetrics carry real values.  The run goes through a new Dataset over
+    the same plan: a file scan sets its driver-side counters (files,
+    partitions, bytes) once per physical plan and each run resets them, so
+    a plan without an exchange that ran before would read 0 there."""
     if run:
+        df = df.select("*")
         df.collect()
     return df._jdf.queryExecution().executedPlan()
 

@@ -86,6 +86,8 @@ class StatementInfo:
 
     kind: str  # "query" | "insert" | "create" | "drop" | ... | "other"
     tables: set[str] = field(default_factory=set)
+    # the tables an INSERT … SELECT or CTAS reads (a query's are ``tables``)
+    reads: set[str] = field(default_factory=set)
     has_predicate: bool = True
     # extracted scan time range (ms); None = unbounded/unknown — the
     # reference's QueryRange rule only fires on a *known* over-threshold
@@ -176,12 +178,12 @@ class Limiter:
         with self._lock:
             read_bl, write_bl = set(self.read_block_list), set(self.write_block_list)
             rules = set(self.rules)
-        if info.kind == "query":
-            for t in sorted(info.tables & read_bl):
-                raise BlockedError(
-                    f"Table operation is blocked, table:{t}, op:{info.kind}"
-                )
-        elif info.kind == "insert":
+        reads = info.tables if info.kind == "query" else info.reads
+        for t in sorted(reads & read_bl):
+            raise BlockedError(
+                f"Table operation is blocked, table:{t}, op:{info.kind}"
+            )
+        if info.kind == "insert":
             for t in sorted(info.tables & write_bl):
                 raise BlockedError(
                     f"Table operation is blocked, table:{t}, op:{info.kind}"

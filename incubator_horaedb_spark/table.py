@@ -26,18 +26,29 @@ src/analytic_engine/src/instance/write.rs):
   ``DRIVER_WRITE_MAX_VALUES`` values) is written by a Spark job, as
   compaction is.
 
+Each commit records, per added file, its row count and timestamp range
+from the parquet footer and whether its rows are key-unique (FileMeta,
+sst/file.rs; format in catalog.py).  The driver writer checks
+uniqueness per batch; compaction of an Overwrite table dedups, so its
+output is unique; every other Spark-written file is not.
+
 Read path (replaces MergeIterator/DedupIterator/ChainIterator,
 src/analytic_engine/src/row_iter/):
 - Append tables: plain scan (ChainIterator — concatenation, no merge);
 - Overwrite tables: keep the newest row per primary key —
   ROW_NUMBER() OVER (PARTITION BY pk ORDER BY __seq DESC) = 1
-  (merge.rs:126 need_dedup + dedup.rs keep-newest-sequence);
+  (merge.rs:126 need_dedup + dedup.rs keep-newest-sequence) — over the
+  overlapping files only (``_overlapping``: not key-unique, no recorded
+  range, or a range meeting another commit's file).  Every other file
+  cannot share a key with any file and is scanned plainly; the read is
+  plain ∪ dedup(overlapping), and one scan when either side is empty;
 - TTL: rows older than now - ttl are filtered out at read when
   enable_ttl (table_options.rs:60), and wholly expired segments are pruned
   unread; ``ttl_expire`` drops them from the file list.
 
-``Table.read`` is the one scan, of the listed files: partition pruning,
-segment/time bounds, the sequence snapshot, TTL and the dedup window.
+``Table.read`` is the one read of the listed files: partition pruning,
+segment/time bounds, the sequence snapshot and TTL below the dedup window
+on both sides, the window on the overlapping side.
 
 Maintenance walks every listed leaf, ``[__partition=P/]__segment=S``
 (compaction/picker.rs runs on every partition's segments): ``compact``
@@ -48,8 +59,10 @@ uses the same rewrite loop, ``ttl_expire`` the same walk.
 
 from __future__ import annotations
 
+import bisect
 import functools
 import gc
+import math
 import re
 import time
 import uuid
@@ -81,12 +94,13 @@ STAGING = ".staging"
 _NULL_LEAF = "__HIVE_DEFAULT_PARTITION__"
 _SPARK_ERRORS = (PySparkException, Py4JJavaError)  # what a Spark call raises
 
-# Table.read's base scan per (session, data dir) while table, file-list version,
-# read schema, update mode and primary key hold: planning a file list costs
-# ~50 ms, +370 ms above 32 paths (local[4]).  Beside it, once built, the
-# argument-free dedup view of a table without TTL (each SQL statement's view,
-# ~35 ms to rebuild).  DROP TABLE lets go of a table's entries (``forget``).
-_SCANS: dict[tuple, tuple[tuple, DataFrame, DataFrame | None]] = {}
+# Table.read's base scans (plain side, overlapping side; ``_split_scans``)
+# per (session, data dir) while table, file-list version, read schema, update
+# mode and primary key hold: planning a file list costs ~50 ms, +370 ms above
+# 32 paths (local[4]).  Beside them, once built, the argument-free read of a
+# table without TTL (each SQL statement's view, ~35 ms to rebuild).  DROP
+# TABLE lets go of a table's entries (``forget``).
+_SCANS: dict[tuple, tuple[tuple, DataFrame | None, DataFrame | None, DataFrame | None]] = {}
 
 # The largest request batch, in values (rows x columns), that the driver
 # writer takes; past it the Spark writer is faster.  The driver writer pays
@@ -177,6 +191,20 @@ def _repartition(jvm):
     return jvm.org.apache.spark.sql.catalyst.trees.TreePattern.REPARTITION_OPERATION()
 
 
+def _key_unique(rows: list, fields: list[T.StructField], pk: list[str]) -> bool:
+    """Whether no two of the driver writer's ``rows`` (``fields`` as
+    ``_collected`` gives them) share the primary key ``pk``, one set of key
+    tuples.  Python's set and Spark's window see the same keys equal, NULLs
+    too, but for floats (Spark holds every NaN equal) and binary values
+    (collected as unhashable bytearrays): such a key is not checked, False.
+    Arrow's group-by would load ``pyarrow.dataset`` (see the lint guard)."""
+    idx = [i for i, f in enumerate(fields) if f.name in pk]
+    unchecked = (T.FloatType, T.DoubleType, T.BinaryType)
+    if any(isinstance(fields[i].dataType, unchecked) for i in idx):
+        return False
+    return len({tuple(r[i] for i in idx) for r in rows}) == len(rows)
+
+
 def _read_schema(meta) -> T.StructType:
     """Explicit read schema = current table schema (+ internals) so old
     segments written before an ALTER ADD COLUMN read the new column as
@@ -195,6 +223,68 @@ def _dedup(df: DataFrame, pk: list[str]) -> DataFrame:
     ``__rn`` column stays for the caller to project away."""
     w = Window.partitionBy(*pk).orderBy(F.col(SEQ_COLUMN).desc())
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
+
+
+# a parquet timestamp unit's ticks per millisecond
+_TICKS_PER_MS = {"ms": 1, "us": 1000, "ns": 1_000_000}
+
+
+def _footer(path: str, ts_col: str) -> dict:
+    """A parquet file's row count and, when every row group's statistics
+    give ``ts_col``'s min and max and count no NULL in it, its timestamp
+    range ``ts`` = [lo, hi] in epoch ms, floored (FileMeta's time range,
+    sst/file.rs).  An INT96 timestamp has no usable statistics, so
+    such a file gets no range."""
+    md = pq.read_metadata(path)
+    out = {"rows": md.num_rows}
+    j = md.schema.names.index(ts_col)
+    stats = [md.row_group(i).column(j).statistics for i in range(md.num_row_groups)]
+    if md.schema.column(j).physical_type != "INT64" or not all(
+        s is not None and s.has_min_max and s.has_null_count and s.null_count == 0
+        for s in stats
+    ):
+        return out
+    per_ms = _TICKS_PER_MS[md.schema.to_arrow_schema().field(ts_col).type.unit]
+    out["ts"] = [min(s.min_raw for s in stats) // per_ms, max(s.max_raw for s in stats) // per_ms]
+    return out
+
+
+def _overlapping(files: dict[str, dict]) -> set[str]:
+    """The listed files an OVERWRITE read must dedup: each file whose rows
+    are not key-unique, and each file whose timestamp range meets the range
+    of a file another commit (file-list version) added.  Every version of a
+    key shares its timestamp, so any other file can hold none of a file's
+    keys (the reference, too, merges SSTs only where their time ranges
+    overlap).  A file with no range could hold any key: then every file is
+    overlapping.
+
+    Sorted by range start, file k meets another commit's file j when j
+    starts no later and reaches k's start (the two latest-reaching files of
+    distinct commits among those before k answer that), or when j starts
+    inside k's range (some file of another commit among those whose start
+    falls in it)."""
+    if any("ts" not in e for e in files.values()):
+        return set(files)
+    spans = sorted((*e["ts"], e["version"], p) for p, e in files.items())
+    starts = [s[0] for s in spans]
+    # other[k]: the first index past k added by another commit than k's file
+    other = [len(spans)] * len(spans)
+    for k in range(len(spans) - 2, -1, -1):
+        other[k] = k + 1 if spans[k + 1][2] != spans[k][2] else other[k + 1]
+    out = {p for p, e in files.items() if not e["unique"]}
+    reach = [(None, -math.inf), (None, -math.inf)]  # (version, end), distinct versions
+    for k, (lo, hi, v, p) in enumerate(spans):
+        before = reach[reach[0][0] == v][1] >= lo
+        a, b = bisect.bisect_left(starts, lo), bisect.bisect_right(starts, hi)
+        if before or spans[a][2] != v or other[a] < b:
+            out.add(p)
+        if reach[0][0] == v:
+            reach[0] = (v, max(reach[0][1], hi))
+        elif hi > reach[0][1]:
+            reach = [(v, hi), reach[0]]
+        elif hi > reach[1][1]:
+            reach[1] = (v, hi)
+    return out
 
 
 class Table:
@@ -223,13 +313,14 @@ class Table:
         return seq
 
     def write_counted(self, df: DataFrame) -> int:
-        """Append one batch; returns its row count, from its files' footers.
-        Collects after the append, as ``write`` does."""
-        n = self._scan(self.meta, self._append(df)[1]).count()
+        """Append one batch; returns its row count, which ``_commit`` read
+        from its files' footers.  Collects after the append, as ``write``
+        does."""
+        n = sum(e["rows"] for e in self._append(df)[1].values())
         gc.collect()
         return n
 
-    def _append(self, df: DataFrame) -> tuple[int, dict[str, int]]:
+    def _append(self, df: DataFrame) -> tuple[int, dict[str, dict]]:
         meta = self.meta
         schema = meta.schema
         spark_codec, arrow_codec = meta.codecs()  # refuses an unknown one before any work
@@ -342,18 +433,20 @@ class Table:
         local = df.select(*map(_collected, fields), *part_cols)
         if _folds(local):
             rows = local.collect()
+            unique = _key_unique(rows, fields, schema.effective_primary_key)
 
-            def write(staging: str) -> None:
+            def write(staging: str) -> bool:
                 self._write_leaves(
                     staging, rows, fields, part_cols, sort_key, arrow_codec,
                     meta.options.num_rows_per_row_group,
                 )
+                return unique
 
         else:
             if sort_key:
                 df = df.sortWithinPartitions(*part_cols, *sort_key)
             write = df.write.option("compression", spark_codec).partitionBy(*part_cols).parquet
-        return seq, self._commit(write, {})
+        return seq, self._commit(meta, write, {})
 
     def _write_leaves(self, staging, rows, fields, part_cols, sort_key, codec, rows_per_group):
         """The driver writer: ``rows`` (``fields`` as ``_collected`` gives
@@ -396,19 +489,25 @@ class Table:
             )
 
     # ------------------------------------------------------------ commit --
-    def _commit(self, write: Callable[[str], None] | None, drop: dict[str, int]):
+    def _commit(self, meta, write: Callable[[str], bool | None] | None, drop: dict[str, dict]):
         """``write(staging)`` files laid out as leaves, move them in, publish a file
-        list adding them and dropping ``drop``, delete ``drop``; return the files
+        list adding them and dropping ``drop``, delete ``drop``; return the entries
         added — or, if a commit replaced part of ``drop`` first, delete them, None.
-        A rewrite (``write`` and ``drop``) that finds no file written raises: its
-        version would drop the rows it read.  A failure or crash before the
-        publish leaves only unlisted files (``sweep``)."""
+        Each entry holds the file's bytes, its footer's row count and range of
+        ``meta``'s timestamp column (``_footer``), and ``unique``: what ``write``
+        returned, true when no two rows it wrote share a primary key.  A rewrite (``write`` and
+        ``drop``) that finds no file written raises: its version would drop the
+        rows it read.  A failure or crash before the publish leaves only
+        unlisted files (``sweep``)."""
         data = self.catalog.data_dir(self.name)
         staging = f"{data}/{STAGING}/{uuid.uuid4().hex}"
         try:
-            if write:
-                write(staging)
-            added = fsops.list_files(self.spark, staging)
+            unique = bool(write(staging)) if write else False
+            ts = meta.schema.timestamp_column
+            added = {
+                path: {"bytes": n, **_footer(f"{staging}/{path}", ts), "unique": unique}
+                for path, n in fsops.list_files(self.spark, staging).items()
+            }
             if write and drop and not added:
                 raise IOError(f"commit: rewrite of {len(drop)} files found none in {staging}")
             for path in added:
@@ -438,7 +537,11 @@ class Table:
         with_internal: bool = False,
     ) -> DataFrame:
         """The dedup-view read (SURVEY §7.1): Append → chain, Overwrite →
-        newest-per-primary-key — the one scan every reader builds.
+        newest-per-primary-key — the one read every reader builds.  An
+        Overwrite table's files split in two (``_split_scans``): the window
+        runs over its ``_overlapping`` files, the rest are scanned plainly,
+        and the read is the union.  The steps up to ``as_of_seq`` apply to
+        both sides below the window.
 
         Steps, in order:
         - ``filters`` (column → value or list of values) on the partition
@@ -487,7 +590,7 @@ class Table:
             hit = _SCANS.get(key)
             try:
                 if hit is None or hit[0] != token:
-                    hit = _SCANS[key] = (token, self._scan(meta, files), None)
+                    hit = _SCANS[key] = (token, *self._split_scans(meta, files), None)
             except _SPARK_ERRORS:
                 if files.keys() <= self.catalog.files(self.name)[1].keys():
                     raise
@@ -497,16 +600,16 @@ class Table:
         bounded = lo_ms is not None or hi_ms is not None or as_of_seq is not None
         # the argument-free read of a table without TTL: a SQL statement's view
         view = not (bounded or filters or with_internal or opts.enable_ttl)
-        if view and hit[2] is not None:
-            return hit[2]
-        df = hit[1]
+        if view and hit[3] is not None:
+            return hit[3]
 
+        below = []  # predicates every side takes below the dedup window
         if filters and opts.partition_keys:
             append = opts.update_mode == "APPEND"  # no dedup window
-            below = {c: v for c, v in filters.items() if append or c in opts.partition_keys}
+            under = {c: v for c, v in filters.items() if append or c in opts.partition_keys}
             keys, n = opts.partition_keys, opts.num_partitions
-            df = df.filter(pruned_filter(self.spark, keys, n, below))
-            filters = {c: v for c, v in filters.items() if c not in below}
+            below.append(pruned_filter(self.spark, keys, n, under))
+            filters = {c: v for c, v in filters.items() if c not in under}
         if opts.enable_ttl:  # the TTL cut is one more lower bound
             now_ms = int(time.time() * 1000) if now_ms is None else now_ms
             cut = now_ms - opts.ttl_ms
@@ -515,31 +618,48 @@ class Table:
         if seg_ms:
             seg = F.col(SEGMENT_COLUMN)
             if lo_ms is not None:
-                df = df.filter(seg >= lo_ms // seg_ms)
+                below.append(seg >= lo_ms // seg_ms)
             if hi_ms is not None:
-                df = df.filter(seg <= (hi_ms - 1) // seg_ms)
+                below.append(seg <= (hi_ms - 1) // seg_ms)
         ts_ms = F.unix_millis(F.col(schema.timestamp_column))
         if lo_ms is not None:
-            df = df.filter(ts_ms >= lo_ms)
+            below.append(ts_ms >= lo_ms)
         if hi_ms is not None:
-            df = df.filter(ts_ms < hi_ms)
+            below.append(ts_ms < hi_ms)
         if as_of_seq is not None:
-            df = df.filter(F.col(SEQ_COLUMN) <= as_of_seq)
-        if opts.update_mode == "OVERWRITE":
-            df = _dedup(df, schema.effective_primary_key)
+            below.append(F.col(SEQ_COLUMN) <= as_of_seq)
 
         keep = [c.name for c in schema.columns]
         if with_internal:
             keep = keep + ([TSID_COLUMN] if schema.tsid_mode else []) + [SEQ_COLUMN]
-        df = df.select(*keep)
+        sides = []
+        for scan, overlapping in ((hit[1], False), (hit[2], True)):
+            if scan is not None:
+                scan = functools.reduce(DataFrame.filter, below, scan)
+                if overlapping:
+                    scan = _dedup(scan, schema.effective_primary_key)
+                sides.append(scan.select(*keep))
+        df = functools.reduce(DataFrame.union, sides)
         if filters:
             for c, v in filters.items():
                 df = df.filter(
                     F.col(c).isin(list(v)) if isinstance(v, (list, tuple, set)) else (F.col(c) == v)
                 )
         if view:  # over a newer entry, this one's token mismatches: rebuilt, never served
-            _SCANS[key] = (hit[0], hit[1], df)
+            _SCANS[key] = (*hit[:3], df)
         return df
+
+    def _split_scans(self, meta, files) -> tuple[DataFrame | None, DataFrame | None]:
+        """``files`` as ``read``'s two sides: the plain scan and the scan the
+        dedup window runs over, each None when it has no file (the plain
+        side of an empty table is its empty scan).  Only an OVERWRITE
+        table's ``_overlapping`` files go under the window."""
+        over = _overlapping(files) if meta.options.update_mode == "OVERWRITE" else set()
+        plain = {p: e for p, e in files.items() if p not in over}
+        return (
+            self._scan(meta, plain) if plain or not over else None,
+            self._scan(meta, over) if over else None,
+        )
 
     def _scan(self, meta, files) -> DataFrame:
         """``files`` (data-dir-relative) read with the table's read schema."""
@@ -560,32 +680,36 @@ class Table:
     # through one single-threaded task (compaction/picker.rs sizes SST
     # outputs the same way).
 
-    def _leaves(self) -> dict[str, dict[str, int]]:
-        """leaf (``[__partition=P/]__segment=S``) → {file: bytes}, listed."""
-        leaves: dict[str, dict[str, int]] = {}
-        for path, size in sorted(self.catalog.files(self.name)[1].items()):
-            leaves.setdefault(path.rsplit("/", 1)[0], {})[path] = size
+    def _leaves(self) -> dict[str, dict[str, dict]]:
+        """leaf (``[__partition=P/]__segment=S``) → {file: entry}, listed."""
+        leaves: dict[str, dict[str, dict]] = {}
+        for path, entry in sorted(self.catalog.files(self.name)[1].items()):
+            leaves.setdefault(path.rsplit("/", 1)[0], {})[path] = entry
         return leaves
 
     def _rewrite_segments(
-        self, shape: Callable[[DataFrame, int], DataFrame], target_file_bytes: int
+        self, shape: Callable[[DataFrame, int], DataFrame], target_file_bytes: int,
+        unique: bool,
     ) -> int:
         """The one per-leaf rewrite loop under ``compact`` and ``optimize_zorder``:
         each leaf's files are read with the table's read schema, passed through
         ``shape(df, nfiles)`` (``nfiles`` sized to ``target_file_bytes``) and
-        committed in place of exactly the files read.  Returns leaves rewritten."""
+        committed in place of exactly the files read, as key-unique files when
+        ``unique``.  Returns leaves rewritten."""
         meta = self.meta
         codec = meta.codecs()[0]
         rewritten = 0
         for leaf, files in self._leaves().items():
 
-            def write(staging: str) -> None:
+            def write(staging: str) -> bool:
                 df = self._scan(meta, files).drop(SEGMENT_COLUMN, PARTITION_COLUMN)
-                nfiles = fsops.n_output_files(sum(files.values()), target_file_bytes)
+                nbytes = sum(e["bytes"] for e in files.values())
+                nfiles = fsops.n_output_files(nbytes, target_file_bytes)
                 shape(df, nfiles).write.option("compression", codec).parquet(f"{staging}/{leaf}")
+                return unique
 
             try:
-                rewritten += self._commit(write, files) is not None
+                rewritten += self._commit(meta, write, files) is not None
             except _SPARK_ERRORS:
                 if files.keys() <= self.catalog.files(self.name)[1].keys():
                     raise  # else an overlapping pass replaced them first
@@ -597,13 +721,14 @@ class Table:
         Returns the number of rewritten segments."""
         meta = self.meta
         pk = meta.schema.effective_primary_key
+        overwrite = meta.options.update_mode == "OVERWRITE"
 
         def shape(df: DataFrame, nfiles: int) -> DataFrame:
             if nfiles == 1:
                 # one output file is one task: coalescing before the dedup
                 # window lets it run in that task, with no shuffle
                 df = df.coalesce(1)
-            if meta.options.update_mode == "OVERWRITE":
+            if overwrite:
                 df = _dedup(df, pk).drop("__rn")
             sort_key = [c for c in (meta.options.sampled_sort_key or []) if c in df.columns]
             if not sort_key:
@@ -614,7 +739,8 @@ class Table:
             out = df.repartitionByRange(nfiles, *sort_key) if nfiles > 1 else df
             return out.sortWithinPartitions(*sort_key)
 
-        return self._rewrite_segments(shape, target_file_bytes)
+        # the dedup leaves no two rows of a key in the leaf's files
+        return self._rewrite_segments(shape, target_file_bytes, overwrite)
 
     @staticmethod
     def zorder_column(cols: list[str], bits: int = 16):
@@ -661,7 +787,7 @@ class Table:
                 .drop("__z")
             )
 
-        return self._rewrite_segments(shape, target_file_bytes)
+        return self._rewrite_segments(shape, target_file_bytes, False)
 
     def ttl_expire(self, now_ms: int | None = None) -> int:
         """Drop whole segments beyond TTL (segment-level TTL purge —
@@ -677,7 +803,7 @@ class Table:
         for leaf, files in self._leaves().items():
             # a segment is expired only when its whole range is expired
             expired = int(leaf.rsplit("=", 1)[1]) + 1 <= cutoff_seg
-            if expired and self._commit(None, files) is not None:
+            if expired and self._commit(meta, None, files) is not None:
                 leaf_dir = f"{self.catalog.data_dir(self.name)}/{leaf}"
                 if not fsops.list_files(self.spark, leaf_dir):  # unlisted files wait for sweep
                     fsops.delete(self.spark, leaf_dir, recursive=False)

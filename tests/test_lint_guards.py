@@ -15,7 +15,10 @@ through ``table.batch_frame``; a guard fails if they call
 ``createDataFrame`` directly.
 
 The Overwrite dedup window lives in one place (``table._dedup``), shared
-by the table scan and compaction; a guard fails if it is copied again.
+by the table scan and compaction; a guard fails if it is copied again, and
+another fails unless ``_dedup(`` has exactly two callers: ``Table.read``
+(over the files that can hold two versions of a key) and
+``Table.compact``.
 
 A table's data is reached only through its catalog file list: a guard
 fails if a package module other than ``table.py``/``catalog.py`` builds
@@ -136,6 +139,32 @@ def test_one_overwrite_dedup_window():
         if window in line
     ]
     assert len(hits) == 1 and hits[0].startswith("incubator_horaedb_spark/table.py:"), hits
+
+
+def test_dedup_window_has_two_callers():
+    # Table.read dedups only its overlapping files and compaction dedups
+    # each leaf it rewrites.  A new reader calling _dedup would window files
+    # that cannot collide; one that skipped it would serve both versions.
+    pkg = REPO / "incubator_horaedb_spark"
+    callers = []
+    for path in pkg.rglob("*.py"):
+        tree = ast.parse(path.read_text(encoding="utf-8"), filename=str(path))
+        outer = {}  # each node's outermost enclosing function, as Class.method
+        for top in tree.body:
+            defs = top.body if isinstance(top, ast.ClassDef) else [top]
+            for fn in defs:
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    name = f"{top.name}.{fn.name}" if fn is not top else fn.name
+                    outer.update({id(n): name for n in ast.walk(fn)})
+        callers += [
+            f"{path.relative_to(REPO)}:{outer.get(id(n), '<module>')}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Name) and n.func.id == "_dedup"
+        ]
+    assert sorted(callers) == [
+        "incubator_horaedb_spark/table.py:Table.compact",
+        "incubator_horaedb_spark/table.py:Table.read",
+    ], callers
 
 
 def test_table_data_only_through_the_file_list():

@@ -98,3 +98,21 @@ def test_explain_analyze_statement(engine):
     text = "\n".join(lines)
     assert "Scan" in text and "metrics=[" in text
     assert "numFiles=" in text and "numOutputRows=" in text
+
+
+def test_scan_counters_of_a_frame_that_ran_before(engine):
+    # a plan with no exchange keeps its physical plan across runs, and each
+    # run resets the scan's driver-side counters: they must come from a run
+    # of their own, not read 0 after an earlier collect
+    engine.execute_sql(
+        "CREATE TABLE rr (v double, t timestamp NOT NULL, timestamp KEY(t)) "
+        "ENGINE=Analytic WITH (enable_ttl='false', update_mode='APPEND', segment_duration='2h')"
+    )
+    base = 1700000000000
+    for i in range(2):
+        engine.execute_sql(f"INSERT INTO rr (v, t) VALUES ({i}, {base + i * 7_200_000})")
+    df = engine.table("rr").read(lo_ms=base, hi_ms=base + 3_600_000)
+    first = scan_counters(df)
+    assert first[0]["files_read"] == first[0]["partitions_read"] == 1
+    df.collect()
+    assert scan_counters(df) == first

@@ -81,6 +81,45 @@ def test_read_block_list(engine):
     assert engine.execute_sql("SELECT * FROM demo").count() == 2
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "INSERT INTO dst SELECT * FROM demo",
+        "CREATE TABLE x ENGINE=Analytic WITH (enable_ttl='false') AS SELECT * FROM demo",
+    ],
+    ids=["insert-select", "ctas"],
+)
+def test_read_block_list_covers_the_select_of_a_write(engine, sql):
+    # INSERT … SELECT and CTAS read the SELECT's tables: a read-blocked
+    # table is refused there as in a query, and nothing is written
+    engine.execute_sql(
+        "CREATE TABLE dst (name string TAG, value double, "
+        "t timestamp NOT NULL, timestamp KEY (t)) WITH (enable_ttl='false')"
+    )
+    engine.limiter.block_read("demo")
+    with pytest.raises(BlockedError, match=r"blocked, table:demo, op:"):
+        engine.execute_sql(sql)
+    assert not engine.catalog.exists("x")
+    assert engine.execute_sql("SELECT count(*) AS n FROM dst").collect()[0]["n"] == 0
+    engine.limiter.unblock_read("demo")
+    engine.execute_sql(sql)
+    target = "dst" if sql.startswith("INSERT") else "x"
+    assert engine.execute_sql(f"SELECT count(*) AS n FROM {target}").collect()[0]["n"] == 1
+
+
+@pytest.mark.parametrize(
+    "sql",
+    ["SELECT * FROM demo -- where", "SELECT * FROM demo /* where */", "SELECT 'where' FROM demo"],
+    ids=["line-comment", "block-comment", "string-literal"],
+)
+def test_query_without_predicate_ignores_where_in_comments_and_strings(engine, sql):
+    engine.limiter.add_rule("QueryWithoutPredicate")
+    with pytest.raises(BlockedError, match=r"QueryWithoutPredicate"):
+        engine.execute_sql(sql)
+    engine.limiter.remove_rule("QueryWithoutPredicate")
+    assert engine.execute_sql(sql).count() == 1
+
+
 def test_write_block_list(engine):
     engine.limiter.block_write("demo")
     with pytest.raises(BlockedError, match=r"blocked, table:demo, op:insert"):

@@ -861,6 +861,7 @@ class Engine:
             return StatementInfo(
                 kind="query",
                 tables=tables,
+                reads=tables,
                 has_predicate=bool(re.search(r"\bwhere\b", self._scan_text(stmt), re.I)),
                 query_range_ms=_extract_query_range_ms(stmt, ts_cols),
             )

@@ -86,7 +86,8 @@ class StatementInfo:
 
     kind: str  # "query" | "insert" | "create" | "drop" | ... | "other"
     tables: set[str] = field(default_factory=set)
-    # the tables an INSERT … SELECT or CTAS reads (a query's are ``tables``)
+    # the tables the statement reads: a query's ``tables``, the SELECT's
+    # tables of an INSERT … SELECT or CTAS
     reads: set[str] = field(default_factory=set)
     has_predicate: bool = True
     # extracted scan time range (ms); None = unbounded/unknown — the
@@ -178,8 +179,7 @@ class Limiter:
         with self._lock:
             read_bl, write_bl = set(self.read_block_list), set(self.write_block_list)
             rules = set(self.rules)
-        reads = info.tables if info.kind == "query" else info.reads
-        for t in sorted(reads & read_bl):
+        for t in sorted(info.reads & read_bl):
             raise BlockedError(
                 f"Table operation is blocked, table:{t}, op:{info.kind}"
             )

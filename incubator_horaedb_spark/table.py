@@ -59,10 +59,8 @@ uses the same rewrite loop, ``ttl_expire`` the same walk.
 
 from __future__ import annotations
 
-import bisect
 import functools
 import gc
-import math
 import re
 import time
 import uuid
@@ -258,32 +256,20 @@ def _overlapping(files: dict[str, dict]) -> set[str]:
     overlap).  A file with no range could hold any key: then every file is
     overlapping.
 
-    Sorted by range start, file k meets another commit's file j when j
-    starts no later and reaches k's start (the two latest-reaching files of
-    distinct commits among those before k answer that), or when j starts
-    inside k's range (some file of another commit among those whose start
-    falls in it)."""
+    Files are compared pairwise, not per segment: after ``ALTER TABLE …
+    MODIFY SETTING segment_duration`` one timestamp maps to different
+    segments.  Sorted by range start, a file meets exactly the later files
+    that start inside its range."""
     if any("ts" not in e for e in files.values()):
         return set(files)
-    spans = sorted((*e["ts"], e["version"], p) for p, e in files.items())
-    starts = [s[0] for s in spans]
-    # other[k]: the first index past k added by another commit than k's file
-    other = [len(spans)] * len(spans)
-    for k in range(len(spans) - 2, -1, -1):
-        other[k] = k + 1 if spans[k + 1][2] != spans[k][2] else other[k + 1]
     out = {p for p, e in files.items() if not e["unique"]}
-    reach = [(None, -math.inf), (None, -math.inf)]  # (version, end), distinct versions
-    for k, (lo, hi, v, p) in enumerate(spans):
-        before = reach[reach[0][0] == v][1] >= lo
-        a, b = bisect.bisect_left(starts, lo), bisect.bisect_right(starts, hi)
-        if before or spans[a][2] != v or other[a] < b:
-            out.add(p)
-        if reach[0][0] == v:
-            reach[0] = (v, max(reach[0][1], hi))
-        elif hi > reach[0][1]:
-            reach = [(v, hi), reach[0]]
-        elif hi > reach[1][1]:
-            reach[1] = (v, hi)
+    spans = sorted((*e["ts"], e["version"], p) for p, e in files.items())
+    for k, (_, hi, v, p) in enumerate(spans):
+        j = k + 1
+        while j < len(spans) and spans[j][0] <= hi:
+            if spans[j][2] != v:
+                out |= {p, spans[j][3]}
+            j += 1
     return out
 
 

@@ -19,14 +19,14 @@ was before the split), on every read argument that sits below the window:
 The plan tests check the perfbench ``ingest_mix`` reader statement: over
 non-overlapping files its optimized plan has no ``Window``; with one
 overlapping append the window covers only the overlapping files.  The
-classifier itself is checked against a brute-force pairwise definition.
+classifier itself is checked on example ranges, and on a table whose
+segment duration changed between two writes of the same keys.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import random
 
 import pytest
 
@@ -190,6 +190,22 @@ def test_pre_1970_rows(engine, monkeypatch):
         _assert_same(tbl, monkeypatch, **kw)
 
 
+def test_changed_segment_duration(engine, monkeypatch):
+    """After a segment-duration change one timestamp maps to another segment
+    number, so two compacted leaves of different segments can hold one key."""
+    _create(engine, "seg")
+    _write(engine, "seg", _grid(["h0", "h1"], T0 + H, 10))
+    engine.execute_sql("ALTER TABLE seg MODIFY SETTING segment_duration='1h'")
+    _write(engine, "seg", _grid(["h0"], T0 + H, 10, usage=60.0))
+    tbl = engine.table("seg")
+    leaves = {p.rsplit("/", 1)[0] for p in tbl.catalog.files("seg")[1]}
+    assert leaves == {f"__segment={T0 // (2 * H)}", f"__segment={T0 // H + 1}"}
+    assert tbl.compact() == 2
+    assert len(_sides(tbl)[1]) == 2  # each leaf its own commit, one key range
+    rows = _assert_same(tbl, monkeypatch)
+    assert len(rows) == 20 and sum(r[3] >= 60.0 for r in rows) == 10
+
+
 def test_insert_select_file_is_deduped(engine, monkeypatch):
     _create(engine, "src")
     _create(engine, "dst")
@@ -298,33 +314,24 @@ def test_reader_plan_windows_only_the_overlapping_files(engine):
 
 
 # ------------------------------------------------------------- classifier --
-def _pairwise(files: dict) -> set:
-    if any("ts" not in e for e in files.values()):
-        return set(files)
-    out = {p for p, e in files.items() if not e["unique"]}
-    for p, e in files.items():
-        for q, f in files.items():
-            meet = e["ts"][0] <= f["ts"][1] and f["ts"][0] <= e["ts"][1]
-            if e["version"] != f["version"] and meet:
-                out.add(p)
-    return out
+def _entry(lo, hi, version, unique=True):
+    return {"bytes": 1, "ts": [lo, hi], "unique": unique, "version": version}
 
 
-def test_overlapping_matches_the_pairwise_definition():
-    rng = random.Random(7)
-    for _ in range(3000):
-        files = {}
-        for i in range(rng.randrange(9)):
-            lo = rng.randrange(-10, 20)
-            files[f"f{i}"] = {
-                "bytes": 1,
-                "ts": [lo, lo + rng.randrange(6)],
-                "unique": rng.random() < 0.9,
-                "version": rng.randrange(1, 4),
-            }
-        if files and rng.random() < 0.05:
-            files["old"] = {"bytes": 1}
-        assert table_mod._overlapping(files) == _pairwise(files), files
+def test_overlapping_files():
+    files = {
+        "a": _entry(0, 100, 1),
+        "b": _entry(10, 20, 1),  # inside a, same commit
+        "c": _entry(30, 40, 2),  # starts after b ends, inside a
+        "d": _entry(100, 110, 3),  # touches a's end
+        "e": _entry(200, 210, 1),
+        "f": _entry(205, 205, 1, unique=False),
+        "g": _entry(300, 300, 4),
+    }
+    assert table_mod._overlapping(files) == {"a", "c", "d", "f"}
+    assert table_mod._overlapping({}) == set()
+    # a file with no range could hold any key
+    assert table_mod._overlapping({**files, "old": {"bytes": 1}}) == {*files, "old"}
 
 
 def test_key_unique_checks_only_keys_python_and_spark_compare_alike():

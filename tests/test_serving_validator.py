@@ -179,9 +179,9 @@ def test_sub_partition_table_access_denied(engine):
 def test_limiter_unit():
     lim = Limiter(read_block_list=["t1"], rules=[("AnyQuery",)])
     with pytest.raises(BlockedError):
-        lim.try_limit(StatementInfo(kind="query", tables={"t1"}))
+        lim.try_limit(StatementInfo(kind="query", tables={"t1"}, reads={"t1"}))
     lim2 = Limiter()
-    lim2.try_limit(StatementInfo(kind="query", tables={"t1"}))  # no-op
+    lim2.try_limit(StatementInfo(kind="query", tables={"t1"}, reads={"t1"}))  # no-op
 
 
 # ----------------------------------------------- scoped ts coercion fix --

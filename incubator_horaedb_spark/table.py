@@ -51,10 +51,15 @@ segment/time bounds, the sequence snapshot and TTL below the dedup window
 on both sides, the window on the overlapping side.
 
 Maintenance walks every listed leaf, ``[__partition=P/]__segment=S``
-(compaction/picker.rs runs on every partition's segments): ``compact``
-rewrites a leaf's many small files into few, applying the dedup so read
-amplification drops — the TimeWindow picker analogue; ``optimize_zorder``
-uses the same rewrite loop, ``ttl_expire`` the same walk.
+(compaction/picker.rs runs on every partition's segments).  ``compact``
+is the TimeWindow picker analogue: a leaf is its time window, and in each
+leaf it picks, from the FileMeta the file list carries, the files whose
+rewrite changes something (``_pick``) and merges only those, applying the
+dedup so read amplification drops.  A settled file (past half the target
+file size and out of every dedup's reach) and a leaf's lone key-unique
+file are left alone.  ``optimize_zorder`` rewrites every leaf whole
+through the same loop; ``ttl_expire`` drops a leaf once every file in it
+has a timestamp range that ends before the TTL cut.
 """
 
 from __future__ import annotations
@@ -271,6 +276,89 @@ def _overlapping(files: dict[str, dict]) -> set[str]:
                 out |= {p, spans[j][3]}
             j += 1
     return out
+
+
+def _by_leaf(files: dict[str, dict]) -> dict[str, dict[str, dict]]:
+    """``files`` grouped by leaf (``[__partition=P/]__segment=S``), sorted."""
+    leaves: dict[str, dict[str, dict]] = {}
+    for path, entry in sorted(files.items()):
+        leaves.setdefault(path.rsplit("/", 1)[0], {})[path] = entry
+    return leaves
+
+
+def _segment(leaf: str) -> int | None:
+    """A leaf's ``__segment`` number; None for the leaf of NULL timestamps."""
+    s = leaf.rsplit("=", 1)[1]
+    return None if s == _NULL_LEAF else int(s)
+
+
+def _segment_bounds(files: dict[str, dict], lo_ms: int | None, hi_ms: int | None) -> tuple[int, int]:
+    """The least and greatest ``__segment`` among the leaves holding a file
+    whose timestamp range meets ``[lo_ms, hi_ms)`` (either end None:
+    unbounded); a file with no range always counts.  Every row in the
+    range, every version of its key too, sits in such a leaf, whatever
+    segment duration named it.  (0, -1), which no segment is within, when
+    no file meets the range."""
+    segs = [
+        s
+        for p, e in files.items()
+        if (s := _segment(p.rsplit("/", 1)[0])) is not None
+        and (
+            "ts" not in e
+            or (lo_ms is None or e["ts"][1] >= lo_ms) and (hi_ms is None or e["ts"][0] < hi_ms)
+        )
+    ]
+    return (min(segs), max(segs)) if segs else (0, -1)
+
+
+def _pick(
+    leaves: dict[str, dict[str, dict]], over: set[str], overwrite: bool, target_file_bytes: int
+) -> dict[str, dict[str, dict]]:
+    """The files ``compact`` rewrites, per leaf (the SizeTieredPicker run in
+    each time window, compaction/picker.rs:211 and :498).  A leaf's pick is
+    its files that are not settled: a file is settled when it holds more
+    than half of ``target_file_bytes`` and no dedup can touch it (an APPEND
+    table, or a key-unique file outside ``over``, the ``_overlapping``
+    files).  Two files past half the target sum past it, so
+    ``fsops.n_output_files`` would write them back as two files again: the
+    tier follows from the output sizing, it is not tuned.
+
+    A leaf is rewritten when its pick holds two files or more, or one
+    OVERWRITE file that is not key-unique.  A lone key-unique file is left
+    alone even when it overlaps a file of another leaf (after ``ALTER …
+    MODIFY SETTING segment_duration``): rewritten on its own it gives back
+    the same rows.
+
+    A rewrite's output range spans its inputs' ranges, so it can meet the
+    range of a settled file beside it.  Both then read as overlapping,
+    which is right (they go under the read's dedup window), and the next
+    ``compact`` picks both."""
+    picked = {}
+    for leaf, files in leaves.items():
+        # The tier.  Recorded negative results (perfbench, local[4] on 4
+        # cores), not to be retried without new evidence:
+        # - leaving ``ingest_mix``'s compacted file alone while its leaf's
+        #   new files merge beside it (seeds 5-6): sweep-2 live bytes would
+        #   go from 56.5 KB to ~63.6 KB, ``space_amp`` +13% against a 10%
+        #   bound;
+        # - a 4-file minimum per leaf, HoraeDB's ``min_threshold`` (seeds
+        #   2-4): ``ingest_mix`` ``write_amp`` fell 0.316 -> 0.259, but the
+        #   process's first, cold Spark compaction (~1.3 s) moved into the
+        #   timed window: ``write_rows_per_s`` fell 19% and 4%,
+        #   ``reads_per_s`` 19% and 10%;
+        # - merging key-disjoint leaves with pyarrow on the driver: sweeps
+        #   went from ~430 ms to ~55 ms, but ``py_rss_mb`` rose from 134 to
+        #   155-157 MB (+16% against a 5% bound) and ``read_p50_ms`` by
+        #   7-19%.
+        pick = {
+            p: e
+            for p, e in files.items()
+            if 2 * e["bytes"] <= target_file_bytes
+            or overwrite and (not e.get("unique") or p in over)
+        }
+        if len(pick) >= 2 or overwrite and any(not e.get("unique") for e in pick.values()):
+            picked[leaf] = pick
+    return picked
 
 
 class Table:
@@ -544,13 +632,15 @@ class Table:
         - time bounds ``[lo_ms, hi_ms)`` also bound ``__segment``
           (predicate.rs:180-197 TimeRange → storage pruning).  A plain
           ``read().filter(t >= lo)`` cannot prune: Catalyst will not invert
-          ``__segment = ts DIV segment_duration``, but DIV is monotone, so
-          t ∈ [lo, hi) ⇒ __segment ∈ [lo DIV d, (hi-1) DIV d].  The segment
+          ``__segment = ts DIV segment_duration``.  The bounds come from
+          the file list, not from the current duration, because leaves
+          written before ``ALTER … MODIFY SETTING segment_duration`` were
+          named under the old one (``_segment_bounds``).  The segment
           predicate prunes whole leaves at planning, the timestamp
           predicate trims the edge segments row-exactly.  Both sit below
           the dedup window, which is safe because the timestamp is part of
           the effective primary key (schema.rs:628): every version of a
-          key shares its timestamp, hence its segment.
+          key shares its timestamp.
         - ``as_of_seq`` is the sequence-snapshot read (instance/read.rs: a
           read pins the memtable+SST view at a sequence; rows from later
           writes are invisible).  Batches carry one monotonic ``__seq``
@@ -600,14 +690,14 @@ class Table:
             now_ms = int(time.time() * 1000) if now_ms is None else now_ms
             cut = now_ms - opts.ttl_ms
             lo_ms = cut if lo_ms is None else max(lo_ms, cut)
-        seg_ms = opts.segment_duration_ms
-        if seg_ms:
-            seg = F.col(SEGMENT_COLUMN)
-            if lo_ms is not None:
-                below.append(seg >= lo_ms // seg_ms)
-            if hi_ms is not None:
-                below.append(seg <= (hi_ms - 1) // seg_ms)
         ts_ms = F.unix_millis(F.col(schema.timestamp_column))
+        if lo_ms is not None or hi_ms is not None:
+            seg = F.col(SEGMENT_COLUMN)
+            lo_seg, hi_seg = _segment_bounds(files, lo_ms, hi_ms)
+            if lo_ms is not None:
+                below.append(seg >= lo_seg)
+            if hi_ms is not None:
+                below.append(seg <= hi_seg)
         if lo_ms is not None:
             below.append(ts_ms >= lo_ms)
         if hi_ms is not None:
@@ -668,24 +758,22 @@ class Table:
 
     def _leaves(self) -> dict[str, dict[str, dict]]:
         """leaf (``[__partition=P/]__segment=S``) → {file: entry}, listed."""
-        leaves: dict[str, dict[str, dict]] = {}
-        for path, entry in sorted(self.catalog.files(self.name)[1].items()):
-            leaves.setdefault(path.rsplit("/", 1)[0], {})[path] = entry
-        return leaves
+        return _by_leaf(self.catalog.files(self.name)[1])
 
     def _rewrite_segments(
-        self, shape: Callable[[DataFrame, int], DataFrame], target_file_bytes: int,
-        unique: bool,
+        self, leaves: dict[str, dict[str, dict]], shape: Callable[[DataFrame, int], DataFrame],
+        target_file_bytes: int, unique: bool,
     ) -> int:
         """The one per-leaf rewrite loop under ``compact`` and ``optimize_zorder``:
-        each leaf's files are read with the table's read schema, passed through
-        ``shape(df, nfiles)`` (``nfiles`` sized to ``target_file_bytes``) and
-        committed in place of exactly the files read, as key-unique files when
-        ``unique``.  Returns leaves rewritten."""
+        for each leaf of ``leaves`` (leaf → {file: entry}), the files given are
+        read with the table's read schema, passed through ``shape(df, nfiles)``
+        (``nfiles`` sized to ``target_file_bytes``) and committed in place of
+        exactly the files read, as key-unique files when ``unique``.  The leaf's
+        other files stay.  Returns leaves rewritten."""
         meta = self.meta
         codec = meta.codecs()[0]
         rewritten = 0
-        for leaf, files in self._leaves().items():
+        for leaf, files in leaves.items():
 
             def write(staging: str) -> bool:
                 df = self._scan(meta, files).drop(SEGMENT_COLUMN, PARTITION_COLUMN)
@@ -702,12 +790,22 @@ class Table:
         return rewritten
 
     def compact(self, target_file_bytes: int = fsops.TARGET_FILE_BYTES) -> int:
-        """Rewrite each segment into compacted, sort-clustered files,
-        applying Overwrite dedup — the TimeWindow compaction analogue.
-        Returns the number of rewritten segments."""
+        """Merge, in each leaf, the files whose rewrite changes something
+        (``_pick``) into compacted, sort-clustered files, applying the
+        Overwrite dedup — the TimeWindow compaction analogue.  The pick reads
+        the FileMeta of one file-list version, the one ``_overlapping`` is
+        computed from.  A leaf holding one key-unique file, or only settled
+        files beside one, is left alone: a table whose leaves all are starts
+        no Spark job and publishes no version.  A rewrite's output can meet
+        a settled file's range; both then go under the read's dedup window
+        until the next ``compact`` picks them.  Returns the number of
+        rewritten leaves."""
         meta = self.meta
         pk = meta.schema.effective_primary_key
         overwrite = meta.options.update_mode == "OVERWRITE"
+        files = self.catalog.files(self.name)[1]
+        over = _overlapping(files) if overwrite else set()
+        leaves = _pick(_by_leaf(files), over, overwrite, target_file_bytes)
 
         def shape(df: DataFrame, nfiles: int) -> DataFrame:
             if nfiles == 1:
@@ -725,8 +823,9 @@ class Table:
             out = df.repartitionByRange(nfiles, *sort_key) if nfiles > 1 else df
             return out.sortWithinPartitions(*sort_key)
 
-        # the dedup leaves no two rows of a key in the leaf's files
-        return self._rewrite_segments(shape, target_file_bytes, overwrite)
+        # the dedup leaves no two rows of a key in the files it read, and no
+        # file left beside them can share a key with them
+        return self._rewrite_segments(leaves, shape, target_file_bytes, overwrite)
 
     @staticmethod
     def zorder_column(cols: list[str], bits: int = 16):
@@ -773,22 +872,30 @@ class Table:
                 .drop("__z")
             )
 
-        return self._rewrite_segments(shape, target_file_bytes, False)
+        return self._rewrite_segments(self._leaves(), shape, target_file_bytes, False)
 
     def ttl_expire(self, now_ms: int | None = None) -> int:
-        """Drop whole segments beyond TTL (segment-level TTL purge —
-        src/analytic_engine retention).  Metadata-only: one commit that
-        drops the files per expired leaf, no data read.  Returns leaves
-        dropped."""
+        """Drop whole leaves beyond TTL (segment-level TTL purge —
+        src/analytic_engine retention).  A leaf is expired when every file in
+        it has a timestamp range that ends before ``now_ms - ttl``, whatever
+        segment duration named the leaf.  A leaf with a file that has no
+        range is judged by its segment number under the current duration,
+        which is wrong for a leaf named under an older one.  Metadata-only:
+        one commit that drops the files per expired leaf, no data read.
+        Returns leaves dropped."""
         meta = self.meta
-        if not meta.options.enable_ttl or meta.options.segment_duration_ms is None:
+        seg_ms = meta.options.segment_duration_ms
+        if not meta.options.enable_ttl or seg_ms is None:
             return 0
         now_ms = int(time.time() * 1000) if now_ms is None else now_ms
-        cutoff_seg = (now_ms - meta.options.ttl_ms) // meta.options.segment_duration_ms
+        cut = now_ms - meta.options.ttl_ms
         dropped = 0
         for leaf, files in self._leaves().items():
-            # a segment is expired only when its whole range is expired
-            expired = int(leaf.rsplit("=", 1)[1]) + 1 <= cutoff_seg
+            if all("ts" in e for e in files.values()):
+                expired = all(e["ts"][1] < cut for e in files.values())
+            else:  # a segment is expired only when its whole range is expired
+                seg = _segment(leaf)
+                expired = seg is not None and seg + 1 <= cut // seg_ms
             if expired and self._commit(meta, None, files) is not None:
                 leaf_dir = f"{self.catalog.data_dir(self.name)}/{leaf}"
                 if not fsops.list_files(self.spark, leaf_dir):  # unlisted files wait for sweep

@@ -192,10 +192,13 @@ def test_pre_1970_rows(engine, monkeypatch):
 
 def test_changed_segment_duration(engine, monkeypatch):
     """After a segment-duration change one timestamp maps to another segment
-    number, so two compacted leaves of different segments can hold one key."""
+    number, so two compacted leaves of different segments can hold one key.
+    Each leaf gets two files, so that compact() rewrites both."""
     _create(engine, "seg")
     _write(engine, "seg", _grid(["h0", "h1"], T0 + H, 10))
+    _write(engine, "seg", _grid(["h1"], T0 + H, 10, usage=30.0))
     engine.execute_sql("ALTER TABLE seg MODIFY SETTING segment_duration='1h'")
+    _write(engine, "seg", _grid(["h0"], T0 + H, 10, usage=50.0))
     _write(engine, "seg", _grid(["h0"], T0 + H, 10, usage=60.0))
     tbl = engine.table("seg")
     leaves = {p.rsplit("/", 1)[0] for p in tbl.catalog.files("seg")[1]}

@@ -20,6 +20,10 @@ another fails unless ``_dedup(`` has exactly two callers: ``Table.read``
 (over the files that can hold two versions of a key) and
 ``Table.compact``.
 
+``Table.read`` bounds ``__segment`` from the file list: a guard fails if
+it reads ``segment_duration_ms``, which names only the leaves written
+since the last duration change.
+
 A table's data is reached only through its catalog file list: a guard
 fails if a package module other than ``table.py``/``catalog.py`` builds
 the data directory path.
@@ -165,6 +169,24 @@ def test_dedup_window_has_two_callers():
         "incubator_horaedb_spark/table.py:Table.compact",
         "incubator_horaedb_spark/table.py:Table.read",
     ], callers
+
+
+def test_read_bounds_segments_without_the_segment_duration():
+    # Leaves written before ALTER … MODIFY SETTING segment_duration keep the
+    # names the old duration gave them, so segment bounds computed from the
+    # current duration skip them: a TTL read (the default) returned no row of
+    # a table written an hour before the duration shrank.  Table.read takes
+    # its segment bounds from the file list.
+    tree = ast.parse((REPO / "incubator_horaedb_spark" / "table.py").read_text(encoding="utf-8"))
+    (table,) = [n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "Table"]
+    (read,) = [n for n in table.body if isinstance(n, ast.FunctionDef) and n.name == "read"]
+    uses = [
+        n.lineno
+        for n in ast.walk(read)
+        if isinstance(n, ast.Attribute) and n.attr == "segment_duration_ms"
+        or isinstance(n, ast.Name) and n.id == "segment_duration_ms"
+    ]
+    assert not uses, f"Table.read uses segment_duration_ms at table.py lines {uses}"
 
 
 def test_table_data_only_through_the_file_list():

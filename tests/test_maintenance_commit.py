@@ -26,6 +26,7 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -100,13 +101,14 @@ def test_failed_first_rename_raises(engine, monkeypatch):
     """A move that returns false fails the append or the rewrite loudly;
     nothing becomes visible and nothing is lost."""
     tbl = _mk_table(engine, "mc1", n_segments=1)
+    _insert(engine, "mc1", 0, 10, tag="y")  # a second file: compact() rewrites the leaf
     monkeypatch.setattr(fsops, "rename", lambda spark, src, dst: False)
     with pytest.raises(IOError, match="move"):
         _insert(engine, "mc1", 0, 10, tag="x")
     with pytest.raises(IOError, match="move"):
         tbl.compact()
     monkeypatch.undo()
-    assert tbl.read().count() == 40
+    assert tbl.read().count() == 50
     assert not _orphans(_reopen(engine), "mc1")
 
 
@@ -129,8 +131,9 @@ def test_failed_second_rename_rolls_back(engine, monkeypatch):
     assert len(moves) == 2
     assert tbl.read().count() == 40
     assert len(_orphans(engine, "mc2")) == 1  # the moved, unpublished file
+    _insert(engine, "mc2", 0, 10, tag="y")  # a second file: compact() rewrites the leaf
     assert tbl.compact() == 1
-    assert tbl.read().count() == 40
+    assert tbl.read().count() == 50
     assert not _orphans(_reopen(engine), "mc2")
 
 
@@ -181,12 +184,15 @@ def test_crash_at_each_commit_step(engine, monkeypatch, op, step):
     data = engine.catalog.data_dir("mc8")
     assert os.listdir(f"{data}/.staging")
     assert bool(_orphans(engine, "mc8")) != published_append
-    fresh = _reopen(engine).table("mc8")
+    fresh_engine = _reopen(engine)
+    fresh = fresh_engine.table("mc8")
     assert not _orphans(engine, "mc8")
     assert not os.path.exists(f"{data}/.staging")
     assert fresh.read().count() == expected
+    for s in range(2):  # a new file in every leaf: compact() rewrites each
+        _insert(fresh_engine, "mc8", s, 10)
     assert fresh.compact() == len(fresh._leaves())
-    assert fresh.read().count() == expected
+    assert fresh.read().count() == expected + 20
 
 
 def test_stale_tmp_and_aside_recovery(engine, spark, monkeypatch):
@@ -197,7 +203,9 @@ def test_stale_tmp_and_aside_recovery(engine, spark, monkeypatch):
     Run on an unpartitioned table and on a key-partitioned one, whose
     leaves are __partition=P/__segment=S."""
     for name, partition in (("mc4", ""), ("mc4p", "PARTITION BY KEY(k) PARTITIONS 2")):
-        tbl = _mk_table(engine, name, n_segments=2, partition=partition)
+        tbl = _mk_table(engine, name, n_segments=2, rows_per_seg=20, partition=partition)
+        for s in range(2):  # a second file in every leaf: compact() rewrites each
+            _insert(engine, name, s, 20)
         leaves = list(tbl._leaves())
         assert len(leaves) == (4 if partition else 2)
         for step, crash in (("staged", "append"), ("moved", "append"), ("moved", "rewrite")):
@@ -230,11 +238,12 @@ def test_segment_dirs_filters_non_digit_names(engine, spark):
     (live,) = engine.catalog.files("mc5")[1]
     os.makedirs(f"{data}/__segment=0.compact")
     shutil.copy(f"{data}/{live}", f"{data}/__segment=0.compact/x.parquet")
+    _insert(engine, "mc5", 0, 10, tag="y")  # a second file: compact() rewrites the leaf
     assert list(tbl._leaves()) == ["__segment=0"]
-    assert tbl.read().count() == 40
+    assert tbl.read().count() == 50
     assert tbl.ttl_expire() == 0
     assert tbl.compact() == 1
-    assert tbl.read().count() == 40
+    assert tbl.read().count() == 50
     assert _orphans(engine, "mc5") == {"__segment=0.compact/x.parquet"}
     assert not _orphans(_reopen(engine), "mc5")
 
@@ -244,6 +253,7 @@ def test_append_acknowledged_inside_rewrite_commit_survives(engine, monkeypatch)
     that leaf's replacement and before it commits, is still counted
     afterwards: the rewrite replaces only the files it read."""
     tbl = _mk_table(engine, "mc7", n_segments=1)
+    _insert(engine, "mc7", 0, 10, tag="y")  # a second file: compact() rewrites the leaf
     real = DataFrameWriter.parquet
     state = {"compacting": False, "acked": False}
 
@@ -258,7 +268,7 @@ def test_append_acknowledged_inside_rewrite_commit_survives(engine, monkeypatch)
     state["compacting"] = True
     tbl.compact()
     assert state["acked"]
-    assert engine.execute_sql("SELECT count(*) AS n FROM mc7").collect()[0]["n"] == 41
+    assert engine.execute_sql("SELECT count(*) AS n FROM mc7").collect()[0]["n"] == 51
 
 
 def test_table_without_file_list_is_adopted_at_open(engine):
@@ -285,9 +295,10 @@ def test_table_without_file_list_is_adopted_at_open(engine):
     assert not _orphans(fresh, "mc9")
     tbl = fresh.table("mc9")
     assert tbl.read().count() == 120
-    _insert(fresh, "mc9", 1, 10, tag="y")
+    for s in range(3):  # a second file in every leaf: compact() rewrites each
+        _insert(fresh, "mc9", s, 10, tag="y")
     assert tbl.compact() == 3
-    assert tbl.read().count() == 130
+    assert tbl.read().count() == 150
 
 
 def test_table_name_with_semicolon_keeps_rows(engine):
@@ -310,11 +321,12 @@ def test_rewrite_that_writes_nothing_raises(engine, monkeypatch):
     """A rewrite whose write leaves no file fails loudly instead of
     committing a version that drops the leaf."""
     tbl = _mk_table(engine, "mc10", n_segments=1)
+    _insert(engine, "mc10", 0, 10, tag="y")  # a second file: compact() rewrites the leaf
     monkeypatch.setattr(DataFrameWriter, "parquet", lambda self, path, *a, **k: None)
     with pytest.raises(IOError, match="found none"):
         tbl.compact()
     monkeypatch.undo()
-    assert tbl.read().count() == 40
+    assert tbl.read().count() == 50
     assert not _orphans(engine, "mc10")
 
 
@@ -327,38 +339,49 @@ def test_concurrent_reader_sees_whole_segments_only(engine, spark):
     FILE_NOT_EXIST, or, when the file went between its footer read and its
     data read, FAILED_READ_FILE caused by java.nio's NoSuchFileException
     (Hadoop's vectored read opens the file again).  Any other error, or any
-    other count, is a defect."""
+    other count, is a defect.
+
+    Before each of the three compact() calls every leaf gets one more file,
+    so each call rewrites every leaf.  Those appends are made while no read
+    is in flight (``gate``), so each count has one right answer."""
     n_segments, rows = 3, 60
     tbl = _mk_table(engine, "mc6", n_segments=n_segments, rows_per_seg=rows)
     total = n_segments * rows
-    observed: list[int] = []
+    observed: list[tuple[int, int]] = []  # (count, rows in the table)
     conflicts: list[Exception] = []
     errors: list[Exception] = []
     stop = threading.Event()
+    gate = threading.Lock()  # held by a read, and by the appends between calls
 
     def reader():
         while not stop.is_set():
             try:
-                observed.append(tbl.read().count())
+                with gate:
+                    observed.append((tbl.read().count(), total))
             except Exception as e:  # noqa: BLE001 — collected for assertion
                 msg = str(e)
                 if any(m in msg for m in ("FILE_NOT_EXIST", "FileNotFound", "NoSuchFileException")):
                     conflicts.append(e)  # loud conflict, not a wrong answer
                 else:
                     errors.append(e)
+            time.sleep(0.01)  # lets the appends between calls take the gate
 
     t = threading.Thread(target=reader)
     t.start()
     try:
         for _ in range(3):
+            with gate:
+                for s in range(n_segments):
+                    _insert(engine, "mc6", s, 10, tag="y")
+                total += n_segments * 10
             assert tbl.compact() == n_segments
     finally:
         stop.set()
         t.join()
     assert not errors, errors[:3]
     assert observed, "reader never completed a count"
-    bad = [c for c in observed if c != total]
-    assert not bad, f"partial reads: {sorted(set(bad))}, table has {total}"
+    bad = [(c, want) for c, want in observed if c != want]
+    assert not bad, f"partial reads (count, table rows): {sorted(set(bad))}"
     assert tbl.read().count() == total
 
 

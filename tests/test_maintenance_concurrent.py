@@ -58,14 +58,19 @@ def _mk_overwrite_table(engine, name: str):
         "WITH(enable_ttl='false', update_mode='OVERWRITE', segment_duration='2h')"
     )
     for version in range(1, N_VERSIONS + 1):
-        for s in range(N_SEG):
-            values = ", ".join(
-                f"('s{s}k{i}', {version * 10000 + s * 100 + i}, "
-                f"{s * SEG_MS + 1000 + i})"
-                for i in range(KEYS_PER_SEG)
-            )
-            engine.execute_sql(f"INSERT INTO {name} (k, v, t) VALUES {values}")
+        _write_version(engine, name, version)
     return engine.table(name)
+
+
+def _write_version(engine, name: str, version: int) -> None:
+    """One INSERT per segment writing ``version`` of every key."""
+    for s in range(N_SEG):
+        values = ", ".join(
+            f"('s{s}k{i}', {version * 10000 + s * 100 + i}, "
+            f"{s * SEG_MS + 1000 + i})"
+            for i in range(KEYS_PER_SEG)
+        )
+        engine.execute_sql(f"INSERT INTO {name} (k, v, t) VALUES {values}")
 
 
 def _latest() -> dict[str, float]:
@@ -118,7 +123,9 @@ def test_dedup_reader_racing_compaction(engine):
     t = threading.Thread(target=reader)
     t.start()
     try:
-        for _ in range(3):
+        for call in range(3):
+            if call:  # the latest version once more: a second file in every leaf
+                _write_version(engine, "mcc1", N_VERSIONS)
             assert tbl.compact() == N_SEG
     finally:
         stop.set()

@@ -163,3 +163,61 @@ def test_ttl_read_prunes_expired_segments(spark, tmp_path, layout):
     for p in gone:
         os.remove(os.path.join(data, p))
     assert sorted(r["v"] for r in tbl.read().collect()) == [0.0, 1.0, 2.0, 3.0]
+
+
+def _shrunk(engine, name, with_, t):
+    """A table of 10 rows at ``t`` written under segment_duration '2h',
+    then altered to '1h': its leaf keeps the name the old duration gave."""
+    engine.execute_sql(
+        f"CREATE TABLE {name} (k string TAG, v double, t timestamp NOT NULL, timestamp KEY (t)) "
+        f"ENGINE=Analytic WITH(segment_duration='2h'{with_})"
+    )
+    values = ", ".join(f"('k{i}', {i}, {t + i})" for i in range(10))
+    engine.execute_sql(f"INSERT INTO {name} (k, v, t) VALUES {values}")
+    engine.execute_sql(f"ALTER TABLE {name} MODIFY SETTING segment_duration='1h'")
+    return engine.table(name)
+
+
+def _count(engine, sql):
+    return engine.execute_sql(sql).collect()[0]["n"]
+
+
+def test_rows_written_before_a_shorter_segment_duration_stay_live(spark, tmp_path):
+    """TTL on (the default): the TTL read and ``ttl_expire`` bound segments
+    by the file list, not by the current duration, so the rows written an
+    hour ago under the old duration are still read and their leaf kept."""
+    engine = Engine(spark, str(tmp_path / "store"))
+    tbl = _shrunk(engine, "sd", "", int(time.time() * 1000) - H)
+    assert tbl.meta.options.enable_ttl
+    assert _count(engine, "SELECT count(*) AS n FROM sd") == 10
+    assert tbl.ttl_expire() == 0
+    assert tbl.read().count() == 10
+
+
+def test_bounded_read_after_a_shorter_segment_duration(spark, tmp_path):
+    """TTL off: ``read(lo_ms, hi_ms)`` finds the rows of a leaf named under
+    the old duration, as the SQL time filter and the unbounded read do."""
+    engine = Engine(spark, str(tmp_path / "store"))
+    t0 = BASE - 48 * H
+    tbl = _shrunk(engine, "sdb", ", enable_ttl='false'", t0 + H)
+    assert tbl.read(lo_ms=t0 + H, hi_ms=t0 + 2 * H).count() == 10
+    assert tbl.read(lo_ms=t0 + H + 5, hi_ms=t0 + 2 * H).count() == 5
+    assert tbl.read(hi_ms=t0 + H + 5).count() == 5
+    assert tbl.read(lo_ms=t0 + 2 * H).count() == 0
+    assert tbl.read().count() == 10
+    assert _count(engine, f"SELECT count(*) AS n FROM sdb WHERE t >= {t0 + H}") == 10
+
+
+def test_expired_leaf_of_an_older_segment_duration_is_dropped(spark, tmp_path):
+    """A leaf named under the old duration whose rows are all past the TTL
+    is still dropped; a live leaf written under the new one is kept."""
+    engine = Engine(spark, str(tmp_path / "store"))
+    now = BASE + 12 * H
+    tbl = _shrunk(engine, "sde", ", ttl='1d'", now - 3 * 24 * H)
+    values = ", ".join(f"('k{i}', {i}, {now - H + i})" for i in range(4))
+    engine.execute_sql(f"INSERT INTO sde (k, v, t) VALUES {values}")
+    assert len(tbl._leaves()) == 2
+    assert tbl.read(now_ms=now).count() == 4
+    assert tbl.ttl_expire(now_ms=now) == 1
+    assert [leaf.rsplit("=", 1)[1] for leaf in tbl._leaves()] == [str((now - H) // H)]
+    assert tbl.read(now_ms=now).count() == 4

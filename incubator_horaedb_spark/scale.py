@@ -6,6 +6,11 @@ on a small single-row-group input run as one task.  The gates decide from
 file sizes alone when to widen such a stage or bound its state; at real
 scale every gate is a no-op.  ``scan_stats`` is the only probe, so faking
 it once drives every gate's fired branch.
+
+``GATE_BYTES`` also gates ``Table.read`` (table.py ``_split_scans``), from
+the file list's recorded sizes rather than this probe: a read covering
+less than it scans each side as one partition, so a statement over a small
+table runs as one task with no exchange.
 """
 
 from __future__ import annotations

@@ -66,16 +66,20 @@ def sql_response(result: DataFrame | int | None) -> dict:
     # Serialize timestamps to ms epochs JVM-side: non-Arrow collect() hands
     # back *naive* datetimes in the OS-local zone, so doing the epoch math
     # on the driver would shift every value by the host's UTC offset on a
-    # non-UTC host.  unix_millis() is zone-independent.
+    # non-UTC host.  unix_millis() is zone-independent.  With no timestamp
+    # column the frame is collected as it is: an identity select would be
+    # built and analyzed again for nothing.
     from pyspark.sql import functions as F
 
-    exprs = [
-        F.unix_millis(F.col(f"`{f.name}`").cast("timestamp")).alias(f.name)
-        if f.dataType.typeName() in ("timestamp", "timestamp_ntz")
-        else F.col(f"`{f.name}`")
-        for f in result.schema.fields
-    ]
-    result = result.select(*exprs)
+    fields = result.schema.fields
+    stamped = [f.dataType.typeName() in ("timestamp", "timestamp_ntz") for f in fields]
+    if any(stamped):
+        result = result.select(*[
+            F.unix_millis(F.col(f"`{f.name}`").cast("timestamp")).alias(f.name)
+            if ts
+            else F.col(f"`{f.name}`")
+            for f, ts in zip(fields, stamped)
+        ])
     cols = result.columns
     return {
         "rows": [

@@ -48,7 +48,9 @@ src/analytic_engine/src/row_iter/):
 
 ``Table.read`` is the one read of the listed files: partition pruning,
 segment/time bounds, the sequence snapshot and TTL below the dedup window
-on both sides, the window on the overlapping side.
+on both sides, the window on the overlapping side.  Below
+``scale.GATE_BYTES`` of listed files each side is one partition, so a
+statement over a small table runs as one task with no shuffle.
 
 Maintenance walks every listed leaf, ``[__partition=P/]__segment=S``
 (compaction/picker.rs runs on every partition's segments).  ``compact``
@@ -80,7 +82,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from incubator_horaedb_spark import fsops
+from incubator_horaedb_spark import fsops, scale
 from incubator_horaedb_spark.catalog import Catalog, pick_segment_duration_ms
 from incubator_horaedb_spark.functions.hashing import tsid_expr
 from incubator_horaedb_spark.partition import (
@@ -97,12 +99,14 @@ STAGING = ".staging"
 _NULL_LEAF = "__HIVE_DEFAULT_PARTITION__"
 _SPARK_ERRORS = (PySparkException, Py4JJavaError)  # what a Spark call raises
 
-# Table.read's base scans (plain side, overlapping side; ``_split_scans``)
-# per (session, data dir) while table, file-list version, read schema, update
-# mode and primary key hold: planning a file list costs ~50 ms, +370 ms above
-# 32 paths (local[4]).  Beside them, once built, the argument-free read of a
-# table without TTL (each SQL statement's view, ~35 ms to rebuild).  DROP
-# TABLE lets go of a table's entries (``forget``).
+# Table.read's base scans (plain side, overlapping side; ``_split_scans``,
+# each coalesced to one partition when the file list holds less than
+# ``scale.GATE_BYTES``) per (session, data dir) while table, file-list
+# version, read schema, update mode and primary key hold: planning a file
+# list costs ~50 ms, +370 ms above 32 paths (local[4]).  Beside them, once
+# built, the argument-free read of a table without TTL (each SQL statement's
+# view, ~35 ms to rebuild).  DROP TABLE lets go of a table's entries
+# (``forget``).
 _SCANS: dict[tuple, tuple[tuple, DataFrame | None, DataFrame | None, DataFrame | None]] = {}
 
 # The largest request batch, in values (rows x columns), that the driver
@@ -206,6 +210,11 @@ def _key_unique(rows: list, fields: list[T.StructField], pk: list[str]) -> bool:
     if any(isinstance(fields[i].dataType, unchecked) for i in idx):
         return False
     return len({tuple(r[i] for i in idx) for r in rows}) == len(rows)
+
+
+def _null_refused(column: str) -> str:
+    """The write error for a NULL in the NOT NULL ``column``."""
+    return f"column {column!r} is NOT NULL: the batch holds a NULL in it"
 
 
 def _read_schema(meta) -> T.StructType:
@@ -502,11 +511,17 @@ class Table:
         sort_key = [c for c in meta.options.sampled_sort_key or [] if c in df.columns]
 
         # a frame that folds (``_folds``) is collected and written by
-        # pyarrow; any other frame by a Spark job
+        # pyarrow; any other frame by a Spark job.  Either refuses a NULL in
+        # a NOT NULL column, with no job of its own: one would land in the
+        # leaf of NULL partition values, with no timestamp range.
+        not_null = [c.name for c in schema.columns if not c.is_nullable]
         fields = [f for f in _read_schema(meta).fields if f.name not in part_cols]
         local = df.select(*map(_collected, fields), *part_cols)
         if _folds(local):
             rows = local.collect()
+            for i, f in enumerate(fields):
+                if f.name in not_null and any(r[i] is None for r in rows):
+                    raise ValueError(_null_refused(f.name))
             unique = _key_unique(rows, fields, schema.effective_primary_key)
 
             def write(staging: str) -> bool:
@@ -517,6 +532,11 @@ class Table:
                 return unique
 
         else:
+            df = df.withColumns({
+                c: F.when(F.col(c).isNull(), F.raise_error(F.lit(_null_refused(c))))
+                .otherwise(F.col(c))
+                for c in not_null
+            })
             if sort_key:
                 df = df.sortWithinPartitions(*part_cols, *sort_key)
             write = df.write.option("compression", spark_codec).partitionBy(*part_cols).parquet
@@ -653,6 +673,11 @@ class Table:
           read pins them), so a snapshot older than the last compaction
           sees only the versions that survived it.
 
+        - a read covering less than ``scale.GATE_BYTES`` (the FileMeta
+          bytes of all its files, both sides) runs as one partition: each
+          side is coalesced to one, so a statement over the read plans no
+          exchange and runs as one Spark job of one task (``_split_scans``).
+
         A table with no data reads as an empty frame of the full read
         schema, so every step applies to it unchanged.  The argument-free
         read of a table without TTL is memoized with its base scan."""
@@ -729,12 +754,25 @@ class Table:
         """``files`` as ``read``'s two sides: the plain scan and the scan the
         dedup window runs over, each None when it has no file (the plain
         side of an empty table is its empty scan).  Only an OVERWRITE
-        table's ``_overlapping`` files go under the window."""
+        table's ``_overlapping`` files go under the window.
+
+        When ``files`` hold less than ``scale.GATE_BYTES`` in all (their
+        FileMeta bytes, no I/O), each side is one partition: ``coalesce(1)``
+        reports SinglePartition, which the dedup window's and any
+        aggregate's distribution accept, and so does the union of two such
+        sides, so a statement over the read plans no exchange and runs as
+        one task.  Filters still push below the coalesce into the scan."""
         over = _overlapping(files) if meta.options.update_mode == "OVERWRITE" else set()
         plain = {p: e for p, e in files.items() if p not in over}
+        small = sum(e["bytes"] for e in files.values()) < scale.GATE_BYTES
+
+        def side(part: dict[str, dict]) -> DataFrame:
+            scan = self._scan(meta, part)
+            return scan.coalesce(1) if small else scan
+
         return (
-            self._scan(meta, plain) if plain or not over else None,
-            self._scan(meta, over) if over else None,
+            side(plain) if plain or not over else None,
+            side({p: files[p] for p in over}) if over else None,
         )
 
     def _scan(self, meta, files) -> DataFrame:

@@ -17,6 +17,9 @@ Both store the same rows.
   finds it;
 - a request batch past ``DRIVER_WRITE_MAX_VALUES`` goes to the Spark
   writer;
+- a NULL in a NOT NULL column is refused by name: the driver writer before
+  any Spark job, the Spark writer inside its one write job; nothing is
+  listed;
 - an append by either writer leaves no cyclic garbage: its py4j proxies,
   and with them the JVM's hold on its plans, are gone when ``write``
   returns.
@@ -316,3 +319,58 @@ def test_an_append_leaves_no_cyclic_garbage(engine, spark, routes, writer):
     garbage = gc.collect()
     assert routes == [writer == "driver"]
     assert garbage == 0
+
+
+def _nn_batch(h, v, ts) -> pa.Table:
+    ts = pa.array(ts, pa.timestamp("ms", "UTC"))
+    return pa.table({"h": h, "v": pa.array(v, pa.float64()), "ts": ts})
+
+
+@pytest.mark.parametrize("writer", ["driver", "spark"])
+def test_null_in_a_not_null_column_is_refused(engine, spark, routes, writer):
+    engine.execute_sql(
+        "CREATE TABLE nn (h string TAG, v double NOT NULL, ts timestamp NOT NULL, "
+        "TIMESTAMP KEY(ts)) ENGINE=Analytic WITH(enable_ttl='false', segment_duration='2h')"
+    )
+    tbl = engine.table("nn")
+    sc = engine.spark.sparkContext
+
+    def write(batch, group):
+        """The Spark jobs writing ``batch`` started, and what it raised."""
+        sc.setJobGroup(group, "a write")
+        try:
+            _write(spark, tbl, batch, writer)
+            error = None
+        except (ValueError, *table_mod._SPARK_ERRORS) as e:
+            error = str(e)
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group)), error
+
+    # the driver writer starts none; the Spark writer its write job and,
+    # for the test's repartition(1), that shuffle's map stage
+    accepted = write(_nn_batch(["a"], [1.0], [1000]), f"not-null-{writer}")
+    assert accepted == (0 if writer == "driver" else 2, None)
+    listed = engine.catalog.files("nn")
+    for col, batch in (
+        ("ts", _nn_batch(["a", "b"], [1.0, 2.0], [2000, None])),
+        ("v", _nn_batch(["a", "b"], [None, 2.0], [2000, 3000])),
+    ):
+        jobs, error = write(batch, f"not-null-{writer}-{col}")
+        assert jobs == accepted[0]
+        assert f"column '{col}' is NOT NULL" in error
+        assert engine.catalog.files("nn") == listed
+    assert routes == [writer == "driver"] * 3
+    assert [tuple(r) for r in tbl.read().select("h", "v").collect()] == [("a", 1.0)]
+
+
+def test_insert_of_a_null_timestamp_is_refused(engine):
+    engine.execute_sql(
+        "CREATE TABLE n (k string TAG, v bigint, t timestamp NOT NULL, TIMESTAMP KEY(t)) "
+        "ENGINE=Analytic WITH(enable_ttl='false', update_mode='OVERWRITE')"
+    )
+    with pytest.raises(ValueError, match="column 't' is NOT NULL"):
+        engine.execute_sql("INSERT INTO n (k, v, t) VALUES ('a', 1, 1000), ('b', 2, NULL)")
+    assert engine.catalog.files("n")[1] == {}
+    engine.execute_sql("INSERT INTO n (k, v, t) VALUES ('a', 1, 1000)")
+    assert [p.split("/")[0] for p in engine.catalog.files("n")[1]] == ["__segment=0"]

@@ -1,7 +1,8 @@
 """End-to-end HTTP serving layer (server.py): the reference's primary
 entry points driven over a real socket — POST /sql with the
 mysql/basic.sh statement sequence, line-protocol and OpenTSDB writes,
-concurrent-query dedup.
+concurrent-query dedup.  ``sql_response`` selects again only a result
+with a timestamp column, whose values it sends as ms epochs.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ import urllib.request
 import pytest
 
 from incubator_horaedb_spark.frontends.sql_shim import Engine
-from incubator_horaedb_spark.server import EngineServer
+from incubator_horaedb_spark.server import EngineServer, sql_response
 
 
 @pytest.fixture()
@@ -182,3 +183,18 @@ def test_metrics_route_prometheus_exposition(server):
     with urllib.request.urlopen(req) as resp:
         text2 = resp.read().decode()
     assert 'http_handler_duration_count{path="/metrics",code="200"} 1' in text2
+
+
+def test_sql_response_selects_only_for_timestamps(spark, monkeypatch):
+    plain = spark.createDataFrame([("a", 1)], "k string, n bigint")
+    stamped = spark.sql("SELECT 'a' AS k, timestamp_millis(1683280523000) AS t")
+    selects = []
+    frame = type(plain)
+    select = frame.select
+    monkeypatch.setattr(
+        frame, "select", lambda self, *cols: selects.append(cols) or select(self, *cols)
+    )
+    assert sql_response(plain) == {"rows": [{"k": "a", "n": 1}]}
+    assert selects == []
+    assert sql_response(stamped) == {"rows": [{"k": "a", "t": 1683280523000}]}
+    assert len(selects) == 1

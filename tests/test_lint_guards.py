@@ -32,6 +32,10 @@ The driver writer uses ``pyarrow.parquet`` only: importing
 ``pyarrow.dataset`` costs about 41 MB of resident memory (``pyarrow.parquet``
 about 3 MB), so a guard fails if any package module imports it.
 
+``table.py`` reads no environment variable, and the read's one-task gate
+(``Table._split_scans``) compares against ``scale.GATE_BYTES``, not a
+literal: the gate is the repo's one size gate, not a knob of its own.
+
 The engine sets its session's SQL conf once, in ``Engine.__init__``; a
 guard fails if any other package module (the query bank aside, which sets
 read confs per query) calls ``.conf.set(``, so that no path toggles a conf
@@ -249,3 +253,36 @@ def test_session_conf_set_only_in_engine_init():
         if (path, ln) not in allowed
     ]
     assert not offenders, "session conf set outside Engine.__init__:\n" + "\n".join(offenders)
+
+
+def test_read_gate_is_the_one_size_gate():
+    # A read's one-partition gate is scale.GATE_BYTES: a literal or an
+    # environment variable here would make it a second, separately tuned
+    # size threshold.
+    tree = ast.parse((REPO / "incubator_horaedb_spark" / "table.py").read_text(encoding="utf-8"))
+    env = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr in ("environ", "getenv")
+        or isinstance(n, ast.Name) and n.id in ("environ", "getenv")
+    ]
+    assert not env, f"table.py reads the environment at lines {env}"
+    (table,) = [n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "Table"]
+    (split,) = [n for n in table.body if isinstance(n, ast.FunctionDef) and n.name == "_split_scans"]
+    gates = [
+        c
+        for n in ast.walk(split)
+        if isinstance(n, ast.Compare)
+        for c in [n.left, *n.comparators]
+        if isinstance(c, ast.Attribute)
+        and c.attr == "GATE_BYTES"
+        and isinstance(c.value, ast.Name)
+        and c.value.id == "scale"
+    ]
+    assert gates, "Table._split_scans does not compare against scale.GATE_BYTES"
+    literals = [
+        n.lineno
+        for n in ast.walk(split)
+        if isinstance(n, ast.Constant) and type(n.value) in (int, float) and n.value not in (0, 1)
+    ]
+    assert not literals, f"Table._split_scans holds size literals at table.py lines {literals}"

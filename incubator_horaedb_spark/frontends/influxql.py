@@ -614,38 +614,83 @@ class ProtocolBatch:
     tag_keys: set[str] = field(default_factory=set)
 
 
+# The slow path of a line holding a backslash or a double quote: the
+# sections (measurement and tags, fields, timestamp) split on spaces that are
+# neither escaped nor inside a quoted field value; the elements of a section
+# on such commas; an element on its first unescaped ``=``.
+_LINE_RE = re.compile(r'((?:[^ \\]|\\.)+) ((?:"(?:[^"\\]|\\.)*"|[^ "\\]|\\.)+)(?: (\S+))?')
+_TAG_RE = re.compile(r"(?:[^,\\]|\\.)+")
+_FIELD_RE = re.compile(r'(?:"(?:[^"\\]|\\.)*"|[^,"\\]|\\.)+')
+_KEY_RE = re.compile(r"((?:[^=\\]|\\.)+)=(.*)", re.S)
+_STRING_ESC_RE = re.compile(r'\\([\\"])')
+
+
+def _elements(section: str, pattern: re.Pattern, line: str) -> list[str]:
+    """``section``'s comma-separated elements, as ``pattern`` tokenizes them."""
+    out = pattern.findall(section)
+    if ",".join(out) != section:  # an empty element, or a stray quote
+        raise ValueError(f"bad line protocol: {line!r}")
+    return out
+
+
+def _key_value(element: str, line: str) -> tuple[str, str]:
+    """``element`` split on its first unescaped ``=``, the key unescaped."""
+    if "\\" in element:
+        m = _KEY_RE.fullmatch(element)
+        if m is None:
+            raise ValueError(f"bad line protocol: {line!r}")
+        return _ESC_RE.sub(r"\1", m[1]), m[2]
+    k, eq, v = element.partition("=")
+    if not eq or not k:
+        raise ValueError(f"bad line protocol: {line!r}")
+    return k, v
+
+
 def parse_line_protocol_typed(text: str) -> dict[str, ProtocolBatch]:
     """InfluxDB line protocol → measurement → ProtocolBatch.
 
     ``cpu,host=a,region=r usage=0.5,idle=99i 1700000000000000000``
     Timestamps are nanoseconds (default precision) → stored as ms.
-    Integer fields use the ``i`` suffix; strings are double-quoted.
+    Integer fields use the ``i`` suffix; strings are double-quoted and may
+    hold spaces, commas and ``=`` as they are, ``\\"`` and ``\\\\`` escaped.
+    In the measurement, keys and tag values a space, comma or ``=`` is
+    escaped with a backslash.  A line with neither a backslash nor a
+    double quote splits with ``str.split`` alone.
     """
     out: dict[str, ProtocolBatch] = {}
     for line in text.splitlines():
         line = line.strip()
         if not line or line.startswith("#"):
             continue
-        # split on unescaped spaces into ≤3 segments
-        parts = re.split(r"(?<!\\) ", line)
-        if len(parts) < 2:
-            raise ValueError(f"bad line protocol: {line!r}")
-        head, fields_raw = parts[0], parts[1]
-        ts_ms = int(parts[2]) // 1_000_000 if len(parts) > 2 else None
-        head_parts = re.split(r"(?<!\\),", head)
-        measurement = _ESC_RE.sub(r"\1", head_parts[0])
+        if "\\" in line or '"' in line:
+            m = _LINE_RE.fullmatch(line)
+            if m is None:
+                raise ValueError(f"bad line protocol: {line!r}")
+            head, fields_raw, ts = m.groups()
+            head_parts = _elements(head, _TAG_RE, line)
+            fields = _elements(fields_raw, _FIELD_RE, line)
+        else:
+            parts = line.split(" ")
+            if not 2 <= len(parts) <= 3:
+                raise ValueError(f"bad line protocol: {line!r}")
+            head, fields_raw, ts = parts[0], parts[1], parts[2] if len(parts) > 2 else None
+            head_parts, fields = head.split(","), fields_raw.split(",")
+        measurement = head_parts[0]
+        if "\\" in measurement:
+            measurement = _ESC_RE.sub(r"\1", measurement)
         row: dict[str, Any] = {}
         tag_keys: set[str] = set()
         for tag in head_parts[1:]:
-            k, v = tag.split("=", 1)
-            k = _ESC_RE.sub(r"\1", k)
-            row[k] = _ESC_RE.sub(r"\1", v)
+            k, v = _key_value(tag, line)
+            row[k] = _ESC_RE.sub(r"\1", v) if "\\" in v else v
             tag_keys.add(k)
-        for fld in re.split(r"(?<!\\),", fields_raw):
-            k, v = fld.split("=", 1)
-            k = _ESC_RE.sub(r"\1", k)
+        for fld in fields:
+            k, v = _key_value(fld, line)
             if v.startswith('"'):
-                row[k] = v[1:-1].replace('\\"', '"')
+                if len(v) < 2 or not v.endswith('"'):
+                    raise ValueError(f"bad line protocol: {line!r}")
+                v = v[1:-1]
+                row[k] = _STRING_ESC_RE.sub(r"\1", v) if "\\" in v else v
             elif v.endswith("i"):
                 row[k] = int(v[:-1])
             elif v in ("t", "T", "true", "True"):
@@ -654,8 +699,8 @@ def parse_line_protocol_typed(text: str) -> dict[str, ProtocolBatch]:
                 row[k] = False
             else:
                 row[k] = float(v)
-        if ts_ms is not None:
-            row["ts"] = ts_ms
+        if ts is not None:
+            row["ts"] = int(ts) // 1_000_000
         batch = out.setdefault(measurement, ProtocolBatch())
         batch.rows.append(row)
         batch.tag_keys |= tag_keys

@@ -16,12 +16,15 @@ src/analytic_engine/src/instance/write.rs):
   so appends take no lock;
 - one set of Spark expressions computes the stored rows (casts, defaults,
   tsid, ``__seq``, ``__segment``, ``__partition``), and one plan-shape rule
-  picks the writer.  A request's rows held on the driver (protocol writes,
-  INSERT VALUES, COPY/LOAD) enter as one Arrow-backed local relation
-  (``batch_frame``); Catalyst folds those expressions into a new local
-  relation, which is collected with no Spark job and written by pyarrow,
-  one file per leaf the request touches — the memtable flush straight to
-  an SST (sst/parquet/writer.rs).  Every other frame (INSERT … SELECT,
+  picks the writer.  The write projection is built once per table version
+  and batch column names (``_Projection``): each later batch of that shape
+  pays its ``__seq`` literal and one py4j round trip per stage, as a
+  micro-batch query reuses its plan.  A request's rows held on the driver
+  (protocol writes, INSERT VALUES, COPY/LOAD) enter as one Arrow-backed
+  local relation (``batch_frame``); Catalyst folds those expressions into
+  a new local relation, which is collected with no Spark job and written
+  by pyarrow, one file per leaf the request touches — the memtable flush
+  straight to an SST (sst/parquet/writer.rs).  Every other frame (INSERT … SELECT,
   CTAS, streaming micro-batches, and a request batch past
   ``DRIVER_WRITE_MAX_VALUES`` values) is written by a Spark job, as
   compaction is.
@@ -68,6 +71,7 @@ from __future__ import annotations
 
 import functools
 import gc
+import os
 import re
 import time
 import uuid
@@ -75,9 +79,10 @@ from collections.abc import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyarrow.fs import FileSystem
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -108,6 +113,17 @@ _SPARK_ERRORS = (PySparkException, Py4JJavaError)  # what a Spark call raises
 # view, ~35 ms to rebuild).  DROP TABLE lets go of a table's entries
 # (``forget``).
 _SCANS: dict[tuple, tuple[tuple, DataFrame | None, DataFrame | None, DataFrame | None]] = {}
+
+# Table._append's write projection (``_Projection``) per (session, data
+# dir) while the table version (its meta but for ``next_seq``;
+# ``created_at_ms`` tells a re-created table apart) and the batch's column
+# names hold.  An unresolved expression names columns only, so the same
+# objects resolve against each new batch: a 1,000-row protocol write made
+# 228 py4j round trips building them afresh, ~75 with them kept.  RANDOM's
+# ``__partition`` is not kept: ``F.rand()`` fixes its seed when the Column
+# is made, so a kept one would scatter every batch alike, row by row.
+# DROP TABLE lets go of a table's entry (``forget``).
+_PROJECTIONS: dict[tuple, tuple[tuple, "_Projection"]] = {}
 
 # The largest request batch, in values (rows x columns), that the driver
 # writer takes; past it the Spark writer is faster.  The driver writer pays
@@ -370,6 +386,112 @@ def _pick(
     return picked
 
 
+def _select(df: DataFrame, jcols) -> DataFrame:
+    """``df.select`` of a JVM Seq of columns made once (``_jseq``): one py4j
+    round trip, where ``DataFrame.select`` converts its list, ~1 round trip
+    per column."""
+    return DataFrame(df._jdf.select(jcols), df.sparkSession)
+
+
+def _jseq(spark: SparkSession, cols: list[Column]):
+    return spark._jvm.PythonUtils.toSeq([c._jc for c in cols])
+
+
+def _default(col) -> Column:
+    """Column ``col``'s DEFAULT as its type: SQL expression text, a value,
+    or NULL."""
+    dv = col.default_value
+    return (F.expr(dv) if isinstance(dv, str) else F.lit(dv)).cast(col.spark_type)
+
+
+class _Projection:
+    """One table version's write projection for batches whose columns are
+    ``columns``: the unresolved Spark expressions ``Table._append`` stacks on
+    a batch (``_PROJECTIONS``).  Each resolves against a batch when a stage
+    is applied, so the same objects serve every batch of that shape.
+
+    - ``shape``: defaults for the missing columns, the casts to the declared
+      types, tsid;
+    - ``place``: ``__seq`` (the batch's one literal), ``__segment`` and
+      ``__partition``;
+    - ``collected`` (the driver writer) and ``checked`` (the Spark writer,
+      NOT NULL checks): the stored columns, ``fields`` then ``part_cols``.
+
+    A table whose segment duration is not sampled yet gets ``shape`` only:
+    the first flush samples it, and the sampled meta is a new version."""
+
+    def __init__(self, spark: SparkSession, meta, columns: tuple[str, ...]):
+        schema, opts = meta.schema, meta.options
+        # defaults are SQL expression text (may reference earlier columns,
+        # e.g. `c5 uint32 default c3*2 + 1`): one stage each, in schema
+        # order, so prior defaults are in scope
+        self.defaults = [(c.name, _default(c)) for c in schema.columns if c.name not in columns]
+        self.casts = _jseq(
+            spark, [F.col(c.name).cast(c.spark_type).alias(c.name) for c in schema.columns]
+        )
+        self.tsid = None
+        if schema.tsid_mode:
+            tags = schema.tag_columns
+            self.tsid = tsid_expr(tags) if tags else F.lit(0).cast("long")
+
+        self.part_cols = [SEGMENT_COLUMN]
+        self.scatter = 0  # RANDOM's partition count: its expression is made per batch
+        self.partitioning: list[tuple[str, Column]] = []
+        if opts.segment_duration_ms is None:
+            return
+        # floored, as Table.read bounds segments: a pre-1970 row lands in a
+        # negative segment, not in segment 0
+        ts_ms = F.unix_millis(F.col(schema.timestamp_column))
+        self.partitioning.append((SEGMENT_COLUMN, F.floor(ts_ms / opts.segment_duration_ms)))
+        if opts.partition_keys:
+            # key-partitioned table (partition/rule/key.rs): hash bucket col
+            key = key_partition_expr(opts.partition_keys, opts.num_partitions)
+            self.partitioning.append((PARTITION_COLUMN, key))
+            self.part_cols = [PARTITION_COLUMN, SEGMENT_COLUMN]
+        elif opts.partition_method == "random" and opts.num_partitions > 1:
+            self.scatter = opts.num_partitions
+            self.part_cols = [PARTITION_COLUMN, SEGMENT_COLUMN]
+
+        self.fields = [f for f in _read_schema(meta).fields if f.name not in self.part_cols]
+        names = [f.name for f in self.fields] + self.part_cols
+        # cluster rows for the sampled key inside each output file: no
+        # shuffle, but every row group's min/max stats on the low-NDV lead
+        # columns become selective (SST prune analogue)
+        self.sort_key = [c for c in opts.sampled_sort_key or [] if c in names]
+        self.not_null = {c.name for c in schema.columns if not c.is_nullable}
+        self.collected = _jseq(
+            spark, [*map(_collected, self.fields), *map(F.col, self.part_cols)]
+        )
+        self.checked = _jseq(spark, [
+            F.when(F.col(c).isNull(), F.raise_error(F.lit(_null_refused(c))))
+            .otherwise(F.col(c))
+            .alias(c)
+            if c in self.not_null
+            else F.col(c)
+            for c in names
+        ])
+
+    def shape(self, df: DataFrame) -> DataFrame:
+        """The batch aligned to the declared schema: missing columns take
+        their default (or NULL), every column its declared type; tsid."""
+        for name, default in self.defaults:
+            df = df.withColumn(name, default)
+        df = _select(df, self.casts)
+        return df if self.tsid is None else df.withColumn(TSID_COLUMN, self.tsid)
+
+    def place(self, df: DataFrame, seq: int) -> DataFrame:
+        """A shaped batch with its ``__seq``, ``__segment`` and
+        ``__partition`` columns."""
+        df = df.withColumn(SEQ_COLUMN, F.lit(seq).cast("long"))
+        for name, c in self.partitioning:
+            df = df.withColumn(name, c)
+        if self.scatter:
+            # random write scatter (partition/rule/random.rs:40-48); reads
+            # always fan out to every partition (random.rs:50-53)
+            df = df.withColumn(PARTITION_COLUMN, random_partition_expr(self.scatter))
+        return df
+
+
 class Table:
     def __init__(self, spark: SparkSession, catalog: Catalog, name: str):
         self.spark = spark
@@ -407,26 +529,9 @@ class Table:
         meta = self.meta
         schema = meta.schema
         spark_codec, arrow_codec = meta.codecs()  # refuses an unknown one before any work
-
-        # align to declared schema: missing columns → default value / NULL
-        for col in schema.columns:
-            if col.name not in df.columns:
-                # defaults are SQL expression text (may reference earlier
-                # columns, e.g. `c5 uint32 default c3*2 + 1`) — evaluated in
-                # schema order so prior defaults are in scope
-                dv = col.default_value
-                default = (F.expr(dv) if isinstance(dv, str) else F.lit(dv)).cast(
-                    col.spark_type
-                )
-                df = df.withColumn(col.name, default)
-        df = df.select(
-            *[F.col(c.name).cast(c.spark_type).alias(c.name) for c in schema.columns]
-        )
-
-        if schema.tsid_mode:
-            tags = schema.tag_columns
-            tsid = tsid_expr(tags) if tags else F.lit(0).cast("long")
-            df = df.withColumn(TSID_COLUMN, tsid)
+        columns = tuple(df.columns)
+        proj = self._projection(meta, columns)
+        df = proj.shape(df)
 
         # First-flush sampling (sampler.rs).  Two independent decisions:
         #   - segment duration, when not declared in DDL;
@@ -480,67 +585,47 @@ class Table:
                     m.options.sampled_sort_key = picked + tail + [schema.timestamp_column]
 
             meta = self.catalog.update(self.name, apply_samples)
+            proj = self._projection(meta, columns)  # the sampled meta is a new version
 
         seq = self.catalog.allocate_seq(self.name)
-        df = df.withColumn(SEQ_COLUMN, F.lit(seq).cast("long"))
-
-        # floored, as Table.read bounds segments: a pre-1970 row lands in a
-        # negative segment, not in segment 0
-        seg_ms = meta.options.segment_duration_ms
-        df = df.withColumn(
-            SEGMENT_COLUMN, F.floor(F.unix_millis(F.col(schema.timestamp_column)) / seg_ms)
-        )
-        part_cols = [SEGMENT_COLUMN]
-        if meta.options.partition_keys:
-            # key-partitioned table (partition/rule/key.rs): hash bucket col
-            df = df.withColumn(
-                PARTITION_COLUMN,
-                key_partition_expr(meta.options.partition_keys, meta.options.num_partitions),
-            )
-            part_cols = [PARTITION_COLUMN, SEGMENT_COLUMN]
-        elif meta.options.partition_method == "random" and meta.options.num_partitions > 1:
-            # random write scatter (partition/rule/random.rs:40-48); reads
-            # always fan out to every partition (random.rs:50-53)
-            df = df.withColumn(
-                PARTITION_COLUMN, random_partition_expr(meta.options.num_partitions)
-            )
-            part_cols = [PARTITION_COLUMN, SEGMENT_COLUMN]
-        # cluster rows for the sampled key inside each output file: no
-        # shuffle, but every row group's min/max stats on the low-NDV lead
-        # columns become selective (SST prune analogue)
-        sort_key = [c for c in meta.options.sampled_sort_key or [] if c in df.columns]
+        df = proj.place(df, seq)
 
         # a frame that folds (``_folds``) is collected and written by
         # pyarrow; any other frame by a Spark job.  Either refuses a NULL in
         # a NOT NULL column, with no job of its own: one would land in the
         # leaf of NULL partition values, with no timestamp range.
-        not_null = [c.name for c in schema.columns if not c.is_nullable]
-        fields = [f for f in _read_schema(meta).fields if f.name not in part_cols]
-        local = df.select(*map(_collected, fields), *part_cols)
+        fields, part_cols = proj.fields, proj.part_cols
+        local = _select(df, proj.collected)
         if _folds(local):
             rows = local.collect()
             for i, f in enumerate(fields):
-                if f.name in not_null and any(r[i] is None for r in rows):
+                if f.name in proj.not_null and any(r[i] is None for r in rows):
                     raise ValueError(_null_refused(f.name))
             unique = _key_unique(rows, fields, schema.effective_primary_key)
 
             def write(staging: str) -> bool:
                 self._write_leaves(
-                    staging, rows, fields, part_cols, sort_key, arrow_codec,
+                    staging, rows, fields, part_cols, proj.sort_key, arrow_codec,
                     meta.options.num_rows_per_row_group,
                 )
                 return unique
 
         else:
-            df = df.withColumns({
-                c: F.when(F.col(c).isNull(), F.raise_error(F.lit(_null_refused(c))))
-                .otherwise(F.col(c))
-                for c in not_null
-            })
-            if sort_key:
-                df = df.sortWithinPartitions(*part_cols, *sort_key)
+            df = _select(df, proj.checked)
+            if proj.sort_key:
+                df = df.sortWithinPartitions(*part_cols, *proj.sort_key)
             write = df.write.option("compression", spark_codec).partitionBy(*part_cols).parquet
         return seq, self._commit(meta, write, {})
+
+    def _projection(self, meta, columns: tuple[str, ...]) -> _Projection:
+        """``meta``'s write projection for a batch of ``columns``, memoized
+        (``_PROJECTIONS``)."""
+        key = (self.spark, self.catalog.data_dir(self.name))
+        token = ({**meta.to_dict(), "next_seq": None}, columns)
+        hit = _PROJECTIONS.get(key)
+        if hit is None or hit[0] != token:
+            hit = _PROJECTIONS[key] = (token, _Projection(self.spark, meta, columns))
+        return hit[1]
 
     def _write_leaves(self, staging, rows, fields, part_cols, sort_key, codec, rows_per_group):
         """The driver writer: ``rows`` (``fields`` as ``_collected`` gives
@@ -558,6 +643,9 @@ class Table:
         leaves: dict[tuple, list] = {}
         for row in rows:
             leaves.setdefault(tuple(row[len(fields) :]), []).append(row)
+        # the filesystem pq.write_table writes through: Hadoop's local mkdirs
+        # starts a process per directory level to set its permissions
+        fs, root = FileSystem.from_uri(os.path.abspath(staging))
         for key, group in leaves.items():
             columns = list(zip(*group))
             table = pa.Table.from_arrays(
@@ -572,10 +660,11 @@ class Table:
             leaf = "/".join(
                 f"{c}={_NULL_LEAF if v is None else v}" for c, v in zip(part_cols, key)
             )
-            fsops.mkdirs(self.spark, f"{staging}/{leaf}")
+            fs.create_dir(f"{root}/{leaf}")
             pq.write_table(
                 table,
-                f"{staging}/{leaf}/part-{uuid.uuid4().hex}.parquet",
+                f"{root}/{leaf}/part-{uuid.uuid4().hex}.parquet",
+                filesystem=fs,
                 compression=codec,
                 row_group_size=rows_per_group,
                 use_dictionary=repeats,
@@ -964,9 +1053,11 @@ def _first_file_list(spark: SparkSession, data: str, on_disk: dict[str, int]) ->
 
 
 def forget(catalog: Catalog, name: str) -> None:
-    """Let go of ``name``'s memoized base scans in every session (DROP TABLE)."""
-    for key in [k for k in list(_SCANS) if k[1] == catalog.data_dir(name)]:
-        _SCANS.pop(key, None)
+    """Let go of ``name``'s memoized base scans and write projection in
+    every session (DROP TABLE)."""
+    for memo in (_SCANS, _PROJECTIONS):
+        for key in [k for k in list(memo) if k[1] == catalog.data_dir(name)]:
+            memo.pop(key, None)
 
 
 def sweep(spark: SparkSession, catalog: Catalog) -> None:

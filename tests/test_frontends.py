@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import pytest
+
 from incubator_horaedb_spark.frontends.influxql import (
     influxql_to_df,
     parse_influxql,
     parse_line_protocol,
+    parse_line_protocol_typed,
 )
 from incubator_horaedb_spark.frontends.opentsdb import parse_put, parse_query_request
 
@@ -54,6 +57,43 @@ def test_line_protocol():
         "ts": 1700000000000,
     }
     assert rows["mem"][0]["used"] == "high"
+
+
+@pytest.mark.parametrize(
+    "line, measurement, row",
+    [
+        # a quoted string field holds spaces, commas and `=` as they are
+        ('m,t=a f="hello world" 1000000000', "m", {"t": "a", "f": "hello world", "ts": 1000}),
+        ('m f="a,b",g=1i', "m", {"f": "a,b", "g": 1}),
+        ('m f="k=v, x=y",g=2.5 2000000', "m", {"f": "k=v, x=y", "g": 2.5, "ts": 2}),
+        # and escapes only a double quote and a backslash
+        (
+            r'm f="say \"hi\"",g="C:\\dir",h="a\tb"',
+            "m",
+            {"f": 'say "hi"', "g": "C:\\dir", "h": "a\\tb"},
+        ),
+        ('m f=""', "m", {"f": ""}),
+        # outside quotes, `\ `, `\,` and `\=` escape the measurement, keys and tag values
+        (r"m\ x\,y\=z f=1i", "m x,y=z", {"f": 1}),
+        (r"m,t\ k\,l\=m=v f=1i", "m", {"t k,l=m": "v", "f": 1}),
+        (r"m,t=a\ b\,c\=d f=1i", "m", {"t": "a b,c=d", "f": 1}),
+        (r"m f\ k\,l\=m=1i", "m", {"f k,l=m": 1}),
+        (r'm,t="q f="x y"', "m", {"t": '"q', "f": "x y"}),  # a quote in a tag value is literal
+    ],
+)
+def test_line_protocol_quotes_and_escapes(line, measurement, row):
+    batches = parse_line_protocol_typed(line)
+    assert list(batches) == [measurement]
+    assert batches[measurement].rows == [row]
+
+
+@pytest.mark.parametrize(
+    "line",
+    ['m f="abc', 'm f="ab"cd', "m,,t=a f=1", "m f=1 2 3", "m", 'm f="x" 1 2', "m =1"],
+)
+def test_malformed_line_protocol_is_refused(line):
+    with pytest.raises(ValueError):
+        parse_line_protocol_typed(line)
 
 
 def test_opentsdb_put_and_query():
